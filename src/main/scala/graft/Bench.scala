@@ -215,14 +215,7 @@ object Bench {
 
   private def makeSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     // ERROR, not WARN (r18, VERDICT r17 next #2): the whole-frame
     // exact-rank operators legitimately run global windows over
     // domain-bounded censuses (gated at MaxExactCensusRows), and at

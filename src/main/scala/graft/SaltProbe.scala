@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Salted-BSP skew probe (VERDICT r15 next #6): a synthetic power-law
@@ -17,13 +17,7 @@ object SaltProbe {
   def main(args: Array[String]): Unit = {
     val edges1x = args.headOption.map(_.toLong).getOrElse(2000000L)
     val scales = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def time(name: String)(df: => DataFrame): Double = {

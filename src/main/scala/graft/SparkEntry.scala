@@ -420,7 +420,8 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
   /** CTE chain recomputing `Ops.minhashLshPairs` (64 perms × 16
-    * bands, seeded-md5 affine hash family) bit-for-bit from `src`
+    * bands, seeded-md5 affine hash family mod
+    * `TextFunctions.MinhashPrime`) bit-for-bit from `src`
     * (any relation providing doc_id + text), ending in a CTE named
     * `pairs` (doc_a, doc_b, jaccard — unfiltered; consumers apply
     * their threshold). Shared by q33 (the operator itself), q46 (its
@@ -467,7 +468,7 @@ object SparkEntry {
        |mh_sig AS (
        |  SELECT doc_id, s,
        |    list_transform(range(0, 64), i ->
-       |      list_min(list_transform(range(1, len(h1s) + 1), j -> h1s[j] + i * h2s[j]))) AS sg
+       |      list_min(list_transform(range(1, len(h1s) + 1), j -> (h1s[j] + i * h2s[j]) % ${graft.functions.TextFunctions.MinhashPrime}))) AS sg
        |  FROM mh_hp),
        |mh_banded AS (
        |  SELECT doc_id, u.b AS band,

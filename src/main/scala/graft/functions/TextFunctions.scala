@@ -80,11 +80,12 @@ object TextFunctions {
       .cast("long")
 
   /** Per-shingle hash pair for the affine MinHash family
-    * g_i(x) = h1(x) + i*h2(x). 28-bit hashes keep i*h2 far from long
-    * overflow (ANSI mode would throw) while staying collision-safe for
-    * realistic shingle-set sizes. Project THIS as a column, then pass
-    * the attribute to [[minhashSignature]] — md5 runs twice per
-    * shingle total, instead of `perms` times.
+    * g_i(x) = (h1(x) + i*h2(x)) mod p, p = 2³¹−1 ([[MinhashPrime]]).
+    * 28-bit hashes keep h1 + i*h2 below 2³⁴ for any perms ≤ 64, far
+    * from long overflow (ANSI mode would throw), while staying
+    * collision-safe for realistic shingle-set sizes. Project THIS as a
+    * column, then pass the attribute to [[minhashSignature]] — md5 runs
+    * twice per shingle total, instead of `perms` times.
     */
   def minhashPairs(sh: Column): Column =
     transform(sh, s => struct(
@@ -94,7 +95,14 @@ object TextFunctions {
         .cast("long").as("h2")))
 
   /** MinHash signature from hash pairs: element i is min over
-    * shingles of h1 + i*h2.
+    * shingles of (h1 + i*h2) mod [[MinhashPrime]].
+    *
+    * The reduction decorrelates the permutations: without it, the
+    * argmin for large i collapses onto the shingle with the
+    * smallest h2, so the later LSH bands all vote for the same shingle
+    * and near-duplicate recall falls well below the banding's
+    * prediction. The DuckDB oracle (`SparkEntry.minhashPairCtes`)
+    * replays the same reduction.
     *
     * Shaped as ONE `aggregate` fold over the pair array (accumulator =
     * the running 64-wide min vector) instead of a per-perm
@@ -110,7 +118,10 @@ object TextFunctions {
     aggregate(hashPairs,
       transform(sequence(lit(0), lit(perms - 1)), _ => lit(Long.MaxValue)),
       (acc, p) => zip_with(acc, sequence(lit(0), lit(perms - 1)),
-        (m, i) => least(m, p("h1") + i * p("h2"))))
+        (m, i) => least(m, (p("h1") + i * p("h2")) % lit(MinhashPrime))))
+
+  /** Modulus of the MinHash family: the Mersenne prime 2³¹−1. */
+  val MinhashPrime: Long = 2147483647L
 
   /** HTML/markup strip: drop script/style blocks wholesale, drop
     * comments and tags (replaced by a space so adjacent words don't
