@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session factory: every graft session — library users, the
-  * Verify/Bench/probe entry points and the test session — is built
-  * through [[GraftSession.builder]], so they all share one set of
-  * defaults. Callers add only what is their own (warehouse dir, log
-  * level, listeners) and may override any default with `.config(...)`.
+  * Verify/PlanAudit/PlanDump/Profile entry points and the test
+  * session — is built through [[GraftSession.builder]], so they all
+  * share one set of defaults. Callers add only what is their own
+  * (warehouse dir, log level, listeners) and may override any default
+  * with `.config(...)`.
   *
   * Defaults encode the 100 TB posture: AQE on (runtime re-planning,
   * skew-join splitting, partition coalescing), shuffle partitions

@@ -5,15 +5,14 @@ package graft
   * strategy (broadcast vs sort-merge, where the shuffles are)
   * without scrolling full explain output.
   *
-  * Usage: `sbt "runMain graft.PlanAudit <sfDir> [query...]"` —
-  * defaults to every Bench.headline query at sf0.001 (plan build
-  * only; checkpoint-iterative queries execute their loops, so the
-  * default set takes a few minutes).
+  * Usage: `sbt "runMain graft.PlanAudit <sfDir> <query>..."` (plan
+  * build only; checkpoint-iterative queries execute their loops).
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else Bench.headline
+    require(args.length > 1, "usage: PlanAudit <sfDir> <query>...")
+    val sfDir = args.head
+    val names = args.drop(1).toSeq
     val spark = GraftSession.builder("local[8]", 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

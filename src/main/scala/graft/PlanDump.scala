@@ -1,15 +1,16 @@
 package graft
 
 /** Plan-review tool (SURVEY.md §7 step 6): prints the formatted
-  * physical plan of the given queries (default: bench headline set) so
-  * pushdown/broadcast/codegen can be eyeballed each round.
+  * physical plan of the given queries so pushdown/broadcast/codegen
+  * can be eyeballed.
   *
-  *   sbt "runMain graft.PlanDump [sfDir] [query ...]"
+  *   sbt "runMain graft.PlanDump <sfDir> <query>..."
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.drop(1).toSeq else Bench.headline
+    require(args.length > 1, "usage: PlanDump <sfDir> <query>...")
+    val sfDir = args.head
+    val names = args.drop(1).toSeq
     val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

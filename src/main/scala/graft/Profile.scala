@@ -13,7 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *
   * One warm-up run (untimed, listener off) then one profiled run per
   * query, same session — the numbers are for decomposition, not for
-  * round-over-round comparison (Bench owns that).
+  * round-over-round comparison (`perfbench/` owns that).
   */
 object Profile {
   private final class JobLog extends SparkListener {

@@ -33,22 +33,8 @@ object ArtifactCache {
     * else's artifact would destroy it (the ArtifactIO fail-fast
     * discipline applied to the cache decision itself).
     */
-  def hasArtifact(spark: SparkSession, path: String, kind: String): Boolean = {
-    val meta =
-      try Some(spark.read.parquet(s"$path/meta").collect())
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    meta match {
-      case None => false
-      case Some(rows) =>
-        val m = rows.map(r => r.getString(0) -> r.getString(1)).toMap
-        val found = m.getOrElse("kind", "<missing>")
-        require(found == kind,
-          s"ArtifactCache: path $path holds an artifact of kind '$found', " +
-            s"expected '$kind' — refusing to overwrite a different artifact; " +
-            "pick a distinct cache path per artifact")
-        true
-    }
-  }
+  def hasArtifact(spark: SparkSession, path: String, kind: String): Boolean =
+    ArtifactIO.exists(spark, path, kind)
 
   /** Load the artifact at `path` if one of `kind` is already there;
     * otherwise run `prepare`, `save` it to `path`, and LOAD IT BACK —

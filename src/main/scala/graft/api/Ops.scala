@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.api.ArtifactIO.Frame
 import graft.functions.Hyperplanes
 import graft.functions.TextFunctions._
 
@@ -225,13 +226,11 @@ object Ops {
       * frames as parquet + a kind-tagged meta table); [[Ops.loadCatalog]]
       * reconstructs an identically-serving artifact.
       */
-    def save(path: String): Unit = {
-      fingerprints.write.mode("overwrite").parquet(s"$path/fingerprints")
-      shingles.write.mode("overwrite").parquet(s"$path/shingles")
-      bands.write.mode("overwrite").parquet(s"$path/bands")
-      ArtifactIO.writeMeta(fingerprints.sparkSession, path, "catalog",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "catalog",
+        Seq(Frame("fingerprints", fingerprints), Frame("shingles", shingles),
+          Frame("bands", bands)),
         Seq("id" -> id, "perms" -> perms.toString, "lshBands" -> lshBands.toString))
-    }
   }
 
   /** Load a [[PreparedCatalog]] persisted by its `save`. Parquet
@@ -239,13 +238,9 @@ object Ops {
     * a checkpointDir; a non-catalog path fails fast by kind.
     */
   def loadCatalog(spark: org.apache.spark.sql.SparkSession, path: String): PreparedCatalog = {
-    val m = ArtifactIO.readMeta(spark, path, "catalog")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    PreparedCatalog(
-      spark.read.parquet(s"$path/fingerprints"),
-      spark.read.parquet(s"$path/shingles"),
-      spark.read.parquet(s"$path/bands"),
-      f("id"), f("perms").toInt, f("lshBands").toInt, reliable = true)
+    val a = ArtifactIO.load(spark, path, "catalog")
+    PreparedCatalog(a.frame("fingerprints"), a.frame("shingles"), a.frame("bands"),
+      a("id"), a("perms").toInt, a("lshBands").toInt, reliable = true)
   }
 
   /** Build a [[PreparedCatalog]]; `checkpointDir` selects reliable
@@ -297,24 +292,19 @@ object Ops {
       * that is `reliable` by construction (parquet outlives both
       * executors and the driver session).
       */
-    def save(path: String): Unit = {
-      bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
-      prefixes.write.mode("overwrite").parquet(s"$path/prefixes")
-      ArtifactIO.writeMeta(bigrams.sparkSession, path, "lm",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "lm",
+        Seq(Frame("bigrams", bigrams), Frame("prefixes", prefixes)),
         Seq("vocab" -> vocab.toString, "addK" -> addK.toString))
-    }
   }
 
   /** Load a [[PreparedLm]] persisted by its `save`; fails fast on a
     * non-lm path.
     */
   def loadLm(spark: org.apache.spark.sql.SparkSession, path: String): PreparedLm = {
-    val m = ArtifactIO.readMeta(spark, path, "lm")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    PreparedLm(
-      spark.read.parquet(s"$path/bigrams"),
-      spark.read.parquet(s"$path/prefixes"),
-      f("vocab").toLong, f("addK").toInt, reliable = true)
+    val a = ArtifactIO.load(spark, path, "lm")
+    PreparedLm(a.frame("bigrams"), a.frame("prefixes"),
+      a("vocab").toLong, a("addK").toInt, reliable = true)
   }
 
   /** A Kneser–Ney bigram LM trained once and reused — the production
@@ -354,13 +344,10 @@ object Ops {
     }
 
     /** Persist durably (three census frames + kind-tagged meta). */
-    def save(path: String): Unit = {
-      bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
-      prefixes.write.mode("overwrite").parquet(s"$path/prefixes")
-      conts.write.mode("overwrite").parquet(s"$path/conts")
-      ArtifactIO.writeMeta(bigrams.sparkSession, path, "knlm",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "knlm",
+        Seq(Frame("bigrams", bigrams), Frame("prefixes", prefixes), Frame("conts", conts)),
         Seq("nt" -> nt.toString, "n1" -> n1.toString, "n2" -> n2.toString))
-    }
   }
 
   /** Derive prefix/continuation tables and count-of-count scalars
@@ -393,13 +380,9 @@ object Ops {
 
   /** Load a [[PreparedKnLm]] persisted by its `save`. */
   def loadKnLm(spark: org.apache.spark.sql.SparkSession, path: String): PreparedKnLm = {
-    val m = ArtifactIO.readMeta(spark, path, "knlm")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    PreparedKnLm(
-      spark.read.parquet(s"$path/bigrams"),
-      spark.read.parquet(s"$path/prefixes"),
-      spark.read.parquet(s"$path/conts"),
-      f("nt").toLong, f("n1").toLong, f("n2").toLong, reliable = true)
+    val a = ArtifactIO.load(spark, path, "knlm")
+    PreparedKnLm(a.frame("bigrams"), a.frame("prefixes"), a.frame("conts"),
+      a("nt").toLong, a("n1").toLong, a("n2").toLong, reliable = true)
   }
 
   /** Score docs against a prepared KN LM — the shared core of the
@@ -446,12 +429,10 @@ object Ops {
     lnpTarget: DataFrame, lnpRaw: DataFrame, buckets: Int, seed: Long,
     reliable: Boolean) {
     /** Persist durably (both profile tables + kind-tagged meta). */
-    def save(path: String): Unit = {
-      lnpTarget.write.mode("overwrite").parquet(s"$path/lnp_target")
-      lnpRaw.write.mode("overwrite").parquet(s"$path/lnp_raw")
-      ArtifactIO.writeMeta(lnpTarget.sparkSession, path, "dsir",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "dsir",
+        Seq(Frame("lnp_target", lnpTarget), Frame("lnp_raw", lnpRaw)),
         Seq("buckets" -> buckets.toString, "seed" -> seed.toString))
-    }
   }
 
   /** (docId?, bucket, cnt): hashed unigram + bigram bucket counts —
@@ -512,12 +493,9 @@ object Ops {
 
   /** Load a [[PreparedDsir]] persisted by its `save`. */
   def loadDsir(spark: org.apache.spark.sql.SparkSession, path: String): PreparedDsir = {
-    val m = ArtifactIO.readMeta(spark, path, "dsir")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    PreparedDsir(
-      spark.read.parquet(s"$path/lnp_target"),
-      spark.read.parquet(s"$path/lnp_raw"),
-      f("buckets").toInt, f("seed").toLong, reliable = true)
+    val a = ArtifactIO.load(spark, path, "dsir")
+    PreparedDsir(a.frame("lnp_target"), a.frame("lnp_raw"),
+      a("buckets").toInt, a("seed").toLong, reliable = true)
   }
 
   /** Per-doc DSIR weights + seeded Gumbel against a prepared profile
@@ -724,11 +702,9 @@ object Ops {
       scoreSeasonal(rows, cells, typeCol, time, value, inner = false)
 
     /** Persist durably (one cells frame + kind-tagged meta). */
-    def save(path: String): Unit = {
-      cells.write.mode("overwrite").parquet(s"$path/cells")
-      ArtifactIO.writeMeta(cells.sparkSession, path, "seasonal",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "seasonal", Seq(Frame("cells", cells)),
         Seq("typeCol" -> typeCol))
-    }
   }
 
   /** Build a [[PreparedSeasonal]]; `against` the prepare corpus
@@ -745,9 +721,8 @@ object Ops {
 
   /** Load a [[PreparedSeasonal]] persisted by its `save`. */
   def loadSeasonal(spark: org.apache.spark.sql.SparkSession, path: String): PreparedSeasonal = {
-    val m = ArtifactIO.readMeta(spark, path, "seasonal")
-    PreparedSeasonal(spark.read.parquet(s"$path/cells"),
-      ArtifactIO.field(m, path, "typeCol"), reliable = true)
+    val a = ArtifactIO.load(spark, path, "seasonal")
+    PreparedSeasonal(a.frame("cells"), a("typeCol"), reliable = true)
   }
 
   /** The grouped-aggregate cell census behind [[PreparedRollup]]:
@@ -811,15 +786,13 @@ object Ops {
       * occur in a Spark column name; a comma CAN, and would silently
       * reconstruct wrong keys on load).
       */
-    def save(path: String): Unit = {
-      cells.write.mode("overwrite").parquet(s"$path/cells")
+    def save(path: String): Unit =
       // fmt=2 marks the NUL key separator (fmt-less artifacts were
       // comma-joined; loading one by NUL-split would FUSE the key
       // names into a single misparsed string -- load fails fast on a
       // missing/old marker instead)
-      ArtifactIO.writeMeta(cells.sparkSession, path, "rollup",
-        Seq("keys" -> keys.mkString("\u0000"), "fmt" -> "2"))
-    }
+      ArtifactIO.save(path, "rollup", Seq(Frame("cells", cells)),
+        Seq("keys" -> keys.mkString("\u0000")), fmt = Some(2))
   }
 
   /** Build a [[PreparedRollup]]; its `serve` over the prepare corpus
@@ -839,16 +812,11 @@ object Ops {
     * a non-rollup path.
     */
   def loadRollup(spark: org.apache.spark.sql.SparkSession, path: String): PreparedRollup = {
-    val m = ArtifactIO.readMeta(spark, path, "rollup")
     // fail FAST on a pre-fmt artifact rather than misparse it: a
     // fmt-less rollup was saved with comma-joined key names, which a
     // NUL split would fuse into one wrong key string silently
-    val fmt = m.getOrElse("fmt", "<missing>")
-    require(fmt == "2",
-      s"loadRollup: artifact at $path has format '$fmt', expected '2' " +
-        "(NUL-separated keys) -- re-save it with this engine's prepareRollup")
-    PreparedRollup(spark.read.parquet(s"$path/cells"),
-      ArtifactIO.field(m, path, "keys").split("\u0000").toSeq, reliable = true)
+    val a = ArtifactIO.load(spark, path, "rollup", fmt = Some(2))
+    PreparedRollup(a.frame("cells"), a("keys").split("\u0000").toSeq, reliable = true)
   }
 
   /** The co-occurrence census behind [[itemSimilarity]] and
@@ -955,12 +923,9 @@ object Ops {
       serveSimilarItems(items, pairs, k, minCo)
 
     /** Persist durably (two census frames + kind-tagged meta). */
-    def save(path: String): Unit = {
-      items.write.mode("overwrite").parquet(s"$path/items")
-      pairs.write.mode("overwrite").parquet(s"$path/pairs")
-      ArtifactIO.writeMeta(items.sparkSession, path, "cooc",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "cooc", Seq(Frame("items", items), Frame("pairs", pairs)),
         Seq("nBaskets" -> nBaskets.toString))
-    }
   }
 
   /** Build a [[PreparedCooc]]; `similarItems` on it reproduces
@@ -980,10 +945,8 @@ object Ops {
     * a non-cooc path.
     */
   def loadCooc(spark: org.apache.spark.sql.SparkSession, path: String): PreparedCooc = {
-    val m = ArtifactIO.readMeta(spark, path, "cooc")
-    PreparedCooc(spark.read.parquet(s"$path/items"),
-      spark.read.parquet(s"$path/pairs"),
-      ArtifactIO.field(m, path, "nBaskets").toLong, reliable = true)
+    val a = ArtifactIO.load(spark, path, "cooc")
+    PreparedCooc(a.frame("items"), a.frame("pairs"), a("nBaskets").toLong, reliable = true)
   }
 
   /** Population stability index between two samples (r12 — THE drift
@@ -2910,13 +2873,11 @@ object Ops {
     }
 
     /** Persist durably (census + kind-tagged meta). */
-    def save(path: String): Unit = {
-      census.write.mode("overwrite").parquet(s"$path/census")
-      ArtifactIO.writeMeta(census.sparkSession, path, "group_sequential",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "group_sequential", Seq(Frame("census", census)),
         Seq("looks" -> looks.toString, "spending" -> spending,
-          "armA" -> armA, "armB" -> armB,
-          "group" -> group.getOrElse(""), "fmt" -> "1"))
-    }
+          "armA" -> armA, "armB" -> armB, "group" -> group.getOrElse("")),
+        fmt = Some(1))
   }
 
   /** Build a [[PreparedGroupSequential]] from a traffic frame; its
@@ -2938,18 +2899,9 @@ object Ops {
   /** Load a [[PreparedGroupSequential]] persisted by its `save`. */
   def loadGroupSequential(spark: org.apache.spark.sql.SparkSession,
                           path: String): PreparedGroupSequential = {
-    val m = ArtifactIO.readMeta(spark, path, "group_sequential")
-    val fmt = m.getOrElse("fmt", "<missing>")
-    require(fmt == "1",
-      s"loadGroupSequential: artifact at $path has format '$fmt', expected '1'")
-    val g = ArtifactIO.field(m, path, "group")
-    PreparedGroupSequential(
-      spark.read.parquet(s"$path/census"),
-      if (g.isEmpty) None else Some(g),
-      ArtifactIO.field(m, path, "looks").toInt,
-      ArtifactIO.field(m, path, "spending"),
-      ArtifactIO.field(m, path, "armA"), ArtifactIO.field(m, path, "armB"),
-      reliable = true)
+    val a = ArtifactIO.load(spark, path, "group_sequential", fmt = Some(1))
+    PreparedGroupSequential(a.frame("census"), Some(a("group")).filter(_.nonEmpty),
+      a("looks").toInt, a("spending"), a("armA"), a("armB"), reliable = true)
   }
 
   /** Per-segment seeded permutation test (r17 — VERDICT r16 missing
@@ -3285,13 +3237,10 @@ object Ops {
     }
 
     /** Persist durably (both censuses + kind-tagged meta). */
-    def save(path: String): Unit = {
-      moments.write.mode("overwrite").parquet(s"$path/moments")
-      ranks.write.mode("overwrite").parquet(s"$path/ranks")
-      ArtifactIO.writeMeta(moments.sparkSession, path, "governance",
-        Seq("group" -> group, "bucketWidth" -> bucketWidth.toString,
-          "fmt" -> "1"))
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "governance",
+        Seq(Frame("moments", moments), Frame("ranks", ranks)),
+        Seq("group" -> group, "bucketWidth" -> bucketWidth.toString), fmt = Some(1))
   }
 
   /** Build a [[PreparedGovernance]] from a traffic corpus; its
@@ -3317,15 +3266,9 @@ object Ops {
   /** Load a [[PreparedGovernance]] persisted by its `save`. */
   def loadGovernance(spark: org.apache.spark.sql.SparkSession,
                      path: String): PreparedGovernance = {
-    val m = ArtifactIO.readMeta(spark, path, "governance")
-    val fmt = m.getOrElse("fmt", "<missing>")
-    require(fmt == "1",
-      s"loadGovernance: artifact at $path has format '$fmt', expected '1'")
-    PreparedGovernance(
-      spark.read.parquet(s"$path/moments"),
-      spark.read.parquet(s"$path/ranks"),
-      ArtifactIO.field(m, path, "group"),
-      ArtifactIO.field(m, path, "bucketWidth").toLong, reliable = true)
+    val a = ArtifactIO.load(spark, path, "governance", fmt = Some(1))
+    PreparedGovernance(a.frame("moments"), a.frame("ranks"),
+      a("group"), a("bucketWidth").toLong, reliable = true)
   }
 
   /** The full governance battery (Welch + MWU + KS per segment,
@@ -5640,10 +5583,8 @@ object Ops {
     def newVsReturning: DataFrame = serveNewVsReturning(census)
 
     /** Persist durably (one census frame + kind-tagged meta). */
-    def save(path: String): Unit = {
-      census.write.mode("overwrite").parquet(s"$path/census")
-      ArtifactIO.writeMeta(census.sparkSession, path, "actives", Seq.empty)
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "actives", Seq(Frame("census", census)), Seq.empty)
   }
 
   /** Build a [[PreparedActives]]; its readouts over the prepare
@@ -5660,8 +5601,7 @@ object Ops {
     * on a non-actives path.
     */
   def loadActives(spark: org.apache.spark.sql.SparkSession, path: String): PreparedActives = {
-    ArtifactIO.readMeta(spark, path, "actives")
-    PreparedActives(spark.read.parquet(s"$path/census"), reliable = true)
+    PreparedActives(ArtifactIO.load(spark, path, "actives").frame("census"), reliable = true)
   }
 
   /** Per-group regression moments prepared ONCE for incremental
@@ -5703,11 +5643,9 @@ object Ops {
     def regression: DataFrame = regressionFromMoments(moments)
 
     /** Persist durably (one groups-sized frame + kind-tagged meta). */
-    def save(path: String): Unit = {
-      moments.write.mode("overwrite").parquet(s"$path/moments")
-      ArtifactIO.writeMeta(moments.sparkSession, path, "moments",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "moments", Seq(Frame("moments", moments)),
         Seq("groupCol" -> groupCol))
-    }
   }
 
   /** Build a [[PreparedMoments]]; `regression` on it reproduces
@@ -5726,9 +5664,8 @@ object Ops {
     * on a non-moments path.
     */
   def loadMoments(spark: org.apache.spark.sql.SparkSession, path: String): PreparedMoments = {
-    val m = ArtifactIO.readMeta(spark, path, "moments")
-    PreparedMoments(spark.read.parquet(s"$path/moments"),
-      ArtifactIO.field(m, path, "groupCol"), reliable = true)
+    val a = ArtifactIO.load(spark, path, "moments")
+    PreparedMoments(a.frame("moments"), a("groupCol"), reliable = true)
   }
 
   /** A vocabulary prepared ONCE for repeated capping — the production
@@ -5766,24 +5703,21 @@ object Ops {
       * (exactly how prepare derives it), so [[Ops.loadVocab]] rebuilds
       * both frames from one table with zero duplication.
       */
-    def save(path: String): Unit = {
-      census.write.mode("overwrite").parquet(s"$path/census")
-      ArtifactIO.writeMeta(census.sparkSession, path, "vocab",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "vocab", Seq(Frame("census", census)),
         Seq("minCount" -> minCount.toString, "unk" -> unk))
-    }
   }
 
   /** Load a [[PreparedVocab]] persisted by its `save`; fails fast on
     * a non-vocab path.
     */
   def loadVocab(spark: org.apache.spark.sql.SparkSession, path: String): PreparedVocab = {
-    val m = ArtifactIO.readMeta(spark, path, "vocab")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    val census = spark.read.parquet(s"$path/census")
-    val minCount = f("minCount").toLong
+    val a = ArtifactIO.load(spark, path, "vocab")
+    val census = a.frame("census")
+    val minCount = a("minCount").toLong
     PreparedVocab(
       census.filter(col("__c") >= minCount).select(col("__w")),
-      census, minCount, f("unk"), reliable = true)
+      census, minCount, a("unk"), reliable = true)
   }
 
   /** Build a [[PreparedVocab]]; capping the census corpus itself
@@ -5834,24 +5768,20 @@ object Ops {
       * recomposes `avgdl` with prepare's own division, so the loaded
       * index scores bit-for-bit.
       */
-    def save(path: String): Unit = {
-      postings.write.mode("overwrite").parquet(s"$path/postings")
-      ArtifactIO.writeMeta(postings.sparkSession, path, "bm25",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "bm25", Seq(Frame("postings", postings)),
         Seq("nDocs" -> nDocs.toString, "sumDl" -> sumDl.toString, "idCol" -> idCol))
-    }
   }
 
   /** Load a [[PreparedBm25]] persisted by its `save`; fails fast on a
     * non-bm25 path.
     */
   def loadBm25(spark: org.apache.spark.sql.SparkSession, path: String): PreparedBm25 = {
-    val m = ArtifactIO.readMeta(spark, path, "bm25")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    val n = f("nDocs").toLong; val sumDl = f("sumDl").toLong
-    PreparedBm25(
-      spark.read.parquet(s"$path/postings"), n, sumDl,
+    val a = ArtifactIO.load(spark, path, "bm25")
+    val n = a("nDocs").toLong; val sumDl = a("sumDl").toLong
+    PreparedBm25(a.frame("postings"), n, sumDl,
       if (n == 0) 0.0 else sumDl.toDouble / n.toDouble,
-      f("idCol"), reliable = true)
+      a("idCol"), reliable = true)
   }
 
   /** Build a [[PreparedBm25]] over the normalized token stream (the
@@ -6040,25 +5970,19 @@ object Ops {
       * so an absorb after load still enforces the PREPARED maxLength,
       * not a default).
       */
-    def save(path: String): Unit = {
-      keys.write.mode("overwrite").parquet(s"$path/keys")
-      base.write.mode("overwrite").parquet(s"$path/base")
-      ArtifactIO.writeMeta(keys.sparkSession, path, "editindex",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "editindex", Seq(Frame("keys", keys), Frame("base", base)),
         Seq("id" -> id, "text" -> text,
           "maxDistance" -> maxDistance.toString, "maxLength" -> maxLength.toString))
-    }
   }
 
   /** Load a [[PreparedEditIndex]] persisted by its `save`; fails fast
     * on a non-editindex path.
     */
   def loadEditIndex(spark: org.apache.spark.sql.SparkSession, path: String): PreparedEditIndex = {
-    val m = ArtifactIO.readMeta(spark, path, "editindex")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    PreparedEditIndex(
-      spark.read.parquet(s"$path/keys"),
-      spark.read.parquet(s"$path/base"),
-      f("id"), f("text"), f("maxDistance").toInt, f("maxLength").toInt,
+    val a = ArtifactIO.load(spark, path, "editindex")
+    PreparedEditIndex(a.frame("keys"), a.frame("base"),
+      a("id"), a("text"), a("maxDistance").toInt, a("maxLength").toInt,
       reliable = true)
   }
 
@@ -6222,24 +6146,21 @@ object Ops {
       * `common` is a filter view over it by construction (the
       * [[PreparedVocab.save]] argument).
       */
-    def save(path: String): Unit = {
-      census.write.mode("overwrite").parquet(s"$path/census")
-      ArtifactIO.writeMeta(census.sparkSession, path, "boilerplate",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "boilerplate", Seq(Frame("census", census)),
         Seq("sep" -> sep, "minDf" -> minDf.toString))
-    }
   }
 
   /** Load a [[PreparedBoilerplate]] persisted by its `save`; fails
     * fast on a non-boilerplate path.
     */
   def loadBoilerplate(spark: org.apache.spark.sql.SparkSession, path: String): PreparedBoilerplate = {
-    val m = ArtifactIO.readMeta(spark, path, "boilerplate")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    val census = spark.read.parquet(s"$path/census")
-    val minDf = f("minDf").toLong
+    val a = ArtifactIO.load(spark, path, "boilerplate")
+    val census = a.frame("census")
+    val minDf = a("minDf").toLong
     PreparedBoilerplate(
       census.filter(col("__df") >= minDf).select(col("__para")),
-      census, f("sep"), minDf, reliable = true)
+      census, a("sep"), minDf, reliable = true)
   }
 
   /** Build a [[PreparedBoilerplate]]: paragraphs occurring in ≥
@@ -6287,21 +6208,16 @@ object Ops {
     }
 
     /** Persist the gram set durably. */
-    def save(path: String): Unit = {
-      grams.write.mode("overwrite").parquet(s"$path/grams")
-      ArtifactIO.writeMeta(grams.sparkSession, path, "gramindex",
-        Seq("n" -> n.toString))
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "gramindex", Seq(Frame("grams", grams)), Seq("n" -> n.toString))
   }
 
   /** Load a [[PreparedGramIndex]] persisted by its `save`; fails fast
     * on a non-gramindex path.
     */
   def loadGramIndex(spark: org.apache.spark.sql.SparkSession, path: String): PreparedGramIndex = {
-    val m = ArtifactIO.readMeta(spark, path, "gramindex")
-    PreparedGramIndex(
-      spark.read.parquet(s"$path/grams"),
-      ArtifactIO.field(m, path, "n").toInt, reliable = true)
+    val a = ArtifactIO.load(spark, path, "gramindex")
+    PreparedGramIndex(a.frame("grams"), a("n").toInt, reliable = true)
   }
 
   /** Build a [[PreparedGramIndex]] (distinct gram hashes only — an
@@ -6414,26 +6330,21 @@ object Ops {
       * table, so [[Ops.loadVecCatalog]] re-derives identical weights
       * — no floating-point matrix needs serializing.
       */
-    def save(path: String): Unit = {
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      vectors.write.mode("overwrite").parquet(s"$path/vectors")
-      ArtifactIO.writeMeta(codes.sparkSession, path, "veccatalog",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "veccatalog",
+        Seq(Frame("codes", codes), Frame("vectors", vectors)),
         Seq("id" -> id, "dim" -> dim.toString, "signBits" -> signBits.toString,
           "tables" -> tables.toString, "seed" -> seed))
-    }
   }
 
   /** Load a [[PreparedVecCatalog]] persisted by its `save`; fails
     * fast on a non-veccatalog path.
     */
   def loadVecCatalog(spark: org.apache.spark.sql.SparkSession, path: String): PreparedVecCatalog = {
-    val m = ArtifactIO.readMeta(spark, path, "veccatalog")
-    def f(k: String) = ArtifactIO.field(m, path, k)
-    PreparedVecCatalog(
-      spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/vectors"),
-      f("id"), f("dim").toInt, f("signBits").toInt, f("tables").toInt,
-      f("seed"), reliable = true)
+    val a = ArtifactIO.load(spark, path, "veccatalog")
+    PreparedVecCatalog(a.frame("codes"), a.frame("vectors"),
+      a("id"), a("dim").toInt, a("signBits").toInt, a("tables").toInt,
+      a("seed"), reliable = true)
   }
 
   /** Build a [[PreparedVecCatalog]]; `checkpointDir` selects reliable
@@ -6633,10 +6544,8 @@ object Ops {
       imageDedupAgainstCatalog(increment, hashes, maxHamming, bands)
 
     /** Persist durably ([[ArtifactIO]] layout). */
-    def save(path: String): Unit = {
-      hashes.write.mode("overwrite").parquet(s"$path/hashes")
-      ArtifactIO.writeMeta(hashes.sparkSession, path, "imagecatalog", Seq.empty)
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "imagecatalog", Seq(Frame("hashes", hashes)), Seq.empty)
   }
 
   /** Build a [[PreparedImageCatalog]]; `checkpointDir` selects
@@ -6653,8 +6562,8 @@ object Ops {
     * fast on a non-imagecatalog path.
     */
   def loadImageCatalog(spark: org.apache.spark.sql.SparkSession, path: String): PreparedImageCatalog = {
-    ArtifactIO.readMeta(spark, path, "imagecatalog")
-    PreparedImageCatalog(spark.read.parquet(s"$path/hashes"), reliable = true)
+    PreparedImageCatalog(ArtifactIO.load(spark, path, "imagecatalog").frame("hashes"),
+      reliable = true)
   }
 
   /** An audio-fingerprint catalog prepared ONCE for repeated
@@ -6700,10 +6609,8 @@ object Ops {
       audioDedupAgainstCatalog(increment, hashes, maxHamming, bands)
 
     /** Persist durably ([[ArtifactIO]] layout). */
-    def save(path: String): Unit = {
-      hashes.write.mode("overwrite").parquet(s"$path/hashes")
-      ArtifactIO.writeMeta(hashes.sparkSession, path, "audiocatalog", Seq.empty)
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "audiocatalog", Seq(Frame("hashes", hashes)), Seq.empty)
   }
 
   /** Build a [[PreparedAudioCatalog]]; `checkpointDir` selects
@@ -6720,8 +6627,8 @@ object Ops {
     * fast on a non-audiocatalog path.
     */
   def loadAudioCatalog(spark: org.apache.spark.sql.SparkSession, path: String): PreparedAudioCatalog = {
-    ArtifactIO.readMeta(spark, path, "audiocatalog")
-    PreparedAudioCatalog(spark.read.parquet(s"$path/hashes"), reliable = true)
+    PreparedAudioCatalog(ArtifactIO.load(spark, path, "audiocatalog").frame("hashes"),
+      reliable = true)
   }
 
   /** Explode 64-bit frame hashes into (band, chunk) bucket rows —
@@ -6878,11 +6785,9 @@ object Ops {
         minFrameMatch, maxFrames)
 
     /** Persist durably ([[ArtifactIO]] layout, maxFrames in meta). */
-    def save(path: String): Unit = {
-      frameHashes.write.mode("overwrite").parquet(s"$path/framehashes")
-      ArtifactIO.writeMeta(frameHashes.sparkSession, path, "videocatalog",
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "videocatalog", Seq(Frame("framehashes", frameHashes)),
         Seq("maxFrames" -> maxFrames.toString))
-    }
   }
 
   /** Build a [[PreparedVideoCatalog]]; `checkpointDir` selects
@@ -6901,9 +6806,8 @@ object Ops {
     * fast on a non-videocatalog path or missing maxFrames.
     */
   def loadVideoCatalog(spark: org.apache.spark.sql.SparkSession, path: String): PreparedVideoCatalog = {
-    val m = ArtifactIO.readMeta(spark, path, "videocatalog")
-    PreparedVideoCatalog(spark.read.parquet(s"$path/framehashes"),
-      ArtifactIO.field(m, path, "maxFrames").toInt, reliable = true)
+    val a = ArtifactIO.load(spark, path, "videocatalog")
+    PreparedVideoCatalog(a.frame("framehashes"), a("maxFrames").toInt, reliable = true)
   }
 
   /** A rolling SCD Type-2 dimension prepared ONCE and maintained per
@@ -7000,13 +6904,13 @@ object Ops {
       // opened after the instant never reach the scan. The win is on
       // deep-history dimensions: a 10-year dimension read as of year
       // 2 scans ~20% of files. loadScd2 reads either layout.
-      if (partitionHistoryByMonth)
-        history
-          .withColumn("vf_month", date_format(col("valid_from"), "yyyy-MM"))
-          .write.mode("overwrite").partitionBy("vf_month")
-          .parquet(s"$path/history")
-      else history.write.mode("overwrite").parquet(s"$path/history")
-      ArtifactIO.writeMeta(history.sparkSession, path, "scd2",
+      val frame =
+        if (partitionHistoryByMonth)
+          Frame("history",
+            history.withColumn("vf_month", date_format(col("valid_from"), "yyyy-MM")),
+            Seq("vf_month"))
+        else Frame("history", history)
+      ArtifactIO.save(path, "scd2", Seq(frame),
         Seq("snapCol" -> snapCol, "id" -> id,
           "attrs" -> attrs.mkString("\u0000"),
           "lastSnapUs" -> lastSnapUs.toString,
@@ -7026,10 +6930,10 @@ object Ops {
     */
   def scd2AsOfRead(spark: org.apache.spark.sql.SparkSession, path: String,
                    ts: String): DataFrame = {
-    val m = ArtifactIO.readMeta(spark, path, "scd2")
-    val h = spark.read.parquet(s"$path/history")
+    val a = ArtifactIO.load(spark, path, "scd2")
+    val h = a.frame("history")
     val base =
-      if (m.get("partitioned").contains("true"))
+      if (a.scalars.get("partitioned").contains("true"))
         h.filter(col("vf_month") <= ts.take(7)).drop("vf_month")
       else h
     base.scd2AsOf(ts)
@@ -7053,14 +6957,12 @@ object Ops {
     * non-scd2 path.
     */
   def loadScd2(spark: org.apache.spark.sql.SparkSession, path: String): PreparedScd2 = {
-    val m = ArtifactIO.readMeta(spark, path, "scd2")
-    def f(k: String) = ArtifactIO.field(m, path, k)
+    val a = ArtifactIO.load(spark, path, "scd2")
     // a month-partitioned layout re-absorbs identically: the derived
     // vf_month partition column is layout, not history
-    PreparedScd2(
-      spark.read.parquet(s"$path/history").drop("vf_month"),
-      f("snapCol"), f("id"), f("attrs").split("\u0000").toSeq,
-      f("lastSnapUs").toLong, reliable = true)
+    PreparedScd2(a.frame("history").drop("vf_month"),
+      a("snapCol"), a("id"), a("attrs").split("\u0000").toSeq,
+      a("lastSnapUs").toLong, reliable = true)
   }
 
   /** Portable ASCII PII patterns — character classes and bounded
@@ -7368,12 +7270,10 @@ object Ops {
       * names NUL-joined with the fmt marker — the PreparedRollup
       * discipline from day one).
       */
-    def save(path: String): Unit = {
-      regs.write.mode("overwrite").parquet(s"$path/regs")
-      ArtifactIO.writeMeta(regs.sparkSession, path, "quantiles",
-        Seq("group" -> group.mkString("\u0000"),
-          "bucketWidth" -> bucketWidth.toString, "fmt" -> "2"))
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "quantiles", Seq(Frame("regs", regs)),
+        Seq("group" -> group.mkString("\u0000"), "bucketWidth" -> bucketWidth.toString),
+        fmt = Some(2))
   }
 
   /** Build a [[PreparedQuantiles]]; its `quantiles` over the prepare
@@ -7393,14 +7293,10 @@ object Ops {
     */
   def loadQuantiles(spark: org.apache.spark.sql.SparkSession,
                     path: String): PreparedQuantiles = {
-    val m = ArtifactIO.readMeta(spark, path, "quantiles")
-    val fmt = m.getOrElse("fmt", "<missing>")
-    require(fmt == "2",
-      s"loadQuantiles: artifact at $path has format '$fmt', expected '2'")
-    val raw = ArtifactIO.field(m, path, "group")
+    val a = ArtifactIO.load(spark, path, "quantiles", fmt = Some(2))
+    val raw = a("group")
     val grp = if (raw.isEmpty) Nil else raw.split("\u0000").toSeq
-    PreparedQuantiles(spark.read.parquet(s"$path/regs"), grp,
-      ArtifactIO.field(m, path, "bucketWidth").toDouble, reliable = true)
+    PreparedQuantiles(a.frame("regs"), grp, a("bucketWidth").toDouble, reliable = true)
   }
 
   /** The exact per-bin calibration census — (bin, n, n_pos, __ssum,
@@ -7525,11 +7421,9 @@ object Ops {
     def serve: DataFrame = calibrationFinish(census)
 
     /** Persist durably (census frame + kind-tagged meta). */
-    def save(path: String): Unit = {
-      census.write.mode("overwrite").parquet(s"$path/census")
-      ArtifactIO.writeMeta(census.sparkSession, path, "calibration",
-        Seq("nBins" -> nBins.toString, "fmt" -> "1"))
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "calibration", Seq(Frame("census", census)),
+        Seq("nBins" -> nBins.toString), fmt = Some(1))
   }
 
   /** Build a [[PreparedCalibration]]; `serve` on it reproduces
@@ -7549,12 +7443,8 @@ object Ops {
     */
   def loadCalibration(spark: org.apache.spark.sql.SparkSession,
                       path: String): PreparedCalibration = {
-    val m = ArtifactIO.readMeta(spark, path, "calibration")
-    val fmt = m.getOrElse("fmt", "<missing>")
-    require(fmt == "1",
-      s"loadCalibration: artifact at $path has format '$fmt', expected '1'")
-    PreparedCalibration(spark.read.parquet(s"$path/census"),
-      ArtifactIO.field(m, path, "nBins").toInt, reliable = true)
+    val a = ArtifactIO.load(spark, path, "calibration", fmt = Some(1))
+    PreparedCalibration(a.frame("census"), a("nBins").toInt, reliable = true)
   }
 
   /** Incrementally-maintained bucket census (r15 — the NINETEENTH
@@ -7612,11 +7502,9 @@ object Ops {
     }
 
     /** Persist durably (census frame + kind-tagged meta). */
-    def save(path: String): Unit = {
-      census.write.mode("overwrite").parquet(s"$path/census")
-      ArtifactIO.writeMeta(census.sparkSession, path, "buckets",
-        Seq("bucket" -> bucket, "fmt" -> "1"))
-    }
+    def save(path: String): Unit =
+      ArtifactIO.save(path, "buckets", Seq(Frame("census", census)),
+        Seq("bucket" -> bucket), fmt = Some(1))
   }
 
   /** Build a [[PreparedBuckets]] from a baseline corpus; its census
@@ -7634,12 +7522,8 @@ object Ops {
     */
   def loadBuckets(spark: org.apache.spark.sql.SparkSession,
                   path: String): PreparedBuckets = {
-    val m = ArtifactIO.readMeta(spark, path, "buckets")
-    val fmt = m.getOrElse("fmt", "<missing>")
-    require(fmt == "1",
-      s"loadBuckets: artifact at $path has format '$fmt', expected '1'")
-    PreparedBuckets(spark.read.parquet(s"$path/census"),
-      ArtifactIO.field(m, path, "bucket"), reliable = true)
+    val a = ArtifactIO.load(spark, path, "buckets", fmt = Some(1))
+    PreparedBuckets(a.frame("census"), a("bucket"), reliable = true)
   }
 
   /** The estimate half: nearest-rank quantiles off the bucket census.

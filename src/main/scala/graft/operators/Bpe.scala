@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.api.ArtifactIO
+import graft.api.ArtifactIO.Frame
 import graft.functions.TextFunctions.tokens
 import graft.sources.Tables
 
@@ -248,11 +250,9 @@ object Bpe {
       * list, so encodings match token-for-token.
       */
     def save(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-      import spark.implicits._
-      merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
-        .toDF("rank", "l", "r")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/merges")
-      graft.api.ArtifactIO.writeMeta(spark, path, "bpe",
+      val rows = merges.zipWithIndex.map { case ((l, r), i) => (i, l, r) }
+      ArtifactIO.save(path, "bpe",
+        Seq(Frame("merges", spark.createDataFrame(rows).toDF("rank", "l", "r").coalesce(1))),
         Seq("foldBatch" -> foldBatch.toString, "numMerges" -> merges.size.toString))
     }
   }
@@ -262,15 +262,14 @@ object Bpe {
     * meta (a partially-written artifact).
     */
   def loadBpe(spark: org.apache.spark.sql.SparkSession, path: String): PreparedBpe = {
-    val m = graft.api.ArtifactIO.readMeta(spark, path, "bpe")
-    def f(k: String) = graft.api.ArtifactIO.field(m, path, k)
-    val merges = spark.read.parquet(s"$path/merges")
+    val a = ArtifactIO.load(spark, path, "bpe")
+    val merges = a.frame("merges")
       .orderBy(col("rank")).collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    require(merges.size == f("numMerges").toInt,
+    require(merges.size == a("numMerges").toInt,
       s"loadBpe: merge table at $path has ${merges.size} rows but meta " +
-        s"records ${f("numMerges")} — partially-written artifact")
-    PreparedBpe(merges, f("foldBatch").toInt)
+        s"records ${a("numMerges")} — partially-written artifact")
+    PreparedBpe(merges, a("foldBatch").toInt)
   }
 
   /** Train and freeze a merge list (see [[trainBpe]] for the training

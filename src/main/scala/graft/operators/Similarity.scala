@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.api.ArtifactIO
+import graft.api.ArtifactIO.Frame
 import graft.functions.GraftFunctions
 import graft.sources.Tables
 
@@ -603,28 +605,22 @@ object Similarity {
       * not a format). Layout under `path`: `codes/` and `centroids/`
       * as parquet, `codebooks/` as exact (s, j, d, w) double rows
       * (parquet doubles are lossless — a JSON rendering would round),
-      * and `meta/` as one row of the scalar config. [[loadIvfPqIndex]]
-      * reconstructs a PreparedIvfPq that is `reliable` by
-      * construction (parquet is durable) and serves/absorbs
-      * identically (spec-pinned round-trip).
+      * and `meta/` as the kind-tagged scalar table
+      * ([[graft.api.ArtifactIO]]). [[loadIvfPqIndex]] reconstructs a
+      * PreparedIvfPq that is `reliable` by construction (parquet is
+      * durable) and serves/absorbs identically (spec-pinned round-trip).
       */
     def save(path: String): Unit = {
-      val spark = codes.sparkSession
-      import spark.implicits._
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      centroids.write.mode("overwrite").parquet(s"$path/centroids")
       val cbRows = for {
         s <- codebooks.indices
         j <- codebooks(s).indices
         d <- codebooks(s)(j).indices
       } yield (s, j, d, codebooks(s)(j)(d))
-      cbRows.toDF("s", "j", "d", "w").write.mode("overwrite").parquet(s"$path/codebooks")
-      // scalars go through the shared kind-tagged (k, v) meta table
-      // (r12: every prepared artifact persists through ArtifactIO, so
-      // loading the wrong artifact type fails fast by kind). `scale`
-      // round-trips exactly: Double.toString is the shortest
+      // `scale` round-trips exactly: Double.toString is the shortest
       // representation that parses back to the same IEEE bits.
-      graft.api.ArtifactIO.writeMeta(spark, path, "ivfpq",
+      ArtifactIO.save(path, "ivfpq",
+        Seq(Frame("codes", codes), Frame("centroids", centroids),
+          Frame("codebooks", codes.sparkSession.createDataFrame(cbRows).toDF("s", "j", "d", "w"))),
         Seq("id" -> id, "dim" -> dim.toString, "m" -> m.toString,
           "ks" -> ks.toString, "seed" -> seed, "scale" -> scale.toString,
           "maxLiteralCentroids" -> maxLiteralCentroids.toString))
@@ -637,19 +633,15 @@ object Similarity {
     * scalar config all round-trip exactly.
     */
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): PreparedIvfPq = {
-    import graft.api.ArtifactIO
-    val meta = ArtifactIO.readMeta(spark, path, "ivfpq")
-    def f(k: String) = ArtifactIO.field(meta, path, k)
-    val m = f("m").toInt; val ks = f("ks").toInt; val dim = f("dim").toInt
+    val a = ArtifactIO.load(spark, path, "ivfpq")
+    val m = a("m").toInt; val ks = a("ks").toInt; val dim = a("dim").toInt
     val cbs = Array.fill(m, ks, dim / m)(0.0)
-    spark.read.parquet(s"$path/codebooks").collect().foreach { r =>
+    a.frame("codebooks").collect().foreach { r =>
       cbs(r.getAs[Int]("s"))(r.getAs[Int]("j"))(r.getAs[Int]("d")) = r.getAs[Double]("w")
     }
-    PreparedIvfPq(
-      spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/centroids"),
-      f("id"), dim, m, ks, f("seed"), f("scale").toDouble,
-      cbs, f("maxLiteralCentroids").toInt, reliable = true)
+    PreparedIvfPq(a.frame("codes"), a.frame("centroids"),
+      a("id"), dim, m, ks, a("seed"), a("scale").toDouble,
+      cbs, a("maxLiteralCentroids").toInt, reliable = true)
   }
 
   /** Build a [[PreparedIvfPq]]; `checkpointDir` selects reliable

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.api.ArtifactIO
+import graft.api.ArtifactIO.Frame
 import graft.functions.TextFunctions.tokens
 import graft.sources.Tables
 
@@ -276,9 +278,8 @@ object Wordpiece {
   final case class PreparedWordpiece(pieces: Seq[String]) {
     def save(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
       import spark.implicits._
-      pieces.toDF("piece")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/pieces")
-      graft.api.ArtifactIO.writeMeta(spark, path, "wordpiece",
+      ArtifactIO.save(path, "wordpiece",
+        Seq(Frame("pieces", pieces.toDF("piece").coalesce(1))),
         Seq("numPieces" -> pieces.size.toString))
     }
   }
@@ -286,12 +287,12 @@ object Wordpiece {
   /** Load a [[PreparedWordpiece]] persisted by its `save`. */
   def loadWordpiece(spark: org.apache.spark.sql.SparkSession,
                     path: String): PreparedWordpiece = {
-    val m = graft.api.ArtifactIO.readMeta(spark, path, "wordpiece")
-    val pieces = spark.read.parquet(s"$path/pieces")
+    val a = ArtifactIO.load(spark, path, "wordpiece")
+    val pieces = a.frame("pieces")
       .orderBy(col("piece")).collect().map(_.getString(0)).toSeq
-    require(pieces.size == graft.api.ArtifactIO.field(m, path, "numPieces").toInt,
+    require(pieces.size == a("numPieces").toInt,
       s"loadWordpiece: piece table at $path has ${pieces.size} rows but meta " +
-        s"records ${m("numPieces")} — partially-written artifact")
+        s"records ${a("numPieces")} — partially-written artifact")
     PreparedWordpiece(pieces)
   }
 

@@ -24,7 +24,7 @@ final class Tables(val spark: SparkSession, dir: String) {
   /** `events.ts` has shipped in three physical layouts across testdata
     * generations: parquet TIMESTAMP(NANOS) (read as raw nanos under the
     * `nanosAsLong` legacy flag — set at session construction by
-    * GraftSession/Verify/Bench, NOT here: loaders are side-effect-free),
+    * GraftSession, NOT here: loaders are side-effect-free),
     * TIMESTAMP(MICROS) without UTC adjustment (Spark: TIMESTAMP_NTZ),
     * and plain TIMESTAMP. All three carry µs-precision instants, so the
     * loader branches on the OBSERVED type and surfaces one stable

@@ -258,8 +258,11 @@ class AbsorbSpec extends AnyFunSuite {
     // save → load round-trips the whole artifact: the loaded index is
     // reliable (parquet is durable), serves the identical rankings,
     // and keeps absorbing — the encode-once/serve-for-weeks loop
+    // (saved back over its own source path first: the save must not
+    // delete the files the loaded frames still read)
     val saveDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_save").toString
     full.save(saveDir)
+    Similarity.loadIvfPqIndex(spark, saveDir).save(saveDir)
     val loaded = Similarity.loadIvfPqIndex(spark, saveDir)
     assert(loaded.reliable, "a persisted index is reliable by construction")
     assert(loaded.dim == full.dim && loaded.m == full.m && loaded.ks == full.ks &&
@@ -269,12 +272,13 @@ class AbsorbSpec extends AnyFunSuite {
       loaded.topK(queries, "qid2", "qemb", k = 10, nprobe = 2),
       full.topK(queries, "qid2", "qemb", k = 10, nprobe = 2),
       "persisted-index top-k")
-    // and it still absorbs: load(save(prep(A))).absorb(B) ≡ prep(A ∪ B)
+    // and it still absorbs, in place: load(A).absorb(B).save(A), then
+    // reload ≡ prep(A ∪ B)
     val savedA = java.nio.file.Files.createTempDirectory("graft_ivfpq_saveA").toString
     prep(a).save(savedA)
-    assertSameRows(
-      Similarity.loadIvfPqIndex(spark, savedA).absorb(b, "emb").codes,
-      full.codes, "absorb after load")
+    Similarity.loadIvfPqIndex(spark, savedA).absorb(b, "emb").save(savedA)
+    assertSameRows(Similarity.loadIvfPqIndex(spark, savedA).codes, full.codes,
+      "absorb after load")
   }
 
   test("PreparedCatalog.absorb ≡ prepareCatalog over the union; overlapping fingerprints stay distinct") {

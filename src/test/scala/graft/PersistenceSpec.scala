@@ -17,9 +17,12 @@ import graft.sources.Tables
   * / serve-for-weeks loop survives the driver session that built the
   * index. Loaded artifacts are `reliable` by construction (parquet is
   * durable), and loading a path that holds a DIFFERENT artifact kind
-  * fails fast (the SnapshotStore discipline applied at rest).
-  * PreparedIvfPq's round-trip lives in AbsorbSpec (it predates this
-  * suite); this suite covers the other eight plus PreparedBpe.
+  * fails fast (the SnapshotStore discipline applied at rest). Every
+  * round-trip saves the loaded artifact back over its own path, and
+  * every absorb-after-load runs `load(dir).absorb(inc).save(dir)`,
+  * before reloading: the rolling-index loop must not delete the files
+  * its lazily-read frames still scan. PreparedIvfPq's round-trip
+  * lives in AbsorbSpec (it predates this suite).
   */
 class PersistenceSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -44,6 +47,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareCatalog(corpus, "doc_id", "text")
     val dir = tmp("catalog")
     full.save(dir)
+    Ops.loadCatalog(spark, dir).save(dir)
     val loaded = Ops.loadCatalog(spark, dir)
     assert(loaded.id == full.id && loaded.perms == full.perms &&
       loaded.lshBands == full.lshBands)
@@ -58,7 +62,8 @@ class PersistenceSpec extends AnyFunSuite {
     // absorb after load ≡ full re-prepare over the union
     val dirA = tmp("catalogA")
     Ops.prepareCatalog(partA, "doc_id", "text").save(dirA)
-    val grown = Ops.loadCatalog(spark, dirA).absorb(partB, "text")
+    Ops.loadCatalog(spark, dirA).absorb(partB, "text").save(dirA)
+    val grown = Ops.loadCatalog(spark, dirA)
     val union = Ops.prepareCatalog(corpus, "doc_id", "text")
     assertSameRows(grown.shingles, union.shingles, "absorb-after-load shingles")
     assertSameRows(grown.bands, union.bands, "absorb-after-load bands")
@@ -69,6 +74,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareLm(corpus, "text")
     val dir = tmp("lm")
     full.save(dir)
+    Ops.loadLm(spark, dir).save(dir)
     val loaded = Ops.loadLm(spark, dir)
     assert(loaded.reliable, "a persisted LM is reliable by construction")
     assert(loaded.vocab == full.vocab && loaded.addK == full.addK)
@@ -81,7 +87,8 @@ class PersistenceSpec extends AnyFunSuite {
       "lm scoring")
     val dirA = tmp("lmA")
     Ops.prepareLm(partA, "text").save(dirA)
-    val grown = Ops.loadLm(spark, dirA).absorb(partB, "text")
+    Ops.loadLm(spark, dirA).absorb(partB, "text").save(dirA)
+    val grown = Ops.loadLm(spark, dirA)
     assert(grown.vocab == full.vocab)
     assertSameRows(grown.bigrams, full.bigrams, "absorb-after-load lm census")
   }
@@ -90,6 +97,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareVocab(corpus, "text", minCount = 5L)
     val dir = tmp("vocab")
     full.save(dir)
+    Ops.loadVocab(spark, dir).save(dir)
     val loaded = Ops.loadVocab(spark, dir)
     assert(loaded.reliable && loaded.minCount == full.minCount && loaded.unk == full.unk)
     assertSameRows(loaded.census, full.census, "vocab census")
@@ -102,7 +110,8 @@ class PersistenceSpec extends AnyFunSuite {
     // threshold-crossing absorb still works from the persisted census
     val dirA = tmp("vocabA")
     Ops.prepareVocab(partA, "text", minCount = 5L).save(dirA)
-    val grown = Ops.loadVocab(spark, dirA).absorb(partB, "text")
+    Ops.loadVocab(spark, dirA).absorb(partB, "text").save(dirA)
+    val grown = Ops.loadVocab(spark, dirA)
     assertSameRows(grown.kept, full.kept, "absorb-after-load vocab kept")
   }
 
@@ -110,6 +119,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareBm25(corpus, "doc_id", "text")
     val dir = tmp("bm25")
     full.save(dir)
+    Ops.loadBm25(spark, dir).save(dir)
     val loaded = Ops.loadBm25(spark, dir)
     assert(loaded.reliable && loaded.idCol == full.idCol)
     assert(loaded.nDocs == full.nDocs && loaded.sumDl == full.sumDl)
@@ -123,7 +133,8 @@ class PersistenceSpec extends AnyFunSuite {
       "bm25 top-k")
     val dirA = tmp("bm25A")
     Ops.prepareBm25(partA, "doc_id", "text").save(dirA)
-    val grown = Ops.loadBm25(spark, dirA).absorb(partB, "text")
+    Ops.loadBm25(spark, dirA).absorb(partB, "text").save(dirA)
+    val grown = Ops.loadBm25(spark, dirA)
     assert(grown.nDocs == full.nDocs && grown.sumDl == full.sumDl && grown.avgdl == full.avgdl)
     assertSameRows(grown.postings, full.postings, "absorb-after-load bm25 postings")
   }
@@ -136,6 +147,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareEditIndex(a.unionByName(b), "cid", "cname", maxDistance = 1)
     val dir = tmp("edit")
     full.save(dir)
+    Ops.loadEditIndex(spark, dir).save(dir)
     val loaded = Ops.loadEditIndex(spark, dir)
     assert(loaded.reliable && loaded.id == full.id && loaded.text == full.text &&
       loaded.maxDistance == full.maxDistance && loaded.maxLength == full.maxLength)
@@ -148,7 +160,8 @@ class PersistenceSpec extends AnyFunSuite {
       "edit matches")
     val dirA = tmp("editA")
     Ops.prepareEditIndex(a, "cid", "cname", maxDistance = 1).save(dirA)
-    val grown = Ops.loadEditIndex(spark, dirA).absorb(b)
+    Ops.loadEditIndex(spark, dirA).absorb(b).save(dirA)
+    val grown = Ops.loadEditIndex(spark, dirA)
     assertSameRows(grown.keys, full.keys, "absorb-after-load edit keys")
     // the loaded index still enforces ITS OWN maxLength on absorb
     val dirT = tmp("editTight")
@@ -164,6 +177,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareBoilerplate(corpus, "doc_id", "text", minDf = 3L)
     val dir = tmp("boiler")
     full.save(dir)
+    Ops.loadBoilerplate(spark, dir).save(dir)
     val loaded = Ops.loadBoilerplate(spark, dir)
     assert(loaded.reliable && loaded.sep == full.sep && loaded.minDf == full.minDf)
     assertSameRows(loaded.census, full.census, "boilerplate census")
@@ -175,7 +189,8 @@ class PersistenceSpec extends AnyFunSuite {
       "boilerplate stripping")
     val dirA = tmp("boilerA")
     Ops.prepareBoilerplate(partA, "doc_id", "text", minDf = 3L).save(dirA)
-    val grown = Ops.loadBoilerplate(spark, dirA).absorb(partB, "doc_id", "text")
+    Ops.loadBoilerplate(spark, dirA).absorb(partB, "doc_id", "text").save(dirA)
+    val grown = Ops.loadBoilerplate(spark, dirA)
     assertSameRows(grown.common, full.common, "absorb-after-load boilerplate common")
   }
 
@@ -183,6 +198,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareGramIndex(corpus, "text", n = 8)
     val dir = tmp("gram")
     full.save(dir)
+    Ops.loadGramIndex(spark, dir).save(dir)
     val loaded = Ops.loadGramIndex(spark, dir)
     assert(loaded.reliable && loaded.n == full.n)
     assertSameRows(loaded.grams, full.grams, "gram set")
@@ -193,7 +209,8 @@ class PersistenceSpec extends AnyFunSuite {
       "gram coverage")
     val dirA = tmp("gramA")
     Ops.prepareGramIndex(partA, "text", n = 8).save(dirA)
-    val grown = Ops.loadGramIndex(spark, dirA).absorb(partB, "text")
+    Ops.loadGramIndex(spark, dirA).absorb(partB, "text").save(dirA)
+    val grown = Ops.loadGramIndex(spark, dirA)
     assertSameRows(grown.grams, full.grams, "absorb-after-load gram set")
   }
 
@@ -204,6 +221,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareVecCatalog(vecs, "vec_id", "emb", dim = 64)
     val dir = tmp("veccat")
     full.save(dir)
+    Ops.loadVecCatalog(spark, dir).save(dir)
     val loaded = Ops.loadVecCatalog(spark, dir)
     assert(loaded.reliable && loaded.id == full.id && loaded.dim == full.dim &&
       loaded.signBits == full.signBits && loaded.tables == full.tables &&
@@ -217,7 +235,8 @@ class PersistenceSpec extends AnyFunSuite {
       "vec dedup")
     val dirA = tmp("veccatA")
     Ops.prepareVecCatalog(a, "vec_id", "emb", dim = 64).save(dirA)
-    val grown = Ops.loadVecCatalog(spark, dirA).absorb(b, "emb")
+    Ops.loadVecCatalog(spark, dirA).absorb(b, "emb").save(dirA)
+    val grown = Ops.loadVecCatalog(spark, dirA)
     assertSameRows(grown.codes, full.codes, "absorb-after-load vec codes")
   }
 
@@ -225,6 +244,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Bpe.prepareBpe(corpus, "text", numMerges = 12)
     val dir = tmp("bpe")
     full.save(spark, dir)
+    Bpe.loadBpe(spark, dir).save(spark, dir)
     val loaded = Bpe.loadBpe(spark, dir)
     assert(loaded.merges == full.merges, "merge list must round-trip rank-for-rank")
     assert(loaded.foldBatch == full.foldBatch)
@@ -243,6 +263,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareImageCatalog(media)
     val dir = tmp("imagecat")
     full.save(dir)
+    Ops.loadImageCatalog(spark, dir).save(dir)
     val loaded = Ops.loadImageCatalog(spark, dir)
     assert(loaded.reliable, "a persisted image catalog is reliable by construction")
     assertSameRows(loaded.hashes, full.hashes, "image-catalog hashes")
@@ -250,7 +271,8 @@ class PersistenceSpec extends AnyFunSuite {
     assertSameRows(loaded.dedup(inc), full.dedup(inc), "image dedup after load")
     val dirA = tmp("imagecatA")
     Ops.prepareImageCatalog(a).save(dirA)
-    val grown = Ops.loadImageCatalog(spark, dirA).absorb(b)
+    Ops.loadImageCatalog(spark, dirA).absorb(b).save(dirA)
+    val grown = Ops.loadImageCatalog(spark, dirA)
     assertSameRows(grown.hashes, full.hashes, "absorb-after-load image hashes")
   }
 
@@ -262,6 +284,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareAudioCatalog(media)
     val dir = tmp("audiocat")
     full.save(dir)
+    Ops.loadAudioCatalog(spark, dir).save(dir)
     val loaded = Ops.loadAudioCatalog(spark, dir)
     assert(loaded.reliable, "a persisted audio catalog is reliable by construction")
     assertSameRows(loaded.hashes, full.hashes, "audio-catalog hashes")
@@ -269,7 +292,8 @@ class PersistenceSpec extends AnyFunSuite {
     assertSameRows(loaded.dedup(inc), full.dedup(inc), "audio dedup after load")
     val dirA = tmp("audiocatA")
     Ops.prepareAudioCatalog(a).save(dirA)
-    val grown = Ops.loadAudioCatalog(spark, dirA).absorb(b)
+    Ops.loadAudioCatalog(spark, dirA).absorb(b).save(dirA)
+    val grown = Ops.loadAudioCatalog(spark, dirA)
     assertSameRows(grown.hashes, full.hashes, "absorb-after-load audio hashes")
   }
 
@@ -281,6 +305,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareVideoCatalog(media, maxFrames = 8)
     val dir = tmp("videocat")
     full.save(dir)
+    Ops.loadVideoCatalog(spark, dir).save(dir)
     val loaded = Ops.loadVideoCatalog(spark, dir)
     assert(loaded.reliable, "a persisted video catalog is reliable by construction")
     assert(loaded.maxFrames == 8, "the sampling geometry is part of the artifact")
@@ -289,7 +314,8 @@ class PersistenceSpec extends AnyFunSuite {
     assertSameRows(loaded.dedup(inc), full.dedup(inc), "video dedup after load")
     val dirA = tmp("videocatA")
     Ops.prepareVideoCatalog(a, maxFrames = 8).save(dirA)
-    val grown = Ops.loadVideoCatalog(spark, dirA).absorb(b)
+    Ops.loadVideoCatalog(spark, dirA).absorb(b).save(dirA)
+    val grown = Ops.loadVideoCatalog(spark, dirA)
     assertSameRows(grown.frameHashes, full.frameHashes, "absorb-after-load video hashes")
   }
 
@@ -303,6 +329,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareMoments(li, "s_nationkey", x, y)
     val dir = tmp("moments")
     full.save(dir)
+    Ops.loadMoments(spark, dir).save(dir)
     val loaded = Ops.loadMoments(spark, dir)
     assert(loaded.groupCol == full.groupCol && loaded.reliable)
     assertSameRows(loaded.moments, full.moments, "moments sums")
@@ -312,7 +339,8 @@ class PersistenceSpec extends AnyFunSuite {
     // approximation contract
     val dirA = tmp("momentsA")
     Ops.prepareMoments(a, "s_nationkey", x, y).save(dirA)
-    val absorbed = Ops.loadMoments(spark, dirA).absorb(b, x, y)
+    Ops.loadMoments(spark, dirA).absorb(b, x, y).save(dirA)
+    val absorbed = Ops.loadMoments(spark, dirA)
     assertSameRows(absorbed.moments, full.moments, "absorb-after-load moments")
     assertSameRows(absorbed.regression, full.regression, "absorb-after-load regression")
   }
@@ -324,6 +352,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareSeasonal(ev, "event_type", "ts", col("value"))
     val dir = tmp("seasonal")
     full.save(dir)
+    Ops.loadSeasonal(spark, dir).save(dir)
     val loaded = Ops.loadSeasonal(spark, dir)
     assert(loaded.typeCol == full.typeCol && loaded.reliable)
     assertSameRows(loaded.cells, full.cells, "seasonal cells")
@@ -333,7 +362,8 @@ class PersistenceSpec extends AnyFunSuite {
       "seasonal scoring from loaded cells")
     val dirA = tmp("seasonalA")
     Ops.prepareSeasonal(a, "event_type", "ts", col("value")).save(dirA)
-    val absorbed = Ops.loadSeasonal(spark, dirA).absorb(b, "ts", col("value"))
+    Ops.loadSeasonal(spark, dirA).absorb(b, "ts", col("value")).save(dirA)
+    val absorbed = Ops.loadSeasonal(spark, dirA)
     assertSameRows(absorbed.cells, full.cells, "absorb-after-load cells")
   }
 
@@ -345,6 +375,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareCooc(e, "ok", "p")
     val dir = tmp("cooc")
     full.save(dir)
+    Ops.loadCooc(spark, dir).save(dir)
     val loaded = Ops.loadCooc(spark, dir)
     assert(loaded.nBaskets == full.nBaskets && loaded.reliable)
     assertSameRows(loaded.items, full.items, "cooc item counts")
@@ -356,7 +387,8 @@ class PersistenceSpec extends AnyFunSuite {
     // every basket wholly in one side)
     val dirA = tmp("coocA")
     Ops.prepareCooc(a, "ok", "p").save(dirA)
-    val absorbed = Ops.loadCooc(spark, dirA).absorb(b, "ok", "p")
+    Ops.loadCooc(spark, dirA).absorb(b, "ok", "p").save(dirA)
+    val absorbed = Ops.loadCooc(spark, dirA)
     assert(absorbed.nBaskets == full.nBaskets)
     assertSameRows(absorbed.items, full.items, "absorb-after-load item counts")
     assertSameRows(absorbed.pairs, full.pairs, "absorb-after-load pair counts")
@@ -373,6 +405,7 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareRollup(o, keys, v)
     val dir = tmp("rollup")
     full.save(dir)
+    Ops.loadRollup(spark, dir).save(dir)
     val loaded = Ops.loadRollup(spark, dir)
     assert(loaded.keys == full.keys && loaded.reliable)
     assertSameRows(loaded.cells, full.cells, "rollup cells")
@@ -381,7 +414,8 @@ class PersistenceSpec extends AnyFunSuite {
     // associative merges — exact algebra, not an approximation
     val dirA = tmp("rollupA")
     Ops.prepareRollup(a, keys, v).save(dirA)
-    val absorbed = Ops.loadRollup(spark, dirA).absorb(b, v)
+    Ops.loadRollup(spark, dirA).absorb(b, v).save(dirA)
+    val absorbed = Ops.loadRollup(spark, dirA)
     assertSameRows(absorbed.cells, full.cells, "absorb-after-load cells")
     assertSameRows(absorbed.serve, full.serve, "absorb-after-load serve")
     // serve ≡ the one-shot grouped aggregate with the decAvg shape
@@ -441,10 +475,11 @@ class PersistenceSpec extends AnyFunSuite {
     // durable round-trip + absorb-after-load ≡ full re-prepare
     val dir = tmp("quantiles")
     Ops.prepareQuantiles(a, grp, col("l_extendedprice"), 64.0).save(dir)
+    Ops.loadQuantiles(spark, dir).save(dir)
     val loaded = Ops.loadQuantiles(spark, dir)
     assert(loaded.group == grp && loaded.bucketWidth == 64.0 && loaded.reliable)
-    val grown = loaded.absorb(b, col("l_extendedprice"))
-    assertSameRows(grown.regs, full.regs, "absorb-after-load census")
+    loaded.absorb(b, col("l_extendedprice")).save(dir)
+    assertSameRows(Ops.loadQuantiles(spark, dir).regs, full.regs, "absorb-after-load census")
     // global (group-less) form round-trips the empty group list
     val dirG = tmp("quantilesG")
     Ops.prepareQuantiles(l, Nil, col("l_extendedprice"), 64.0).save(dirG)
@@ -478,9 +513,11 @@ class PersistenceSpec extends AnyFunSuite {
     // durable round-trip + absorb-after-load ≡ full re-prepare
     val dir = tmp("buckets")
     Ops.prepareBuckets(a, "bkt").save(dir)
+    Ops.loadBuckets(spark, dir).save(dir)
     val loaded = Ops.loadBuckets(spark, dir)
     assert(loaded.bucket == "bkt" && loaded.reliable)
-    assertSameRows(loaded.absorb(b).census, full.census, "absorb-after-load census")
+    loaded.absorb(b).save(dir)
+    assertSameRows(Ops.loadBuckets(spark, dir).census, full.census, "absorb-after-load census")
     // armWeights: exact census shares — positive, in (0, 1], sum ≈ 1,
     // and srmCheck accepts the measured split
     val w = full.armWeights
@@ -528,9 +565,11 @@ class PersistenceSpec extends AnyFunSuite {
     // durable round-trip + absorb-after-load ≡ full re-prepare
     val dir = tmp("calibration")
     Ops.prepareCalibration(a, col("sm"), col("y"), 10).save(dir)
+    Ops.loadCalibration(spark, dir).save(dir)
     val loaded = Ops.loadCalibration(spark, dir)
     assert(loaded.nBins == 10 && loaded.reliable)
-    assertSameRows(loaded.absorb(b, col("sm"), col("y")).census, full.census,
+    loaded.absorb(b, col("sm"), col("y")).save(dir)
+    assertSameRows(Ops.loadCalibration(spark, dir).census, full.census,
       "absorb-after-load census")
     // wrong-kind and missing-fmt paths fail fast
     val exK = intercept[IllegalArgumentException](Ops.loadBuckets(spark, dir))
@@ -552,13 +591,15 @@ class PersistenceSpec extends AnyFunSuite {
     val full = Ops.prepareActives(e, "user_id", "ts")
     val dir = tmp("actives")
     full.save(dir)
+    Ops.loadActives(spark, dir).save(dir)
     val loaded = Ops.loadActives(spark, dir)
     assert(loaded.reliable)
     assertSameRows(loaded.census, full.census, "actives census")
     // absorb after load ≡ full re-prepare
     val dirA = tmp("activesA")
     Ops.prepareActives(a, "user_id", "ts").save(dirA)
-    val absorbed = Ops.loadActives(spark, dirA).absorb(b, "user_id", "ts")
+    Ops.loadActives(spark, dirA).absorb(b, "user_id", "ts").save(dirA)
+    val absorbed = Ops.loadActives(spark, dirA)
     assertSameRows(absorbed.census, full.census, "absorb-after-load census")
     // the idempotence contract: re-absorbing an ALREADY-ABSORBED
     // increment — or an overlapping one — is a true no-op (set union)
@@ -569,6 +610,24 @@ class PersistenceSpec extends AnyFunSuite {
       "served rolling actives ≡ batch q141")
     assertSameRows(full.newVsReturning, e.newVsReturning("user_id", "ts"),
       "served new-vs-returning ≡ batch q153")
+  }
+
+  test("every versioned artifact refuses a meta without its format marker") {
+    import spark.implicits._
+    val loaders: Seq[(String, String => Any)] = Seq(
+      "rollup" -> (Ops.loadRollup(spark, _)),
+      "quantiles" -> (Ops.loadQuantiles(spark, _)),
+      "group_sequential" -> (Ops.loadGroupSequential(spark, _)),
+      "governance" -> (Ops.loadGovernance(spark, _)),
+      "calibration" -> (Ops.loadCalibration(spark, _)),
+      "buckets" -> (Ops.loadBuckets(spark, _)))
+    for ((kind, load) <- loaders) {
+      val dir = tmp(s"nofmt_$kind")
+      Seq(("kind", kind)).toDF("k", "v").coalesce(1).write.parquet(s"$dir/meta")
+      val ex = intercept[IllegalArgumentException](load(dir))
+      assert(ex.getMessage.contains("format"),
+        s"$kind: a fmt-less meta must fail with a format message (got ${ex.getMessage})")
+    }
   }
 
   test("loading the wrong artifact kind — or a missing meta — fails fast") {
