@@ -1,12 +1,15 @@
 package graft.data
 
+import java.io.IOException
+import java.util.UUID
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableInput}
 import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -35,7 +38,11 @@ import org.apache.spark.sql.types.StructType
   * unchanged. Writes go to an attempt-unique temp name and rename
   * into place on task success, so a task retry or speculative
   * duplicate never leaves a partially-written part file visible
-  * (either attempt's rename yields one complete file).
+  * (either attempt's rename yields one complete file). The parts are
+  * written into a sibling staging directory and moved into the target
+  * only once the whole write job has succeeded, so a frame that reads
+  * the directory it is written to keeps its input, and a failed write
+  * leaves the previous parts in place.
   */
 object AvroFiles {
 
@@ -52,8 +59,9 @@ object AvroFiles {
   }
 
   /** Write `df` as Avro container files under `dir`
-    * (`part-NNNNN.avro`, one per non-empty partition). Returns the
-    * writer schema JSON (derive-once, reuse for [[read]]).
+    * (`part-NNNNN.avro`, one per non-empty partition), replacing every
+    * part already there. Returns the writer schema JSON (derive-once,
+    * reuse for [[read]]).
     */
   def write(df: DataFrame, dir: String, recordName: String = "record"): String = {
     val avroJson = AvroSchemas.toAvroSchema(df.schema, recordName).toString
@@ -70,28 +78,21 @@ object AvroFiles {
               syncInterval: Option[Int] = None): Unit = {
     val st = df.schema
     val hc = df.sparkSession.sparkContext.hadoopConfiguration
-    // job init: whole-directory-overwrite semantics require clearing
-    // EVERY previous part, not just same-named ones — a re-write with
-    // fewer partitions would otherwise leave stale part files that
-    // read() silently mixes into the new data. Orphaned temp files
-    // from killed attempts of earlier jobs go too. Driver-side, one
-    // listing — per-task renames below stay untouched.
     val dirPath = new Path(dir)
     val dirFs = dirPath.getFileSystem(hc)
-    if (dirFs.exists(dirPath)) {
-      val stale = Option(dirFs.globStatus(new Path(dir, "part-*.avro"))).getOrElse(Array.empty) ++
-        Option(dirFs.globStatus(new Path(dir, ".part-*.avro.tmp"))).getOrElse(Array.empty)
-      stale.foreach(s => dirFs.delete(s.getPath, false))
-    }
+    // job output goes to a sibling staging directory, so `df` may read
+    // `dir` itself: nothing under `dir` changes until the job succeeds
+    val staging = dirPath.suffix(s".staging-${UUID.randomUUID()}")
+    val stagingDir = staging.toString
     val entries = confEntries(hc)
     val counts = df.rdd.mapPartitionsWithIndex { (i, rows) =>
       if (rows.isEmpty) Iterator.empty
       else {
         val conf = rebuildConf(entries)
         val schema = new Schema.Parser().parse(avroSchemaJson)
-        val finalPath = new Path(dir, f"part-$i%05d.avro")
+        val finalPath = new Path(stagingDir, f"part-$i%05d.avro")
         val attempt = Option(TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L)
-        val tmpPath = new Path(dir, f".part-$i%05d-$attempt%d.avro.tmp")
+        val tmpPath = new Path(stagingDir, f".part-$i%05d-$attempt%d.avro.tmp")
         val fs = finalPath.getFileSystem(conf)
         val out = fs.create(tmpPath, true)
         val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
@@ -101,18 +102,36 @@ object AvroFiles {
         try rows.foreach { row =>
           writer.append(AvroBinary.rowToRecord(row, st, schema)); n += 1
         } finally writer.close()
-        // task commit: job semantics are whole-directory overwrite, so
-        // clear any previous part and move the complete temp file in;
-        // if a concurrent speculative attempt won the rename race, drop
-        // this attempt's output (both are complete files)
+        // task commit: move the complete temp file in; if a concurrent
+        // speculative attempt won the rename race, drop this attempt's
+        // output (both are complete files)
         if (fs.exists(finalPath)) fs.delete(finalPath, false)
         if (!fs.rename(tmpPath, finalPath)) fs.delete(tmpPath, false)
         Iterator.single(n)
       }
     }
-    counts.count() // materialize the write
+    try counts.count() // materialize the write
+    catch { case e: Throwable => dirFs.delete(staging, true); throw e }
+    // job commit: whole-directory-overwrite semantics require clearing
+    // EVERY previous part, not just same-named ones — a re-write with
+    // fewer partitions would otherwise leave stale part files that
+    // read() silently mixes into the new data. Orphaned temp files
+    // from killed attempts of earlier jobs go too. Other files in
+    // `dir` stay.
+    dirFs.mkdirs(dirPath)
+    (glob(dirFs, new Path(dir, "part-*.avro")) ++ glob(dirFs, new Path(dir, ".part-*.avro.tmp")))
+      .foreach(s => dirFs.delete(s.getPath, false))
+    glob(dirFs, new Path(staging, "part-*.avro")).foreach { s =>
+      val to = new Path(dirPath, s.getPath.getName)
+      if (!dirFs.rename(s.getPath, to))
+        throw new IOException(s"writeAs: could not move ${s.getPath} to $to")
+    }
+    dirFs.delete(staging, true)
     ()
   }
+
+  private def glob(fs: FileSystem, pattern: Path): Array[FileStatus] =
+    Option(fs.globStatus(pattern)).getOrElse(Array.empty)
 
   /** Read Avro container files under `dir` into a typed DataFrame.
     * `avroSchemaJson` is the *reader* schema; each file's own writer
@@ -131,7 +150,7 @@ object AvroFiles {
     val hc = spark.sparkContext.hadoopConfiguration
     val globPath = new Path(dir, "*.avro")
     val fs = globPath.getFileSystem(hc)
-    val statuses = Option(fs.globStatus(globPath)).map(_.toSeq).getOrElse(Seq.empty)
+    val statuses = glob(fs, globPath).toSeq
     if (statuses.isEmpty)
       throw new IllegalArgumentException(s"no .avro container files found under $dir")
     val splits: Seq[(String, Long, Long)] = statuses.sortBy(_.getPath.toString).flatMap { s =>

@@ -92,6 +92,35 @@ class AvroFilesSpec extends AnyFunSuite {
       "read must return only the re-written data")
   }
 
+  test("writeAs over the directory its own frame reads keeps the data") {
+    val dir = tmp()
+    val schemaJson = AvroFiles.write(
+      spark.range(300).select(col("id").as("k")).repartition(3), dir, "Self")
+    // the frame reads `dir` lazily, so the old parts must still be there
+    // when the write job reads them
+    val doubled = AvroFiles.read(spark, dir, schemaJson).select((col("k") * 2).as("k"))
+    AvroFiles.writeAs(doubled, dir, schemaJson)
+    val back = AvroFiles.read(spark, dir, schemaJson)
+    assert(back.count() == 300)
+    assert(back.agg(max(col("k"))).head().getLong(0) == 598L)
+    assert(!new java.io.File(dir).getParentFile.list().exists(_.startsWith(
+      new java.io.File(dir).getName + ".staging-")), "staging directory left behind")
+  }
+
+  test("a failed writeAs leaves the previous parts in place") {
+    val dir = tmp()
+    val schemaJson = AvroFiles.write(
+      spark.range(100).select(col("id").as("k")).repartition(2), dir, "Fail")
+    val failing = spark.range(10)
+      .select(coalesce(expr("raise_error('planted write failure')").cast("long"), col("id")).as("k"))
+    val e = intercept[Exception](AvroFiles.writeAs(failing, dir, schemaJson))
+    assert(e.getMessage.contains("planted write failure"))
+    val back = AvroFiles.read(spark, dir, schemaJson)
+    assert(back.count() == 100 && back.agg(max(col("k"))).head().getLong(0) == 99L)
+    assert(!new java.io.File(dir).getParentFile.list().exists(_.startsWith(
+      new java.io.File(dir).getName + ".staging-")), "staging directory left behind")
+  }
+
   test("early-terminated read (limit) still returns correct rows") {
     // exercises the close-once path: a limit stops consuming the
     // iterator before exhaustion; the task-completion listener closes

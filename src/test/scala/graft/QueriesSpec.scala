@@ -16,8 +16,9 @@ object SparkTestSession {
 }
 
 /** Smoke + shape checks for every SparkEntry query at sf0.001.
-  * Value-level correctness is covered by the DuckDB oracle gate
-  * (tools/prevalidate.py locally, driver's CORRECTNESS_r{N} in CI).
+  * Value-level correctness is covered by the DuckDB oracle gate:
+  * `graft.Verify` dumps every result and `tools/prevalidate.py`
+  * compares it with DuckDB.
   */
 class QueriesSpec extends AnyFunSuite {
   import SparkTestSession._
