@@ -102,12 +102,20 @@ object Ops {
     * `checkpointDir`, reliable `checkpoint` into it (HDFS/S3 on a real
     * cluster — survives executor loss, the right mode for a 100 TB
     * run); without, `localCheckpoint` (executor-local blocks — faster,
-    * fine for local mode and short-lived jobs).
+    * fine for local mode and short-lived jobs). The context's
+    * checkpoint directory is process-global, and each
+    * `setCheckpointDir` makes a fresh `<dir>/<uuid>`, so it is pointed
+    * at `dir` only when it is not already under it.
     */
   private[graft] def lineageBreaker(checkpointDir: Option[String]): DataFrame => DataFrame =
     checkpointDir match {
       case Some(dir) => df => {
-        df.sparkSession.sparkContext.setCheckpointDir(dir)
+        import org.apache.hadoop.fs.Path
+        val sc = df.sparkSession.sparkContext
+        val want = new Path(dir)
+        val qualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+        if (!sc.getCheckpointDir.exists(d => new Path(d).getParent == qualified))
+          sc.setCheckpointDir(dir)
         df.checkpoint(eager = true)
       }
       case None => df => df.localCheckpoint(eager = true)

@@ -29,9 +29,14 @@ import org.apache.spark.sql.types._
   *    missing record fields take their declared default, including
   *    record/array/map defaults, at any nesting depth.
   *
-  * Everything is built from codegen'd Catalyst expressions (`from_json`
-  * for the tree shape, `when`/`cast`/HOFs for per-position semantics) —
-  * no UDFs, one projection, fully distributed.
+  * Everything is built from Catalyst expressions (`from_json` for the
+  * tree shape, `when`/`cast`/HOFs for per-position semantics) — no
+  * UDFs, fully distributed. Each JSON text is parsed once per row:
+  * every parse read more than once is bound to one value by [[let]],
+  * because Catalyst would otherwise copy it into each reference
+  * (`OptimizeJsonExprs` turns each field read of a parse into its own
+  * pruned parse, and subexpression elimination does not look inside
+  * CASE WHEN branches).
   *
   * Strictness: [[FailFast]] raises a descriptive error on the first
   * invalid datum (the reference's MonadError behavior); [[Permissive]]
@@ -122,22 +127,31 @@ object AvroJson {
     val pt = parseType(schema, Map.empty, maxRecursionDepth, unions, binary).getOrElse(
       throw new IllegalArgumentException(
         s"schema ${schema.getFullName} prunes to nothing at depth $maxRecursionDepth"))
-    val opts = mode match {
-      case FailFast   => Map("mode" -> "FAILFAST")
-      case Permissive => Map.empty[String, String]
+    val filled = let(from_json(col(jsonCol), pt, parseOpts(mode))) { parsed =>
+      val typed = rebuild(parsed, schema, Map.empty, maxRecursionDepth, mode, unions, binary)
+      fillDefaults(typed, schema, Map.empty, maxRecursionDepth)
     }
-    val parsed = from_json(col(jsonCol), pt, opts)
-    val typed  = rebuild(parsed, schema, Map.empty, maxRecursionDepth, mode, unions, binary)
-    val filled = fillDefaults(typed, schema, Map.empty, maxRecursionDepth)
     val result = records match {
       case Inclusive => filled
       case Strict =>
+        // the undeclared-field check runs first; the typed parse only
+        // in its no-violation branch, so its errors never mask it
         val target = targetType(schema, Map.empty, maxRecursionDepth)
-        val v = strictViolation(col(jsonCol), schema, Map.empty, maxRecursionDepth, unions)
-        when(v.isNull, filled.cast(target)).otherwise(err(mode, v, target))
+        let(strictViolation(col(jsonCol), schema, Map.empty, maxRecursionDepth, unions)) { v =>
+          when(v.isNull, filled.cast(target)).otherwise(err(mode, v, target))
+        }
     }
     df.withColumn(out, result)
   }
+
+  /** `body` over `e` evaluated once per row: a lambda variable is
+    * opaque to the optimizer, so it neither splits `e` per field read
+    * nor copies it into each CASE WHEN branch. */
+  private def let(e: Column)(body: Column => Column): Column =
+    element_at(transform(array(e), body), 1)
+
+  private def parseOpts(mode: Mode): Map[String, String] =
+    if (mode == FailFast) Map("mode" -> "FAILFAST") else Map.empty
 
   // ---- stage 1: parse shape ------------------------------------------------
   // `from_json` target where every position whose JSON encoding needs
@@ -411,14 +425,15 @@ object AvroJson {
                              binary: BinaryEncoding): Column = {
     val target = targetType(b, seen, maxDepth)
     val name = branchName(b)
-    val m = from_json(c, MapType(StringType, StringType))
-    val key = map_keys(m).getItem(0)
-    val msg = concat(lit(s"UnionResolutionError: expected {$name}, got "),
-      coalesce(key, lit("<non-object datum>")))
-    when(c.isNull, lit(null).cast(target))
-      .when(m.isNotNull && size(map_keys(m)) === 1 && key === name,
-        branchValue(element_at(m, lit(name)), b, seen, maxDepth, mode, unions, binary).cast(target))
-      .otherwise(err(mode, msg, target))
+    let(from_json(c, MapType(StringType, StringType))) { m =>
+      val key = map_keys(m).getItem(0)
+      val msg = concat(lit(s"UnionResolutionError: expected {$name}, got "),
+        coalesce(key, lit("<non-object datum>")))
+      when(c.isNull, lit(null).cast(target))
+        .when(m.isNotNull && size(map_keys(m)) === 1 && key === name,
+          branchValue(element_at(m, lit(name)), b, seen, maxDepth, mode, unions, binary).cast(target))
+        .otherwise(err(mode, msg, target))
+    }
   }
 
   /** Decode a raw `{"branchName": value}` wrapper into the memberN
@@ -434,22 +449,23 @@ object AvroJson {
                        unions: UnionEncoding, binary: BinaryEncoding): Column = {
     val target = targetType(u, seen, maxDepth)
     val names  = branches.map(branchName)
-    val m      = from_json(c, MapType(StringType, StringType))
-    val key    = map_keys(m).getItem(0)
-    val members = branches.zipWithIndex.flatMap { case (b, i) =>
-      AvroSchemas.convert(b, seen, maxDepth).map { _ =>
-        when(key === branchName(b),
-          branchValue(element_at(m, lit(branchName(b))), b, seen, maxDepth, mode, unions, binary))
-          .as(s"member$i")
+    let(from_json(c, MapType(StringType, StringType))) { m =>
+      val key = map_keys(m).getItem(0)
+      val members = branches.zipWithIndex.flatMap { case (b, i) =>
+        AvroSchemas.convert(b, seen, maxDepth).map { _ =>
+          when(key === branchName(b),
+            branchValue(element_at(m, lit(branchName(b))), b, seen, maxDepth, mode, unions, binary))
+            .as(s"member$i")
+        }
       }
+      val msg = concat(
+        lit(s"UnionResolutionError: expected one of ${names.mkString("{", ", ", "}")}, got "),
+        coalesce(key, lit("<non-object datum>")))
+      when(c.isNull, lit(null).cast(target))
+        .when(m.isNotNull && size(map_keys(m)) === 1 && key.isInCollection(names),
+          struct(members: _*).cast(target))
+        .otherwise(err(mode, msg, target))
     }
-    val msg = concat(
-      lit(s"UnionResolutionError: expected one of ${names.mkString("{", ", ", "}")}, got "),
-      coalesce(key, lit("<non-object datum>")))
-    when(c.isNull, lit(null).cast(target))
-      .when(m.isNotNull && size(map_keys(m)) === 1 && key.isInCollection(names),
-        struct(members: _*).cast(target))
-      .otherwise(err(mode, msg, target))
   }
 
   /** Decode one union branch from its captured JSON text. */
@@ -478,11 +494,7 @@ object AvroJson {
         }
       case RECORD | ARRAY | MAP =>
         val pt = parseType(b, seen, maxDepth, unions, binary).getOrElse(NullType)
-        val opts = mode match {
-          case FailFast   => Map("mode" -> "FAILFAST")
-          case Permissive => Map.empty[String, String]
-        }
-        rebuild(from_json(v, pt, opts), b, seen, maxDepth, mode, unions, binary)
+        let(from_json(v, pt, parseOpts(mode)))(rebuild(_, b, seen, maxDepth, mode, unions, binary))
       case UNION | NULL => lit(null) // Avro forbids directly nested unions
     }
   }
@@ -516,26 +528,25 @@ object AvroJson {
                               maxDepth: Int, unions: UnionEncoding): Column = {
     import Schema.Type._
     val noViolation = lit(null).cast(StringType)
-    def firstOf(elems: Column, b: Schema): Column = {
-      val vs = filter(transform(elems, x => strictViolation(x, b, seen, maxDepth, unions)),
-        v => v.isNotNull)
-      when(size(vs) > 0, element_at(vs, 1))
-    }
+    def firstOf(elems: Column, b: Schema): Column =
+      get(filter(transform(elems, x => strictViolation(x, b, seen, maxDepth, unions)),
+        v => v.isNotNull), lit(0))
     s.getType match {
       case RECORD if seen.getOrElse(s.getFullName, 0) < maxDepth =>
         val inner = seen.updated(s.getFullName, seen.getOrElse(s.getFullName, 0) + 1)
         val declared = s.getFields.asScala.map(_.name()).toSeq
-        val m = from_json(c, MapType(StringType, StringType))
-        val unknown = filter(map_keys(m), k => !k.isInCollection(declared))
-        val childChecks = s.getFields.asScala.toSeq
-          .filter(f => containsRecord(f.schema(), inner, maxDepth))
-          .map(f => strictViolation(element_at(m, lit(f.name())), f.schema(), inner, maxDepth, unions))
-        val childV = if (childChecks.isEmpty) noViolation else coalesce(childChecks: _*)
-        when(m.isNull, noViolation)
-          .when(size(unknown) > 0,
-            concat(lit("StrictModeError: unknown field '"), element_at(unknown, 1),
-              lit(s"' on record ${s.getFullName} (declared: ${declared.mkString(", ")})")))
-          .otherwise(childV)
+        let(from_json(c, MapType(StringType, StringType))) { m =>
+          val unknown = filter(map_keys(m), k => !k.isInCollection(declared))
+          val childChecks = s.getFields.asScala.toSeq
+            .filter(f => containsRecord(f.schema(), inner, maxDepth))
+            .map(f => strictViolation(element_at(m, lit(f.name())), f.schema(), inner, maxDepth, unions))
+          val childV = if (childChecks.isEmpty) noViolation else coalesce(childChecks: _*)
+          when(m.isNull, noViolation)
+            .when(size(unknown) > 0,
+              concat(lit("StrictModeError: unknown field '"), element_at(unknown, 1),
+                lit(s"' on record ${s.getFullName} (declared: ${declared.mkString(", ")})")))
+            .otherwise(childV)
+        }
       case ARRAY if containsRecord(s.getElementType, seen, maxDepth) =>
         firstOf(from_json(c, ArrayType(StringType)), s.getElementType)
       case MAP if containsRecord(s.getValueType, seen, maxDepth) =>
@@ -551,13 +562,14 @@ object AvroJson {
             val recBranches = branches.filter(containsRecord(_, seen, maxDepth))
             if (recBranches.isEmpty) noViolation
             else {
-              val m = from_json(c, MapType(StringType, StringType))
-              val key = map_keys(m).getItem(0)
-              val cases = recBranches.map(b =>
-                when(key === branchName(b),
-                  strictViolation(element_at(m, lit(branchName(b))), b, seen, maxDepth, unions)))
-              when(m.isNotNull && size(map_keys(m)) === 1,
-                coalesce(cases :+ noViolation: _*))
+              let(from_json(c, MapType(StringType, StringType))) { m =>
+                val key = map_keys(m).getItem(0)
+                val cases = recBranches.map(b =>
+                  when(key === branchName(b),
+                    strictViolation(element_at(m, lit(branchName(b))), b, seen, maxDepth, unions)))
+                when(m.isNotNull && size(map_keys(m)) === 1,
+                  coalesce(cases :+ noViolation: _*))
+              }
             }
         }
       case _ => noViolation

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *    (`data/avro/AvroGenericInteropFAlgebras.scala`).
   *  - Anglerfish `data/avro/AvroJsonFAlgebras.scala` decodes JSON
   *    datums against an Avro schema with default-value support; here
-  *    that is `decodeJson` = codegen'd `from_json` against the
-  *    converted schema + `withDefaults` null-filling.
+  *    `decodeJson` delegates to [[AvroJson.decode]] (union wrappers,
+  *    enum/fixed validation, recursive defaults, one parse per datum).
   *  - Recursive schemas (supported by the reference through `Fix`)
   *    cannot exist in a finite `StructType`; they are unrolled to
   *    `maxRecursionDepth` and pruned below it, mirroring

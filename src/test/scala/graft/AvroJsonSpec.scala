@@ -258,4 +258,112 @@ class AvroJsonSpec extends AnyFunSuite {
     assert(rows(0).getLong(0) == 1 && rows(0).getDouble(1) == 9.0)
     assert(rows(1).getDouble(1) == 2.5)
   }
+
+  // ---- one parse per JSON text ----------------------------------------------
+
+  /** The ingest benchmark's JSON schema: a nested record, an array, a
+    * map, a multi-branch union, an enum, a decimal and a default. */
+  private val clickSchema =
+    """{"type": "record", "name": "Click", "namespace": "perfbench", "fields": [
+      |{"name": "id", "type": "long"},
+      |{"name": "kind", "type": {"type": "enum", "name": "Kind", "symbols": ["CLICK", "VIEW", "BUY", "SHARE"]}},
+      |{"name": "amount", "type": {"type": "bytes", "logicalType": "decimal", "precision": 12, "scale": 2}},
+      |{"name": "user", "type": {"type": "record", "name": "User", "fields": [
+      |  {"name": "name", "type": "string"}, {"name": "score", "type": "double"}]}},
+      |{"name": "tags", "type": {"type": "array", "items": "string"}},
+      |{"name": "attrs", "type": {"type": "map", "values": "long"}},
+      |{"name": "payload", "type": ["null", "long", "string"]},
+      |{"name": "note", "type": ["null", "string"], "default": null}]}""".stripMargin
+
+  private def click(id: String, payload: String, extra: String = ""): String =
+    s"""{"id": $id, "kind": "VIEW", "amount": 12.34, "user": {"name": "u", "score": 0.5},""" +
+      s""" "tags": ["t1", "t2"], "attrs": {"a": 3}, "payload": $payload$extra}"""
+
+  /** Records nested in an array and in a union branch: the Strict walk's
+    * per-element check and the union decoder's record re-parse. */
+  private val orderSchema =
+    """{"type": "record", "name": "Order", "fields": [
+      |{"name": "id", "type": "long"},
+      |{"name": "lines", "type": {"type": "array", "items": {"type": "record", "name": "Line",
+      |  "fields": [{"name": "sku", "type": "string"}, {"name": "qty", "type": "int"}]}}},
+      |{"name": "ship", "type": ["null", "string",
+      |  {"type": "record", "name": "Addr", "fields": [{"name": "city", "type": "string"}]}]}]}""".stripMargin
+
+  private def jsonParses(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.map(_.collect {
+        case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+      }.size).sum
+    }.sum
+
+  /** Parse sites per schema: Strict adds one key-map parse per record
+    * node, one array parse per array of records and one wrapper parse
+    * per union with a record branch. */
+  for ((name, schema, datums, lax, strict) <- Seq(
+      ("Click", clickSchema,
+        Seq(click("1", """{"long": 7}"""), click("2", "null"),
+          click("3", """{"string": "s"}""", """, "extra": 1""")), 2, 4),
+      ("Order", orderSchema,
+        Seq("""{"id": 1, "lines": [{"sku": "a", "qty": 2}], "ship": {"Addr": {"city": "x"}}}""",
+          """{"id": 2, "lines": [], "ship": {"string": "pickup"}}""",
+          """{"id": 3, "lines": [{"sku": "b", "qty": 1, "extra": 0}], "ship": null}"""), 3, 8));
+      mode <- Seq(AvroJson.Permissive, AvroJson.FailFast);
+      records <- Seq(AvroJson.Inclusive, AvroJson.Strict)) {
+    test(s"$name decode parses each JSON text once ($mode, $records)") {
+      // an RDD-backed frame: a local Seq's projection is folded into
+      // its LocalRelation while optimizing, leaving no parse to count
+      def frame(js: Seq[String]) = spark.sparkContext.parallelize(js, 1).toDF("j")
+      val df = frame(datums)
+      val decoded = AvroJson.decode(df, "j", schema, mode = mode, records = records)
+      val bound = if (records == AvroJson.Strict) strict else lax
+      // the two query shapes the ingest benchmark runs: a null count
+      // and a noop write of the decoded frame
+      val counted = decoded.filter($"decoded".isNull).groupBy().count()
+      assert(jsonParses(counted) <= bound, counted.queryExecution.optimizedPlan.toString)
+      assert(jsonParses(decoded) <= bound, decoded.queryExecution.optimizedPlan.toString)
+      (mode, records) match {
+        case (AvroJson.Permissive, AvroJson.Strict) =>
+          assert(counted.head().getLong(0) == 1, "exactly the datum with the extra field nulls")
+        case (AvroJson.FailFast, AvroJson.Strict) =>
+          failsWith("StrictModeError") { decoded.write.format("noop").mode("overwrite").save() }
+          // the benchmark's FailFast pass: only the conforming datums
+          AvroJson.decode(frame(datums.init), "j", schema, mode = mode, records = records)
+            .write.format("noop").mode("overwrite").save()
+        case _ =>
+          assert(counted.head().getLong(0) == 0)
+      }
+    }
+  }
+
+  test("Order decode: array-of-record and record-branch values survive the binding") {
+    val rows = AvroJson.decode(Seq(
+      """{"id": 1, "lines": [{"sku": "a", "qty": 2}], "ship": {"Addr": {"city": "x"}}}""",
+      """{"id": 2, "lines": [], "ship": {"string": "pickup"}}""").toDF("j"), "j", orderSchema,
+      records = AvroJson.Strict).select("decoded.*").orderBy("id").collect()
+    assert(rows(0).getSeq[org.apache.spark.sql.Row](1).map(r => (r.getString(0), r.getInt(1))) ==
+      Seq(("a", 2)))
+    assert(rows(0).getStruct(2).isNullAt(0) && rows(0).getStruct(2).getStruct(1).getString(0) == "x")
+    assert(rows(1).getSeq[org.apache.spark.sql.Row](1).isEmpty)
+    assert(rows(1).getStruct(2).getString(0) == "pickup" && rows(1).getStruct(2).isNullAt(1))
+  }
+
+  test("Strict checks undeclared fields before the typed parse") {
+    // "id" cannot parse as a long AND "extra" is undeclared: the Strict
+    // error must win, as it would if the typed parse never ran
+    val bad = Seq(click("\"x\"", "null", """, "extra": 1""")).toDF("j")
+    failsWith("StrictModeError") {
+      AvroJson.decode(bad, "j", clickSchema, records = AvroJson.Strict)
+        .write.format("noop").mode("overwrite").save()
+    }
+    val r = AvroJson.decode(bad, "j", clickSchema, mode = AvroJson.Permissive,
+      records = AvroJson.Strict).select("decoded").collect()
+    assert(r.length == 1 && r(0).isNullAt(0))
+  }
+
+  test("an unknown union branch still raises UnionResolutionError under Strict") {
+    failsWith("UnionResolutionError") {
+      AvroJson.decode(Seq(click("1", """{"double": 1.5}""")).toDF("j"), "j", clickSchema,
+        records = AvroJson.Strict).write.format("noop").mode("overwrite").save()
+    }
+  }
 }

@@ -343,6 +343,21 @@ class OpsApiSpec extends AnyFunSuite {
         checkpointDir = Some(dir)).collect().toSeq.map(_.toString))
   }
 
+  test("repeated reliable checkpoints into one dir share one checkpoint directory") {
+    // each setCheckpointDir makes a fresh <dir>/<uuid>, so re-setting
+    // it per checkpoint would leave one directory per call
+    val dir = java.nio.file.Files.createTempDirectory("graft_ck_once").toFile
+    def pairs(): Set[String] = t.documents
+      .minhashLshPairs("doc_id", "text", 0.5, checkpointDir = Some(dir.toString))
+      .collect().map(_.toString).toSet
+    val first = pairs()
+    val ckDir = spark.sparkContext.getCheckpointDir
+    assert(pairs() == first && first.nonEmpty)
+    assert(spark.sparkContext.getCheckpointDir == ckDir)
+    val subdirs = dir.listFiles().filter(_.isDirectory).map(_.getName)
+    assert(subdirs.length == 1, subdirs.mkString(", "))
+  }
+
   test("embeddingNearDups: fewer sign bits → coarser blocks → superset of pairs") {
     graft.functions.GraftFunctions.register(spark)
     // per-table codes share a prefix (weights depend on (table, bit,
