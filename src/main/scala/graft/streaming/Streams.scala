@@ -2,16 +2,68 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.language.reflectiveCalls
 
-/** Structured Streaming pipelines mirroring the batch semantics of
-  * q22 (sessionize) and q23 (time buckets) — SURVEY.md §2 streaming
-  * rows. Same engine, same plans: a stream is just an unbounded
-  * DataFrame here, so the windowed agg below compiles to the same
-  * tungsten agg as the batch query plus watermark-driven state
-  * eviction (bounded state at 100 TB/day ingest).
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+
+import graft.api.Ops
+import graft.api.Ops.GraftDataFrameOps
+import graft.operators.Multimodal.{MediaRecord, mediaEncoder}
+import graft.operators.Similarity.PreparedIvfPq
+
+/** Structured Streaming pipelines (SURVEY.md §2 streaming rows). A
+  * stream is an unbounded DataFrame here, so the plain plans
+  * ([[windowAgg]], [[intervalJoin]], [[dedup]], the decoders) compile
+  * to the same operators as their batch queries (q23, q39, q31) plus
+  * watermark-driven state eviction, and the `flatMapGroupsWithState`
+  * streams ([[sessionize]] for q22, [[packStream]], [[funnelStream]]
+  * and the in-order series streams) keep per-key state in Spark's
+  * state store.
+  *
+  * Most other streams serve a prepared artifact (an index, catalog or
+  * census built by an `Ops.prepare…` call, or loaded from a saved
+  * one) once per micro-batch, through `foreachBatch`, in one of two
+  * shapes:
+  *
+  *  - '''Per trigger, against frozen inputs''' ([[eachTrigger]]): each
+  *    trigger's batch runs the batch operator against the artifact or
+  *    a stable source-backed frame, and the sink receives the result.
+  *    Nothing carries over between triggers, so the trigger split
+  *    cannot change any output row. A frozen frame is re-read per
+  *    trigger: materialize a derived one to parquet first. Statistics
+  *    over one trigger are only as good as the trigger's size: size
+  *    triggers (or window upstream) so the comparison means something.
+  *  - '''Absorbing ingest''' ([[IngestLoop]], started by [[ingest]]):
+  *    each trigger is judged against the current artifact, the
+  *    survivors absorb into it (every absorb checkpoints through the
+  *    stream's `checkpointDir`, so the artifact's plan stays flat over
+  *    unbounded triggers), and the sink receives the survivors or a
+  *    readout plus the grown artifact. Trigger N therefore equals the
+  *    batch operator over union(triggers 1..N). Absorbs add state, so
+  *    the loop guards replays: a foreachBatch retry of the last
+  *    absorbed batchId re-emits from the pre-absorb artifact without
+  *    absorbing again, and a lower batchId fails loudly (the
+  *    checkpoint was wiped while the in-memory artifact survived).
+  *    Across restarts the in-memory artifact dies with the driver:
+  *    resume from the artifact the sink last saved and a fresh
+  *    checkpoint. The SCD streams rebuild rather than add, so a retry
+  *    re-applies from the pre-apply state instead ([[ReapplyLoop]]).
+  *
+  * The reliability rule, checked once by [[requireReliable]]: an
+  * artifact whose frames a stream holds across triggers must be built
+  * with a reliable `checkpointDir` (`prepare…(..., checkpointDir =
+  * Some(dir))`) or loaded from a saved artifact. localCheckpoint
+  * blocks live on executors, so one executor loss mid-stream would
+  * fail every later trigger with no way to recompute them; the check
+  * turns that outage into a setup error. Driver-held artifacts (BPE
+  * merges, a WordPiece vocab) have no executor-resident state and are
+  * exempt, and the governance and group-sequential ingest streams
+  * build their own state, so they take an optional `checkpointDir`.
+  *
+  * The three sketch streams persist their running state themselves
+  * ([[SnapshotStore]]).
   */
 object Streams {
 
@@ -32,6 +84,38 @@ object Streams {
   /** Microseconds since epoch incl. the sub-millisecond fraction. */
   private def micros(t: Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  /** The one start of a per-trigger stream: `handle(batch, batchId)`
+    * runs on every micro-batch.
+    */
+  private def eachTrigger(stream: DataFrame)(handle: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream.foreachBatch(handle).outputMode("update").start()
+
+  /** [[eachTrigger]] for the common shape: the sink receives `out(batch)`. */
+  private def eachTrigger(stream: DataFrame, sink: DataFrame => Unit)(
+      out: DataFrame => DataFrame): StreamingQuery =
+    eachTrigger(stream)((batch, _) => sink(out(batch)))
+
+  /** The one start of an absorbing stream: an [[IngestLoop]] from `init`. */
+  private def ingest[C](stream: DataFrame, init: C)(
+      dedup: (C, DataFrame) => DataFrame, absorb: (C, DataFrame) => C,
+      sink: (DataFrame, C) => Unit): StreamingQuery =
+    eachTrigger(stream)(new IngestLoop[DataFrame, C](init, dedup, absorb, sink).handle)
+
+  /** Every frame-backed artifact has a `reliable` field; they share no trait. */
+  private type Reliable = { def reliable: Boolean }
+
+  /** The reliability rule of the object doc, for `stream` serving
+    * `artifact` (built by `prepare`).
+    */
+  private def requireReliable(stream: String, prepare: String, artifact: Reliable): Unit =
+    require(artifact.reliable,
+      s"$stream needs a ${artifact.getClass.getSimpleName} built with a reliable " +
+        s"checkpointDir ($prepare(..., checkpointDir = Some(dir))) or loaded from a " +
+        "saved artifact: localCheckpoint blocks do not survive executor loss across " +
+        "a long-lived stream")
+
+  private def asMedia(batch: DataFrame): Dataset[MediaRecord] = batch.as[MediaRecord](mediaEncoder)
 
   /** Tumbling 5-minute event-time window aggregation with a 10-minute
     * watermark (same bucket alignment as batch q23: epoch-based).
@@ -144,7 +228,7 @@ object Streams {
     * half, [[decodeKafkaAvro]], is source-agnostic and spec-verified
     * against the batch path with a stand-in source).
     */
-  def kafkaAvroSource(spark: org.apache.spark.sql.SparkSession,
+  def kafkaAvroSource(spark: SparkSession,
                       cfg: KafkaSourceConfig,
                       provider: graft.data.AvroRegistry.SchemaProvider,
                       readerSchemaJson: String,
@@ -204,7 +288,6 @@ object Streams {
   def encodeKafkaAvro(df: DataFrame, schemaId: Int,
                       provider: graft.data.AvroRegistry.SchemaProvider,
                       keyCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val framed = graft.data.AvroRegistry.encodeFramed(
       df, schemaId, provider, keepCols = keyCol.toSeq)
     keyCol match {
@@ -225,8 +308,7 @@ object Streams {
                       schemaId: Int,
                       provider: graft.data.AvroRegistry.SchemaProvider,
                       checkpointLocation: String,
-                      keyCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+                      keyCol: Option[String] = None): DataStreamWriter[Row] = {
     require(checkpointLocation.nonEmpty,
       "toKafkaAvroSink: checkpointLocation must be non-empty (exactly-once progress)")
     encodeKafkaAvro(stream, schemaId, provider, keyCol)
@@ -252,60 +334,37 @@ object Streams {
   /** Streaming incremental dedup against a STATIC catalog —
     * `Ops.dedupAgainstCatalog`'s analogue for continuous ingest (the
     * "today's crawl vs the corpus" shape, running as the crawl
-    * arrives). The dedup itself needs a per-doc "no candidate
-    * matched" decision — an aggregation over stream-derived joins
-    * that Structured Streaming cannot run statelessly — so each
-    * micro-batch runs the BATCH operator inside `foreachBatch` (the
-    * standard pattern for arbitrary batch logic over triggers). What
-    * makes it a streaming-scale design is the catalog preparation:
+    * arrives), per trigger against the frozen catalog. The dedup
+    * needs a per-doc "no candidate matched" decision — an aggregation
+    * over stream-derived joins that Structured Streaming cannot run
+    * statelessly — so each micro-batch runs the BATCH operator.
     * [[graft.api.Ops.PreparedCatalog]] computes the catalog's
-    * fingerprints, shingles and LSH banding ONCE at query start
-    * (cached), so each trigger pays trigger-side expression work plus
-    * banded joins against the cached frames — never a catalog rescan,
-    * never trigger × catalog. Returns the started query; deduped
-    * survivors (all input columns) land in `sink` per micro-batch.
+    * fingerprints, shingles and LSH banding ONCE, so each trigger pays
+    * trigger-side expression work plus banded joins against the
+    * cached frames — never a catalog rescan, never trigger × catalog.
+    * Deduped survivors (all input columns) land in `sink` per
+    * micro-batch.
     */
   def dedupAgainstCatalogStream(docs: DataFrame, id: String, text: String,
-                                prepared: graft.api.Ops.PreparedCatalog,
+                                prepared: Ops.PreparedCatalog,
                                 threshold: Double,
-                                sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "dedupAgainstCatalogStream needs a PreparedCatalog built with a reliable " +
-        "checkpointDir (prepareCatalog(..., checkpointDir = Some(dir))) or " +
-        "loaded from a persisted catalog: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.dedupAgainstPrepared(batch, id, text, prepared, threshold))
-      }
-      .outputMode("update")
-      .start()
+                                sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("dedupAgainstCatalogStream", "prepareCatalog", prepared)
+    eachTrigger(docs, sink)(Ops.dedupAgainstPrepared(_, id, text, prepared, threshold))
   }
 
   /** Incremental embedding dedup of a vector stream against a static,
     * once-prepared catalog ([[graft.api.Ops.prepareVecCatalog]]) —
     * [[dedupAgainstCatalogStream]]'s vector-modality sibling: each
     * trigger codes its own vectors and joins the cached catalog
-    * code/vector frames (foreachBatch for the same reason — a per-row
-    * "no candidate matched" decision is an aggregation over
-    * stream-derived joins). Reliable prep REQUIRED: a
-    * localCheckpoint-pinned catalog dies with any executor mid-stream
-    * (the PreparedLm contract).
+    * code/vector frames.
     */
   def vecDedupAgainstCatalogStream(vecs: DataFrame, id: String, emb: String,
-                                   prepared: graft.api.Ops.PreparedVecCatalog,
+                                   prepared: Ops.PreparedVecCatalog,
                                    threshold: Double,
-                                   sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "vecDedupAgainstCatalogStream needs a PreparedVecCatalog built with a " +
-        "reliable checkpointDir (prepareVecCatalog(..., checkpointDir = Some(dir))): " +
-        "localCheckpoint blocks do not survive executor loss across a long-lived stream")
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.vecDedupAgainstPrepared(batch, id, emb, prepared, threshold))
-      }
-      .outputMode("update")
-      .start()
+                                   sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("vecDedupAgainstCatalogStream", "prepareVecCatalog", prepared)
+    eachTrigger(vecs, sink)(Ops.vecDedupAgainstPrepared(_, id, emb, prepared, threshold))
   }
 
   /** Incremental IMAGE dedup of a media stream against a once-
@@ -317,26 +376,14 @@ object Streams {
     * each trigger's surviving hash rows (kept = no catalog image
     * within maxHamming; undecodable rows kept but flagged
     * `decoded_real = false` — the quarantine contract of the batch
-    * form). Reliable prep REQUIRED, the PreparedLm rule.
+    * form).
     */
-  def imageDedupStream(media: Dataset[graft.operators.Multimodal.MediaRecord],
-                       prepared: graft.api.Ops.PreparedImageCatalog,
+  def imageDedupStream(media: Dataset[MediaRecord],
+                       prepared: Ops.PreparedImageCatalog,
                        sink: DataFrame => Unit,
-                       maxHamming: Int = 6, bands: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "imageDedupStream needs a PreparedImageCatalog built with a reliable " +
-        "checkpointDir (prepareImageCatalog(..., checkpointDir = Some(dir))) " +
-        "or loaded from a persisted catalog: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.toDF.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(prepared.dedup(
-          batch.as[graft.operators.Multimodal.MediaRecord], maxHamming, bands))
-      }
-      .outputMode("update")
-      .start()
+                       maxHamming: Int = 6, bands: Int = 8): StreamingQuery = {
+    requireReliable("imageDedupStream", "prepareImageCatalog", prepared)
+    eachTrigger(media.toDF(), sink)(b => prepared.dedup(asMedia(b), maxHamming, bands))
   }
 
   /** Incremental AUDIO dedup of a media stream against a once-
@@ -346,26 +393,14 @@ object Streams {
     * modality twin: the catalog decoded and fingerprinted once; each
     * trigger pays only its OWN decode plus the banded cross-side
     * hash join. Same quarantine contract (undecodable rows kept,
-    * flagged). Reliable prep REQUIRED, the PreparedLm rule.
+    * flagged).
     */
-  def audioDedupStream(media: Dataset[graft.operators.Multimodal.MediaRecord],
-                       prepared: graft.api.Ops.PreparedAudioCatalog,
+  def audioDedupStream(media: Dataset[MediaRecord],
+                       prepared: Ops.PreparedAudioCatalog,
                        sink: DataFrame => Unit,
-                       maxHamming: Int = 6, bands: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "audioDedupStream needs a PreparedAudioCatalog built with a reliable " +
-        "checkpointDir (prepareAudioCatalog(..., checkpointDir = Some(dir))) " +
-        "or loaded from a persisted catalog: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.toDF.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(prepared.dedup(
-          batch.as[graft.operators.Multimodal.MediaRecord], maxHamming, bands))
-      }
-      .outputMode("update")
-      .start()
+                       maxHamming: Int = 6, bands: Int = 8): StreamingQuery = {
+    requireReliable("audioDedupStream", "prepareAudioCatalog", prepared)
+    eachTrigger(media.toDF(), sink)(b => prepared.dedup(asMedia(b), maxHamming, bands))
   }
 
   /** Streaming SCD2 dimension maintenance (r12) — the streaming
@@ -385,11 +420,9 @@ object Streams {
     *
     * `sink` receives the updated [[graft.api.Ops.PreparedScd2]]
     * after each trigger that absorbed at least one extract — persist
-    * it (`.save`) or serve `scd2AsOf` reads from `.history`.
-    * Reliable prep REQUIRED (the PreparedLm rule), and every absorb
-    * checkpoints through `checkpointDir` so the history's plan stays
-    * flat across an unbounded trigger count (the chained-absorb
-    * discipline).
+    * it (`.save`) or serve `scd2AsOf` reads from `.history`. Every
+    * absorb checkpoints through `checkpointDir` so the history's plan
+    * stays flat across an unbounded trigger count.
     *
     * Scale shape: per trigger, ONE id-hash full-outer of the open-
     * version frame against that trigger's extract (the absorb
@@ -397,31 +430,17 @@ object Streams {
     * distinct-timestamp collect is bounded by extracts-per-trigger
     * (file-sized, not row-sized).
     *
-    * Replay discipline (absorbs ADD state — the [[IngestLoop]]
-    * rules): a foreachBatch RETRY of the last absorbed batchId
-    * re-absorbs from the retained PRE-absorb dimension (absorb is
-    * deterministic, so the rebuilt history is identical) and
-    * re-emits, instead of tripping the snapshot-order guard; a
-    * batchId strictly below it fails loudly. Across query restarts
-    * the in-memory dimension dies with the driver: resume from the
-    * sink's last persisted artifact + a fresh checkpoint — a stale
-    * checkpoint replaying an absorbed extract fails loudly through
-    * absorb's own order guard.
+    * Replays follow [[ReapplyLoop]]: a retry re-absorbs from the
+    * pre-absorb dimension instead of tripping the snapshot-order
+    * guard. A stale checkpoint replaying an absorbed extract after a
+    * restart fails loudly through absorb's own order guard.
     */
   def scd2Stream(extracts: DataFrame,
-                 prepared: graft.api.Ops.PreparedScd2,
+                 prepared: Ops.PreparedScd2,
                  checkpointDir: String,
-                 sink: graft.api.Ops.PreparedScd2 => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "scd2Stream needs a PreparedScd2 built with a reliable checkpointDir " +
-        "(prepareScd2(..., checkpointDir = Some(dir))) or loaded from a " +
-        "persisted artifact: localCheckpoint blocks do not survive executor " +
-        "loss across a long-lived stream")
-    val loop = new Scd2Loop(prepared, checkpointDir, sink)
-    extracts.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) => loop.handle(batch, batchId) }
-      .outputMode("update")
-      .start()
+                 sink: Ops.PreparedScd2 => Unit): StreamingQuery = {
+    requireReliable("scd2Stream", "prepareScd2", prepared)
+    eachTrigger(extracts)(scd2Loop(prepared, checkpointDir, sink).handle)
   }
 
   /** Streaming SCD Type-1 dimension maintenance (r12 — the
@@ -436,51 +455,65 @@ object Streams {
     * seq should be monotone with arrival. Every applied dimension
     * eagerly checkpoints into `checkpointDir` (reliable blocks — the
     * chained-apply plan stays flat over unbounded triggers and
-    * survives executor loss). Replay discipline ([[Scd1Loop]], the
-    * scd2 rules): a foreachBatch retry re-applies from the PRE-apply
-    * dimension (applyChanges is deterministic — identical result); a
-    * batchId regression fails loudly.
+    * survives executor loss). Replays follow [[ReapplyLoop]].
     */
   def cdcApplyStream(changes: DataFrame, initial: DataFrame,
                      key: String, opCol: String, seqCol: String,
                      checkpointDir: String,
-                     sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val loop = new Scd1Loop(initial, key, opCol, seqCol, checkpointDir, sink)
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) => loop.handle(batch, batchId) }
-      .outputMode("update")
-      .start()
-  }
+                     sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(changes)(scd1Loop(initial, key, opCol, seqCol, checkpointDir, sink).handle)
 
-  /** [[cdcApplyStream]]'s per-trigger engine, factored for direct
-    * spec coverage of the replay geometries (like [[Scd2Loop]]).
+  /** The SCD streams' per-trigger engine: `apply` folds each trigger
+    * into the running state and the sink receives the result. The
+    * applies are deterministic and rebuild rather than add, so a
+    * foreachBatch retry of the last batchId re-applies from the state
+    * before that apply and rebuilds the identical result. The state
+    * advances BEFORE the apply, so a crash mid-apply retries from the
+    * pre-apply state cleanly. An empty trigger changes nothing, and a
+    * batchId below the last applied one fails loudly: the checkpoint
+    * was wiped or swapped while the in-memory state survived.
     */
-  private[graft] final class Scd1Loop(
-      initial: DataFrame, key: String, opCol: String, seqCol: String,
-      checkpointDir: String, sink: DataFrame => Unit) {
-    private val ckp = graft.api.Ops.lineageBreaker(Some(checkpointDir))
+  private[graft] final class ReapplyLoop[S](
+      stream: String, init: S, apply: (S, DataFrame) => S, sink: S => Unit) {
     private var lastBatchId = -1L
-    private var before = ckp(initial)
-    private var current = before
+    private var before = init
+    private var current = init
     def handle(batch: DataFrame, batchId: Long): Unit = synchronized {
       if (batchId < lastBatchId)
         throw new IllegalStateException(
-          s"cdcApplyStream: batchId $batchId arrived after $lastBatchId was " +
+          s"$stream: batchId $batchId arrived after $lastBatchId was " +
             "applied — the checkpoint was wiped or swapped while the " +
             "in-memory dimension survived; restart from the sink's last " +
             "persisted dimension with a fresh checkpoint dir")
       if (!batch.isEmpty) {
-        // a retry re-applies from the PRE-apply dimension: applyChanges
-        // is deterministic, so the rebuilt dimension is identical;
-        // state advances BEFORE the apply so a mid-apply crash retries
-        // from `before` cleanly
         val base = if (batchId == lastBatchId) before else current
         if (batchId > lastBatchId) { before = current; lastBatchId = batchId }
-        import graft.api.Ops._
-        current = ckp(base.applyChanges(batch, key, opCol, seqCol))
+        current = apply(base, batch)
         sink(current)
       }
     }
+  }
+
+  /** [[cdcApplyStream]]'s loop: each trigger's changes apply to the
+    * dimension, which checkpoints into `checkpointDir`.
+    */
+  private[graft] def scd1Loop(initial: DataFrame, key: String, opCol: String, seqCol: String,
+                              checkpointDir: String, sink: DataFrame => Unit): ReapplyLoop[DataFrame] = {
+    val ckp = Ops.lineageBreaker(Some(checkpointDir))
+    new ReapplyLoop[DataFrame]("cdcApplyStream", ckp(initial),
+      (dim, batch) => ckp(dim.applyChanges(batch, key, opCol, seqCol)), sink)
+  }
+
+  /** [[scd2Stream]]'s loop: each trigger's extracts absorb in
+    * snapshot order.
+    */
+  private[graft] def scd2Loop(init: Ops.PreparedScd2, checkpointDir: String,
+                              sink: Ops.PreparedScd2 => Unit): ReapplyLoop[Ops.PreparedScd2] = {
+    val snap = col(init.snapCol)
+    new ReapplyLoop[Ops.PreparedScd2]("scd2Stream", init, (dim, batch) =>
+      batch.select(snap).distinct().orderBy(snap).collect().map(_.getTimestamp(0))
+        .foldLeft(dim)((d, ts) => d.absorb(batch.filter(snap === lit(ts)), Some(checkpointDir))),
+      sink)
   }
 
   /** Streaming seasonal-anomaly scoring (r12 — the q127 baseline
@@ -488,24 +521,15 @@ object Streams {
     * trigger's events score against the once-prepared (type, hour)
     * cell rationals via `PreparedSeasonal.against`; a (type, hour)
     * the baseline never saw yields NULL residuals — observable,
-    * never fabricated. Reliable prep required (the artifact's frames
-    * must outlive executors under a long-lived stream). The sink
-    * receives (scored trigger, batchId) — route |residual| over a
-    * threshold to the alert path.
+    * never fabricated. The sink receives (scored trigger, batchId) —
+    * route |residual| over a threshold to the alert path.
     */
   def seasonalScoreStream(events: DataFrame,
-                          prepared: graft.api.Ops.PreparedSeasonal,
-                          time: String, value: org.apache.spark.sql.Column,
-                          sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "seasonalScoreStream needs a PreparedSeasonal built with a reliable " +
-        "checkpointDir or loaded from a persisted artifact")
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(prepared.against(batch, time, value), batchId)
-      }
-      .outputMode("update")
-      .start()
+                          prepared: Ops.PreparedSeasonal,
+                          time: String, value: Column,
+                          sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    requireReliable("seasonalScoreStream", "prepareSeasonal", prepared)
+    eachTrigger(events)((batch, id) => sink(prepared.against(batch, time, value), id))
   }
 
   /** Per-trigger data-quality reports (r12 — [[graft.data.Quality]]
@@ -519,74 +543,29 @@ object Streams {
     */
   def dqStream(rows: DataFrame,
                constraints: Seq[graft.data.Quality.Constraint],
-               sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.data.Quality.checkConstraints(batch, constraints), batchId)
-      }
-      .outputMode("update")
-      .start()
+               sink: (DataFrame, Long) => Unit): StreamingQuery =
+    eachTrigger(rows)((batch, id) => sink(graft.data.Quality.checkConstraints(batch, constraints), id))
 
-  /** [[scd2Stream]]'s per-trigger engine, factored for direct spec
-    * coverage of the replay geometries (like [[IngestLoop]]).
-    */
-  private[graft] final class Scd2Loop(
-      init: graft.api.Ops.PreparedScd2,
-      checkpointDir: String,
-      sink: graft.api.Ops.PreparedScd2 => Unit) {
-    private val snapCol = init.snapCol
-    private var lastBatchId = -1L
-    private var before = init
-    private var current = init
-    def handle(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId < lastBatchId)
-        throw new IllegalStateException(
-          s"scd2Stream: batchId $batchId arrived after $lastBatchId was " +
-            "absorbed — the checkpoint was wiped or swapped while the " +
-            "in-memory dimension survived; restart from a persisted " +
-            "artifact with a fresh checkpoint dir")
-      val snaps = batch.select(col(snapCol)).distinct()
-        .orderBy(col(snapCol)).collect().map(_.getTimestamp(0))
-      if (snaps.nonEmpty) {
-        // a retry of the absorbed batch re-absorbs from the PRE-absorb
-        // dimension — absorb is deterministic, so the rebuilt history
-        // is identical and the order guard stays satisfied; state
-        // advances BEFORE the absorbs so a mid-absorb crash retries
-        // from `before` cleanly
-        var dim = if (batchId == lastBatchId) before else current
-        if (batchId > lastBatchId) { before = current; lastBatchId = batchId }
-        snaps.foreach { ts =>
-          dim = dim.absorb(batch.filter(col(snapCol) === lit(ts)),
-            Some(checkpointDir))
-        }
-        current = dim
-        sink(dim)
-      }
-    }
-  }
-
-  /** The shared per-trigger engine behind the four SELF-MAINTAINING
-    * ingest streams (r12): dedup the trigger against the CURRENT
-    * catalog, absorb the survivors, hand (survivors, grown catalog)
-    * to the sink. This is the production ingestion loop the static-
-    * catalog dedup streams approximate — there, a near-dup arriving
-    * two triggers after its original sails through because the
-    * catalog never learns; here the catalog grows with every trigger,
-    * so later triggers dedup against everything already ingested.
+  /** The per-trigger engine of every absorbing stream (see the object
+    * doc): dedup the trigger against the CURRENT artifact, absorb the
+    * survivors, hand (survivors, grown artifact) to the sink. For the
+    * catalogs this is the production ingestion loop the static-catalog
+    * dedup streams approximate — there, a near-dup arriving two
+    * triggers after its original sails through because the catalog
+    * never learns; here the catalog grows with every trigger, so later
+    * triggers dedup against everything already ingested.
     *
-    * Replay discipline (absorbs ADD state, so the quantile-stream
-    * rules apply, not the HLL max-merge ones): a foreachBatch RETRY
-    * of the last absorbed batchId re-runs the dedup against the
-    * PRE-absorb catalog and re-emits WITHOUT re-absorbing (absorbing
-    * twice would clash-guard-crash at best, double the catalog at
-    * worst); a batchId strictly below the last absorbed one fails
-    * loudly — that is never a legitimate retry, it means the
-    * checkpoint was wiped while the in-memory catalog survived.
-    * Across query RESTARTS the in-memory catalog dies with the
-    * driver: resume by loading the catalog the sink last persisted
-    * and a FRESH checkpoint dir; a stale checkpoint replaying an
-    * already-absorbed batch fails loudly through absorb's own id
-    * clash guard rather than double-absorbing.
+    * A foreachBatch RETRY of the last absorbed batchId re-runs the
+    * dedup against the PRE-absorb artifact and re-emits WITHOUT
+    * re-absorbing (absorbing twice would clash-guard-crash at best,
+    * double the artifact at worst); a batchId strictly below the last
+    * absorbed one fails loudly. Across query RESTARTS, a stale
+    * checkpoint replaying an already-absorbed batch fails loudly
+    * through the catalogs' own id clash guard; count and sum censuses
+    * (cooc, rollup, moments, quantiles, calibration) carry no id
+    * memory, so for them a stale replay cannot be detected in-engine
+    * and resuming with a FRESH source checkpoint is the caller's
+    * contract. Set-union censuses (actives) make every replay a no-op.
     *
     * Within-trigger mutual near-dups BOTH survive (neither is in the
     * catalog when the trigger arrives) — the same answer the batch
@@ -620,70 +599,44 @@ object Streams {
     }
   }
 
-  /** Self-maintaining TEXT dedup ingest (r12): each trigger dedups
-    * against the catalog of everything already ingested
-    * ([[graft.api.Ops.dedupAgainstCatalog]] semantics), then the
-    * survivors' fingerprints/shingles/bands ABSORB into the catalog
-    * — so a near-dup arriving any number of triggers after its
-    * original is dropped, which the frozen-catalog
+  /** Self-maintaining TEXT dedup ingest (r12), an absorbing stream:
+    * each trigger dedups against the catalog of everything already
+    * ingested ([[graft.api.Ops.dedupAgainstCatalog]] semantics), then
+    * the survivors' fingerprints/shingles/bands ABSORB into the
+    * catalog — so a near-dup arriving any number of triggers after
+    * its original is dropped, which the frozen-catalog
     * [[dedupAgainstCatalogStream]] cannot do. The sink receives each
     * trigger's surviving rows (schema-intact) plus the grown
     * [[graft.api.Ops.PreparedCatalog]] — persist the catalog
-    * (`.save`) as often as the restart story needs.
-    *
-    * Every absorb checkpoints through `checkpointDir`, so the
-    * catalog's plan stays FLAT across an unbounded trigger count
-    * (the chained-absorb discipline) and the grown frames survive
-    * executor loss. Per-trigger cost: the trigger's own shingling +
-    * banded joins against catalog frames + an artifact-sized absorb
-    * union — never a catalog rescan.
+    * (`.save`) as often as the restart story needs. Per-trigger cost:
+    * the trigger's own shingling + banded joins against catalog
+    * frames + an artifact-sized absorb union — never a catalog rescan.
     */
   def dedupIngestStream(docs: DataFrame, id: String, text: String,
-                        prepared: graft.api.Ops.PreparedCatalog,
+                        prepared: Ops.PreparedCatalog,
                         threshold: Double,
                         checkpointDir: String,
-                        sink: (DataFrame, graft.api.Ops.PreparedCatalog) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "dedupIngestStream needs a PreparedCatalog built with a reliable " +
-        "checkpointDir (prepareCatalog(..., checkpointDir = Some(dir))) or " +
-        "loaded from a persisted catalog: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedCatalog](
-      prepared,
-      (cat, batch) => graft.api.Ops.dedupAgainstPrepared(batch, id, text, cat, threshold),
-      (cat, kept) => cat.absorb(kept, text, Some(checkpointDir)),
-      sink)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                        sink: (DataFrame, Ops.PreparedCatalog) => Unit): StreamingQuery = {
+    requireReliable("dedupIngestStream", "prepareCatalog", prepared)
+    ingest(docs, prepared)(
+      (cat, batch) => Ops.dedupAgainstPrepared(batch, id, text, cat, threshold),
+      (cat, kept) => cat.absorb(kept, text, Some(checkpointDir)), sink)
   }
 
   /** Self-maintaining VECTOR dedup ingest (r12) —
     * [[dedupIngestStream]] for the embedding modality: survivors'
     * hyperplane codes and vectors absorb into the
-    * [[graft.api.Ops.PreparedVecCatalog]] each trigger. Reliable
-    * prep REQUIRED (the PreparedLm rule).
+    * [[graft.api.Ops.PreparedVecCatalog]] each trigger.
     */
   def vecDedupIngestStream(vecs: DataFrame, id: String, emb: String,
-                           prepared: graft.api.Ops.PreparedVecCatalog,
+                           prepared: Ops.PreparedVecCatalog,
                            threshold: Double,
                            checkpointDir: String,
-                           sink: (DataFrame, graft.api.Ops.PreparedVecCatalog) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "vecDedupIngestStream needs a PreparedVecCatalog built with a reliable " +
-        "checkpointDir (prepareVecCatalog(..., checkpointDir = Some(dir))) " +
-        "or loaded from a persisted catalog: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedVecCatalog](
-      prepared,
-      (cat, batch) => graft.api.Ops.vecDedupAgainstPrepared(batch, id, emb, cat, threshold),
-      (cat, kept) => cat.absorb(kept, emb, Some(checkpointDir)),
-      sink)
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                           sink: (DataFrame, Ops.PreparedVecCatalog) => Unit): StreamingQuery = {
+    requireReliable("vecDedupIngestStream", "prepareVecCatalog", prepared)
+    ingest(vecs, prepared)(
+      (cat, batch) => Ops.vecDedupAgainstPrepared(batch, id, emb, cat, threshold),
+      (cat, kept) => cat.absorb(kept, emb, Some(checkpointDir)), sink)
   }
 
   /** Self-maintaining IMAGE dedup ingest (r12) — the catalog learns
@@ -692,56 +645,30 @@ object Streams {
     * trigger once — absorb does not decode again). Quarantined rows
     * (decoded_real = false) survive dedup by contract and absorb
     * with the same flag, exactly as a batch prepare over the union
-    * would record them. Reliable prep REQUIRED.
+    * would record them.
     */
-  def imageDedupIngestStream(media: Dataset[graft.operators.Multimodal.MediaRecord],
-                             prepared: graft.api.Ops.PreparedImageCatalog,
+  def imageDedupIngestStream(media: Dataset[MediaRecord],
+                             prepared: Ops.PreparedImageCatalog,
                              checkpointDir: String,
-                             sink: (DataFrame, graft.api.Ops.PreparedImageCatalog) => Unit,
-                             maxHamming: Int = 6, bands: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "imageDedupIngestStream needs a PreparedImageCatalog built with a " +
-        "reliable checkpointDir (prepareImageCatalog(..., checkpointDir = " +
-        "Some(dir))) or loaded from a persisted catalog: localCheckpoint " +
-        "blocks do not survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedImageCatalog](
-      prepared,
-      (cat, batch) => cat.dedup(
-        batch.as[graft.operators.Multimodal.MediaRecord](
-          graft.operators.Multimodal.mediaEncoder), maxHamming, bands),
-      (cat, kept) => cat.absorbHashRows(kept, Some(checkpointDir)),
-      sink)
-    media.toDF.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                             sink: (DataFrame, Ops.PreparedImageCatalog) => Unit,
+                             maxHamming: Int = 6, bands: Int = 8): StreamingQuery = {
+    requireReliable("imageDedupIngestStream", "prepareImageCatalog", prepared)
+    ingest(media.toDF(), prepared)((cat, b) => cat.dedup(asMedia(b), maxHamming, bands),
+      (cat, kept) => cat.absorbHashRows(kept, Some(checkpointDir)), sink)
   }
 
   /** Self-maintaining AUDIO dedup ingest (r12) —
     * [[imageDedupIngestStream]]'s audio twin over the energy-gradient
-    * fingerprints. Reliable prep REQUIRED.
+    * fingerprints.
     */
-  def audioDedupIngestStream(media: Dataset[graft.operators.Multimodal.MediaRecord],
-                             prepared: graft.api.Ops.PreparedAudioCatalog,
+  def audioDedupIngestStream(media: Dataset[MediaRecord],
+                             prepared: Ops.PreparedAudioCatalog,
                              checkpointDir: String,
-                             sink: (DataFrame, graft.api.Ops.PreparedAudioCatalog) => Unit,
-                             maxHamming: Int = 6, bands: Int = 8): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "audioDedupIngestStream needs a PreparedAudioCatalog built with a " +
-        "reliable checkpointDir (prepareAudioCatalog(..., checkpointDir = " +
-        "Some(dir))) or loaded from a persisted catalog: localCheckpoint " +
-        "blocks do not survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedAudioCatalog](
-      prepared,
-      (cat, batch) => cat.dedup(
-        batch.as[graft.operators.Multimodal.MediaRecord](
-          graft.operators.Multimodal.mediaEncoder), maxHamming, bands),
-      (cat, kept) => cat.absorbHashRows(kept, Some(checkpointDir)),
-      sink)
-    media.toDF.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                             sink: (DataFrame, Ops.PreparedAudioCatalog) => Unit,
+                             maxHamming: Int = 6, bands: Int = 8): StreamingQuery = {
+    requireReliable("audioDedupIngestStream", "prepareAudioCatalog", prepared)
+    ingest(media.toDF(), prepared)((cat, b) => cat.dedup(asMedia(b), maxHamming, bands),
+      (cat, kept) => cat.absorbHashRows(kept, Some(checkpointDir)), sink)
   }
 
   /** Incremental VIDEO dedup of a media stream against a once-
@@ -751,56 +678,33 @@ object Streams {
     * catalog-dedup stream family: the catalog decoded and
     * frame-hashed once; each trigger pays only its own decode plus
     * the banded cross-side frame join under the catalog's pinned
-    * maxFrames. Same quarantine contract. Reliable prep REQUIRED.
+    * maxFrames. Same quarantine contract.
     */
-  def videoDedupStream(media: Dataset[graft.operators.Multimodal.MediaRecord],
-                       prepared: graft.api.Ops.PreparedVideoCatalog,
+  def videoDedupStream(media: Dataset[MediaRecord],
+                       prepared: Ops.PreparedVideoCatalog,
                        sink: DataFrame => Unit,
                        maxHamming: Int = 6, bands: Int = 8,
-                       minFrameMatch: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "videoDedupStream needs a PreparedVideoCatalog built with a reliable " +
-        "checkpointDir (prepareVideoCatalog(..., checkpointDir = Some(dir))) " +
-        "or loaded from a persisted catalog: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    media.toDF.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(prepared.dedup(
-          batch.as[graft.operators.Multimodal.MediaRecord](
-            graft.operators.Multimodal.mediaEncoder),
-          maxHamming, bands, minFrameMatch))
-      }
-      .outputMode("update")
-      .start()
+                       minFrameMatch: Double = 0.5): StreamingQuery = {
+    requireReliable("videoDedupStream", "prepareVideoCatalog", prepared)
+    eachTrigger(media.toDF(), sink)(b =>
+      prepared.dedup(asMedia(b), maxHamming, bands, minFrameMatch))
   }
 
   /** Self-maintaining VIDEO dedup ingest (r12) — the third media
     * member of the ingest family: survivors absorb as their already-
     * computed frame-hash rows (one decode per trigger), under the
-    * catalog's pinned maxFrames. Reliable prep REQUIRED.
+    * catalog's pinned maxFrames.
     */
-  def videoDedupIngestStream(media: Dataset[graft.operators.Multimodal.MediaRecord],
-                             prepared: graft.api.Ops.PreparedVideoCatalog,
+  def videoDedupIngestStream(media: Dataset[MediaRecord],
+                             prepared: Ops.PreparedVideoCatalog,
                              checkpointDir: String,
-                             sink: (DataFrame, graft.api.Ops.PreparedVideoCatalog) => Unit,
+                             sink: (DataFrame, Ops.PreparedVideoCatalog) => Unit,
                              maxHamming: Int = 6, bands: Int = 8,
-                             minFrameMatch: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "videoDedupIngestStream needs a PreparedVideoCatalog built with a " +
-        "reliable checkpointDir (prepareVideoCatalog(..., checkpointDir = " +
-        "Some(dir))) or loaded from a persisted catalog: localCheckpoint " +
-        "blocks do not survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedVideoCatalog](
-      prepared,
-      (cat, batch) => cat.dedup(
-        batch.as[graft.operators.Multimodal.MediaRecord](
-          graft.operators.Multimodal.mediaEncoder), maxHamming, bands, minFrameMatch),
-      (cat, kept) => cat.absorbHashRows(kept, Some(checkpointDir)),
-      sink)
-    media.toDF.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                             minFrameMatch: Double = 0.5): StreamingQuery = {
+    requireReliable("videoDedupIngestStream", "prepareVideoCatalog", prepared)
+    ingest(media.toDF(), prepared)(
+      (cat, b) => cat.dedup(asMedia(b), maxHamming, bands, minFrameMatch),
+      (cat, kept) => cat.absorbHashRows(kept, Some(checkpointDir)), sink)
   }
 
   /** Rolling-corpus IVF-PQ index maintenance (r12 — the absorb-only
@@ -811,35 +715,16 @@ object Streams {
     * trigger — persist it (`.save`) or serve `topK`/
     * [[ivfPqTopKStream]] reads from it. This is the production shape
     * of the "rolling vector corpora are the use case for a
-    * 32×-compressed index" claim: the index grows with the feed, the
-    * existing codes are never rescanned, and every absorb checkpoints
-    * through `checkpointDir` so the code frame's plan stays flat over
-    * an unbounded trigger count. Replay discipline via the shared
-    * [[IngestLoop]] (dedup = passthrough): a retry of the absorbed
-    * batchId re-emits the current index WITHOUT re-absorbing (a
-    * second absorb would clash-guard-crash); a batchId below it fails
-    * loudly; across restarts resume from the last persisted index —
-    * a stale checkpoint replaying an absorbed batch fails loudly
-    * through absorb's own id clash guard. Reliable prep REQUIRED.
+    * 32×-compressed index" claim: the index grows with the feed and
+    * the existing codes are never rescanned.
     */
   def ivfPqIngestStream(vecs: DataFrame, emb: String,
-                        prepared: graft.operators.Similarity.PreparedIvfPq,
+                        prepared: PreparedIvfPq,
                         checkpointDir: String,
-                        sink: graft.operators.Similarity.PreparedIvfPq => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "ivfPqIngestStream needs a PreparedIvfPq built with a reliable " +
-        "checkpointDir (prepareIvfPqIndex(..., checkpointDir = Some(dir))) " +
-        "or loaded from a persisted index: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.operators.Similarity.PreparedIvfPq](
-      prepared,
-      (_, batch) => batch,
-      (idx, batch) => idx.absorb(batch, emb, Some(checkpointDir)),
-      (_, idx) => sink(idx))
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                        sink: PreparedIvfPq => Unit): StreamingQuery = {
+    requireReliable("ivfPqIngestStream", "prepareIvfPqIndex", prepared)
+    ingest(vecs, prepared)((_, batch) => batch,
+      (idx, batch) => idx.absorb(batch, emb, Some(checkpointDir)), (_, idx) => sink(idx))
   }
 
   /** Rolling co-occurrence index maintenance (r12 — the recommender
@@ -856,36 +741,14 @@ object Streams {
     * triggers and its cross-trigger pairs are lost, exactly as
     * splitting it across absorb calls. Batch the source so basket
     * boundaries align with triggers (e.g. file-per-extract sources).
-    * Replay discipline via the shared [[IngestLoop]]: a retry of the
-    * absorbed batchId re-emits the current index WITHOUT
-    * re-absorbing (count sums are NOT replay-idempotent — a silent
-    * double-absorb would double-count, so the loop's retry guard is
-    * load-bearing here); a batchId below the absorbed one fails
-    * loudly. Across restarts resume from a persisted index WITH a
-    * fresh source checkpoint: unlike the clash-guarded catalogs,
-    * count sums carry no id memory, so a STALE checkpoint replaying
-    * an absorbed batch cannot be detected in-engine — the restart
-    * geometry is the caller's contract, stated, not silently
-    * absorbed. Reliable prep REQUIRED.
     */
   def coocIngestStream(baskets: DataFrame, basket: String, item: String,
-                       prepared: graft.api.Ops.PreparedCooc,
+                       prepared: Ops.PreparedCooc,
                        checkpointDir: String,
-                       sink: graft.api.Ops.PreparedCooc => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "coocIngestStream needs a PreparedCooc built with a reliable " +
-        "checkpointDir (prepareCooc(..., checkpointDir = Some(dir))) or " +
-        "loaded from a persisted index: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedCooc](
-      prepared,
-      (_, batch) => batch,
-      (idx, batch) => idx.absorb(batch, basket, item, Some(checkpointDir)),
-      (_, idx) => sink(idx))
-    baskets.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                       sink: Ops.PreparedCooc => Unit): StreamingQuery = {
+    requireReliable("coocIngestStream", "prepareCooc", prepared)
+    ingest(baskets, prepared)((_, batch) => batch,
+      (idx, batch) => idx.absorb(batch, basket, item, Some(checkpointDir)), (_, idx) => sink(idx))
   }
 
   /** Rolling materialized-aggregate maintenance (r12 — the warehouse
@@ -896,52 +759,26 @@ object Streams {
     * the sink receives the refreshed rollup after every trigger —
     * persist it (`.save`) or serve `serve` from it. The live
     * "incremental MV refresh" loop: a trigger costs its own census +
-    * a cells-sized merge, never a corpus rescan.
-    *
-    * CONTRACT: append-only, as the artifact states — min/max cannot
-    * un-merge a deletion, so corrections re-prepare. Replay
-    * discipline via the shared [[IngestLoop]]: a retry of the
-    * absorbed batchId re-emits the current rollup WITHOUT
-    * re-absorbing (cell sums are NOT replay-idempotent — the retry
-    * guard is load-bearing against double-counts); a batchId below
-    * the absorbed one fails loudly. Across restarts resume from a
-    * persisted rollup WITH a fresh source checkpoint: cell sums
-    * carry no id memory (the cooc geometry), so a stale checkpoint
-    * replaying an absorbed batch is UNDETECTABLE in-engine — the
-    * restart geometry is the caller's stated contract. Reliable
-    * prep REQUIRED.
+    * a cells-sized merge, never a corpus rescan. CONTRACT:
+    * append-only, as the artifact states — min/max cannot un-merge a
+    * deletion, so corrections re-prepare.
     */
-  def rollupIngestStream(rows: DataFrame, value: org.apache.spark.sql.Column,
-                         prepared: graft.api.Ops.PreparedRollup,
+  def rollupIngestStream(rows: DataFrame, value: Column,
+                         prepared: Ops.PreparedRollup,
                          checkpointDir: String,
-                         sink: graft.api.Ops.PreparedRollup => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "rollupIngestStream needs a PreparedRollup built with a reliable " +
-        "checkpointDir (prepareRollup(..., checkpointDir = Some(dir))) or " +
-        "loaded from a persisted rollup: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedRollup](
-      prepared,
-      (_, batch) => batch,
-      (idx, batch) => idx.absorb(batch, value, Some(checkpointDir)),
-      (_, idx) => sink(idx))
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                         sink: Ops.PreparedRollup => Unit): StreamingQuery = {
+    requireReliable("rollupIngestStream", "prepareRollup", prepared)
+    ingest(rows, prepared)((_, batch) => batch,
+      (idx, batch) => idx.absorb(batch, value, Some(checkpointDir)), (_, idx) => sink(idx))
   }
 
   /** Live record linkage against a master table (r12 — the streaming
     * member of the q145 family, [[graft.api.Ops.linkageScore]]): each
     * trigger's records block-join the master and emit their scored
     * candidate matches — the CRM-intake shape ("does this incoming
-    * lead match an existing customer"). Stateless per trigger (the
-    * [[stripBoilerplateStream]] model): the master is FROZEN for the
-    * stream's lifetime and must be a stable source-backed frame
-    * (re-read per trigger by Spark — a derived frame should be
-    * materialized to parquet first; `localCheckpoint` blocks die with
-    * executors, the same reliability rule the prepared catalogs
-    * enforce). Per-trigger cost is the batch's own blocked join —
+    * lead match an existing customer"). Per trigger against the
+    * frozen master, which must be a stable source-backed frame.
+    * Per-trigger cost is the batch's own blocked join —
     * candidate-bound, master never rescanned into state.
     */
   def linkageStream(records: DataFrame, master: DataFrame,
@@ -949,45 +786,24 @@ object Streams {
                     block: Seq[(String, String)],
                     fields: Seq[(String, String, Long)],
                     minScore: Long,
-                    sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.linkageScore(batch, master, aId, bId,
-          block, fields, minScore))
-      }
-      .outputMode("update")
-      .start()
-  }
+                    sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.linkageScore(_, master, aId, bId, block, fields, minScore))
 
   /** Rolling activity-census maintenance (r12 — the dashboard member
     * of the absorb-only ingest family): each trigger's events
     * set-union into [[graft.api.Ops.PreparedActives]] and the sink
     * receives the grown census every trigger (persist or serve the
-    * DAU/WAU / new-vs-returning readouts). The EASIEST replay
-    * geometry in the engine: the census absorb is IDEMPOTENT (set
-    * union), so retries, overlapping triggers and even a stale
-    * checkpoint replaying absorbed batches are all TRUE NO-OPS — the
-    * IngestLoop guard here is uniformity, not load-bearing. Reliable
-    * prep REQUIRED (the frames must survive executor loss).
+    * DAU/WAU / new-vs-returning readouts). The census absorb is
+    * IDEMPOTENT (set union), so retries, overlapping triggers and even
+    * a stale checkpoint replaying absorbed batches are all no-ops.
     */
   def activesIngestStream(events: DataFrame, unit: String, time: String,
-                          prepared: graft.api.Ops.PreparedActives,
+                          prepared: Ops.PreparedActives,
                           checkpointDir: String,
-                          sink: graft.api.Ops.PreparedActives => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "activesIngestStream needs a PreparedActives built with a reliable " +
-        "checkpointDir (prepareActives(..., checkpointDir = Some(dir))) or " +
-        "loaded from a persisted census: localCheckpoint blocks do not " +
-        "survive executor loss across a long-lived stream")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedActives](
-      prepared,
-      (_, batch) => batch,
-      (idx, batch) => idx.absorb(batch, unit, time, Some(checkpointDir)),
-      (_, idx) => sink(idx))
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                          sink: Ops.PreparedActives => Unit): StreamingQuery = {
+    requireReliable("activesIngestStream", "prepareActives", prepared)
+    ingest(events, prepared)((_, batch) => batch,
+      (idx, batch) => idx.absorb(batch, unit, time, Some(checkpointDir)), (_, idx) => sink(idx))
   }
 
   /** Live distribution-drift monitoring (r12 — the drift member of
@@ -996,23 +812,12 @@ object Streams {
     * [[graft.api.Ops.psiDrift]] against the FROZEN baseline and the
     * sink receives the per-bucket report + total PSI — alert (or
     * quarantine, the dqStream move) BEFORE a drifted batch lands in
-    * the corpus. Stateless per trigger (the [[stripBoilerplateStream]]
-    * model); the baseline must be a stable source-backed frame
-    * (re-read per trigger — materialize derived baselines to parquet
-    * first). Per-trigger cost is two bucket censuses + the bounded
-    * buckets join; PSI of a SMALL trigger against a large baseline is
-    * statistically noisy — size triggers (or window upstream) so the
-    * comparison means something, stated.
+    * the corpus. Per-trigger cost is two bucket censuses + the
+    * bounded buckets join.
     */
   def psiDriftStream(records: DataFrame, baseline: DataFrame, bucket: String,
-                     sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.psiDrift(baseline, batch, bucket))
-      }
-      .outputMode("update")
-      .start()
-  }
+                     sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.psiDrift(baseline, _, bucket))
 
   /** Live two-sample KS drift monitoring (r13 — VERDICT r12 next #4:
     * [[psiDriftStream]]'s bucket-free sibling for CONTINUOUS
@@ -1020,21 +825,13 @@ object Streams {
     * [[graft.api.Ops.ksStatistic]] against the FROZEN baseline — the
     * max-CDF-gap report (n_a, n_b, exact d_num, at_value, d_stat)
     * lands at the sink per trigger, no binning choice to tune.
-    * Stateless per trigger; same baseline/trigger-sizing statements
-    * as [[psiDriftStream]]. Per-trigger cost: the trigger's value
-    * census + the bounded distinct-value merge against the baseline
-    * census.
+    * Per-trigger cost: the trigger's value census + the bounded
+    * distinct-value merge against the baseline census.
     */
   def ksDriftStream(records: DataFrame, baseline: DataFrame,
-                    value: org.apache.spark.sql.Column,
-                    sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.ksStatistic(baseline, batch, value))
-      }
-      .outputMode("update")
-      .start()
-  }
+                    value: Column,
+                    sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.ksStatistic(baseline, _, value))
 
   /** Live Mann–Whitney drift monitoring (r13 — the stochastic-order
     * member of the drift trio: "is this trigger's distribution
@@ -1042,18 +839,12 @@ object Streams {
     * which way): each trigger scores
     * [[graft.api.Ops.mannWhitneyU]] (baseline as side A, trigger as
     * side B) against the frozen baseline; exact u2 + tie-corrected z
-    * per trigger. Same stateless shape as [[ksDriftStream]].
+    * per trigger.
     */
   def mwuDriftStream(records: DataFrame, baseline: DataFrame,
-                     value: org.apache.spark.sql.Column,
-                     sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.mannWhitneyU(baseline, batch, value))
-      }
-      .outputMode("update")
-      .start()
-  }
+                     value: Column,
+                     sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.mannWhitneyU(baseline, _, value))
 
   /** Live DECIDABLE governance monitoring (r16 — the drift family's
     * capstone: the per-trigger statistics streams say "the statistic
@@ -1065,48 +856,38 @@ object Streams {
     * Holm-adjusted as ONE battery — and the sink receives the
     * decided frame (test, grp, stat, p, p_adj, reject, p_holm,
     * reject_fwer) per trigger. Identical expressions to the gated
-    * q221 battery by shared code. Stateless per trigger (the
-    * [[psiDriftStream]] model); the baseline must be a stable
-    * source-backed frame, and the trigger-sizing statement of the
-    * statistic streams applies doubly here — a p-value on a
-    * ten-row trigger is noise with a decision stapled to it, so
-    * size triggers (or window upstream) to something a decision
-    * should hang on. Per-trigger cost: three census-bounded
-    * batteries + league-table windows over 3 × segments rows.
+    * q221 battery by shared code. The trigger-sizing statement
+    * applies doubly here — a p-value on a ten-row trigger is noise
+    * with a decision stapled to it. Per-trigger cost: three
+    * census-bounded batteries + league-table windows over 3 ×
+    * segments rows.
+    *
+    * The census-width knobs pass through: with the defaults, a
+    * trigger whose rankValue census exceeds the exact-path cap throws
+    * INSIDE the batch and terminates the whole streaming query —
+    * pre-bucket rankValue (the q191/q179 sketch discipline) or raise
+    * the cap for wide-domain values.
     */
   def governanceStream(records: DataFrame, baseline: DataFrame,
                        group: String,
-                       meanValue: org.apache.spark.sql.Column,
-                       rankValue: org.apache.spark.sql.Column,
+                       meanValue: Column,
+                       rankValue: Column,
                        sink: DataFrame => Unit,
                        allowWideCensus: Boolean = false,
-                       maxExactCensusRows: Long = graft.api.Ops.MaxExactCensusRows): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the census-width knobs pass through (ADVICE r16 #2): with
-        // the defaults, a trigger whose rankValue census exceeds the
-        // exact-path cap throws INSIDE the batch and terminates the
-        // whole streaming query — pre-bucket rankValue (the q191/q179
-        // sketch discipline) or raise the cap for wide-domain values
-        sink(graft.api.Ops.governanceBatteryByGroup(
-          baseline, batch, group, meanValue, rankValue,
-          allowWideCensus, maxExactCensusRows))
-      }
-      .outputMode("update")
-      .start()
-  }
+                       maxExactCensusRows: Long = Ops.MaxExactCensusRows): StreamingQuery =
+    eachTrigger(records, sink)(Ops.governanceBatteryByGroup(baseline, _, group,
+      meanValue, rankValue, allowWideCensus, maxExactCensusRows))
 
   /** CUMULATIVE governance decision stream (r17 — VERDICT r16
     * missing #1/top-next: [[governanceStream]] scores each trigger's
     * batch ALONE, so a low-traffic trigger carries n of a few
     * hundred and the battery either misses real drift or fires on
-    * noise — the exact problem the engine already solved for mSPRT
-    * and the prepared artifacts): each trigger ABSORBS into a
-    * cumulative [[graft.api.Ops.PreparedGovernance]] census pair
-    * (exact addition — trigger N's state ≡ prepare over
-    * union(triggers 1..N), spec-pinned) and the sink receives
-    * [[graft.api.Ops.governanceBatteryFromPrepared]] decided over
-    * ALL traffic so far against the frozen `baseline` artifact. The
+    * noise), an absorbing stream: the first trigger prepares a
+    * [[graft.api.Ops.PreparedGovernance]] census pair, each later one
+    * ABSORBS into it (exact addition — trigger N's state ≡ prepare
+    * over union(triggers 1..N), spec-pinned), and the sink receives
+    * [[graft.api.Ops.governanceBatteryFromPrepared]] decided over ALL
+    * traffic so far against the frozen `baseline` artifact. The
     * battery expressions are identical to the batch q221 gate by
     * shared code. Pass a `checkpointDir` in production — it makes
     * the absorbed censuses reliable across executor loss AND breaks
@@ -1119,69 +900,57 @@ object Streams {
     * accumulated corpus, which only ever exists as censuses.
     */
   def governanceIngestStream(records: DataFrame,
-                             baseline: graft.api.Ops.PreparedGovernance,
-                             meanValue: org.apache.spark.sql.Column,
-                             rankValue: org.apache.spark.sql.Column,
+                             baseline: Ops.PreparedGovernance,
+                             meanValue: Column,
+                             rankValue: Column,
                              sink: DataFrame => Unit,
                              checkpointDir: Option[String] = None,
                              allowWideCensus: Boolean = false,
-                             maxExactCensusRows: Long = graft.api.Ops.MaxExactCensusRows): org.apache.spark.sql.streaming.StreamingQuery = {
-    var cumulative: Option[graft.api.Ops.PreparedGovernance] = None
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val next = cumulative match {
-          case Some(c) => c.absorb(batch, meanValue, rankValue, checkpointDir)
-          case None => graft.api.Ops.prepareGovernance(batch, baseline.group,
-            meanValue, rankValue, baseline.bucketWidth, checkpointDir)
-        }
-        cumulative = Some(next)
-        sink(graft.api.Ops.governanceBatteryFromPrepared(baseline, next,
-          allowWideCensus, maxExactCensusRows))
-      }
-      .outputMode("update")
-      .start()
-  }
+                             maxExactCensusRows: Long = Ops.MaxExactCensusRows): StreamingQuery =
+    ingest(records, Option.empty[Ops.PreparedGovernance])((_, batch) => batch,
+      (cum, batch) => Some(cum match {
+        case Some(c) => c.absorb(batch, meanValue, rankValue, checkpointDir)
+        case None => Ops.prepareGovernance(batch, baseline.group,
+          meanValue, rankValue, baseline.bucketWidth, checkpointDir)
+      }),
+      (_, cum) => sink(Ops.governanceBatteryFromPrepared(baseline, cum.get,
+        allowWideCensus, maxExactCensusRows)))
 
   /** CUMULATIVE group-sequential monitor stream (r17 — the
     * scheduled-looks trial run the way trials actually run: traffic
     * ARRIVES, look by look, and the monitor re-decides after every
-    * increment over everything seen so far). Each trigger ABSORBS
-    * into a [[graft.api.Ops.PreparedGroupSequential]] census (exact
-    * addition — trigger N's state ≡ prepare over union(triggers
-    * 1..N), spec-pinned) and the sink receives the full per-look
-    * readout (`decide()` — identical boundary/z/absorbing-stop
-    * expressions to the gated q234/q237/q238 by shared `gsDecide`
-    * code). A trigger does NOT need to align with a look: late or
-    * split deliveries for any look just add to its census. Pass
-    * `group` for the per-segment monitor (each segment stops
-    * independently, the q238 semantics) and a `checkpointDir` in
-    * production (reliable state + per-trigger lineage breaks). State
-    * and per-trigger cost: O(segments × looks × 2) census rows plus
-    * the trigger's own census — never the accumulated traffic.
+    * increment over everything seen so far), an absorbing stream: the
+    * first trigger prepares a
+    * [[graft.api.Ops.PreparedGroupSequential]] census, each later one
+    * ABSORBS into it (exact addition — trigger N's state ≡ prepare
+    * over union(triggers 1..N), spec-pinned), and the sink receives
+    * the full per-look readout (`decide()` — identical
+    * boundary/z/absorbing-stop expressions to the gated
+    * q234/q237/q238 by shared `gsDecide` code). A trigger does NOT
+    * need to align with a look: late or split deliveries for any look
+    * just add to its census. Pass `group` for the per-segment monitor
+    * (each segment stops independently, the q238 semantics) and a
+    * `checkpointDir` in production (reliable state + per-trigger
+    * lineage breaks). State and per-trigger cost: O(segments × looks
+    * × 2) census rows plus the trigger's own census — never the
+    * accumulated traffic.
     */
   def groupSequentialIngestStream(records: DataFrame,
-                                  arm: org.apache.spark.sql.Column,
-                                  value: org.apache.spark.sql.Column,
-                                  look: org.apache.spark.sql.Column,
+                                  arm: Column,
+                                  value: Column,
+                                  look: Column,
                                   looks: Int, spending: String = "obf",
                                   armA: String = "A", armB: String = "B",
                                   group: Option[String] = None,
                                   checkpointDir: Option[String] = None)(
-                                  sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    var cumulative: Option[graft.api.Ops.PreparedGroupSequential] = None
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val next = cumulative match {
-          case Some(c) => c.absorb(batch, arm, value, look, checkpointDir)
-          case None => graft.api.Ops.prepareGroupSequential(batch, arm, value,
-            look, looks, spending, armA, armB, group, checkpointDir)
-        }
-        cumulative = Some(next)
-        sink(next.decide())
-      }
-      .outputMode("update")
-      .start()
-  }
+                                  sink: DataFrame => Unit): StreamingQuery =
+    ingest(records, Option.empty[Ops.PreparedGroupSequential])((_, batch) => batch,
+      (cum, batch) => Some(cum match {
+        case Some(c) => c.absorb(batch, arm, value, look, checkpointDir)
+        case None => Ops.prepareGroupSequential(batch, arm, value,
+          look, looks, spending, armA, armB, group, checkpointDir)
+      }),
+      (_, cum) => sink(cum.get.decide()))
 
   /** Live Jensen–Shannon drift monitoring (r14 — the SYMMETRIC,
     * smoothing-free member of the drift quartet beside
@@ -1190,18 +959,11 @@ object Streams {
     * [[graft.api.Ops.jsDivergence]] against the FROZEN baseline — the
     * per-bucket term report + the [0, ln 2] total land at the sink,
     * finite on one-side-only buckets by construction (no smoothing
-    * parameter to tune or replay). Same stateless shape and
-    * trigger-sizing statements as [[psiDriftStream]].
+    * parameter to tune or replay).
     */
   def jsDriftStream(records: DataFrame, baseline: DataFrame, bucket: String,
-                    sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.jsDivergence(baseline, batch, bucket))
-      }
-      .outputMode("update")
-      .start()
-  }
+                    sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.jsDivergence(baseline, _, bucket))
 
   /** Live sample-ratio-mismatch monitoring (r14 — the GOVERNANCE
     * stream of the experimentation family: the assignment mechanism
@@ -1209,43 +971,26 @@ object Streams {
     * already biased): each trigger's arm traffic scores
     * [[graft.api.Ops.srmCheck]] against the declared weights — the
     * per-arm χ² report (absent arms contributing, undeclared arms
-    * surfacing) lands at the sink per trigger. Stateless; a trigger
-    * must carry enough assignments for the χ² to mean something
-    * (size triggers or window upstream — stated, the
-    * [[psiDriftStream]] rule).
+    * surfacing) lands at the sink per trigger.
     */
-  def srmStream(records: DataFrame, arm: org.apache.spark.sql.Column,
+  def srmStream(records: DataFrame, arm: Column,
                 expected: Seq[(String, Double)],
-                sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.srmCheck(batch, arm, expected))
-      }
-      .outputMode("update")
-      .start()
-  }
+                sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.srmCheck(_, arm, expected))
 
   /** Live per-quantile drift monitoring (r14 — the drift family's
     * SHAPE stream: each trigger's value distribution runs
     * [[graft.api.Ops.quantileDrift]] against the FROZEN baseline —
     * one row per requested quantile with (value_a, value_b, delta)
     * landing at the sink per trigger: "the live p99 sits $X above
-    * the baseline", continuously. Stateless; the usual
-    * trigger-sizing statement applies.
+    * the baseline", continuously.
     */
   def quantileDriftStream(records: DataFrame, baseline: DataFrame,
-                          value: org.apache.spark.sql.Column,
+                          value: Column,
                           bucketWidth: Double,
                           quantiles: Seq[(String, Double)],
-                          sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.quantileDrift(baseline, batch, value,
-          bucketWidth, quantiles))
-      }
-      .outputMode("update")
-      .start()
-  }
+                          sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.quantileDrift(baseline, _, value, bucketWidth, quantiles))
 
   // ---- durable-baseline drift monitoring (r15, VERDICT r14 missing
   // #2): the live-frame forms above recompute their baseline at
@@ -1261,29 +1006,17 @@ object Streams {
     * the monitor replays the SAME baseline across restarts.
     */
   def psiDriftStream(records: DataFrame,
-                     prepared: graft.api.Ops.PreparedBuckets,
-                     sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(prepared.psiVs(batch))
-      }
-      .outputMode("update")
-      .start()
-  }
+                     prepared: Ops.PreparedBuckets,
+                     sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(prepared.psiVs)
 
   /** [[jsDriftStream]] against a pinned [[graft.api.Ops
     * .PreparedBuckets]] census (the psiDriftStream durable twin).
     */
   def jsDriftStream(records: DataFrame,
-                    prepared: graft.api.Ops.PreparedBuckets,
-                    sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(prepared.jsVs(batch))
-      }
-      .outputMode("update")
-      .start()
-  }
+                    prepared: Ops.PreparedBuckets,
+                    sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(prepared.jsVs)
 
   /** [[srmStream]] with the declared split read from a pinned
     * [[graft.api.Ops.PreparedBuckets]] arm census — the split is
@@ -1291,16 +1024,11 @@ object Streams {
     * start, a k-bounded collect) instead of hand-typed, and a
     * restarted monitor re-reads the identical artifact.
     */
-  def srmStream(records: DataFrame, arm: org.apache.spark.sql.Column,
-                prepared: graft.api.Ops.PreparedBuckets,
-                sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+  def srmStream(records: DataFrame, arm: Column,
+                prepared: Ops.PreparedBuckets,
+                sink: DataFrame => Unit): StreamingQuery = {
     val weights = prepared.armWeights
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.srmCheck(batch, arm, weights))
-      }
-      .outputMode("update")
-      .start()
+    eachTrigger(records, sink)(Ops.srmCheck(_, arm, weights))
   }
 
   /** [[quantileDriftStream]] against a pinned [[graft.api.Ops
@@ -1310,18 +1038,24 @@ object Streams {
     * restarted monitor replays the saved baseline bit-for-bit.
     */
   def quantileDriftStream(records: DataFrame,
-                          prepared: graft.api.Ops.PreparedQuantiles,
-                          value: org.apache.spark.sql.Column,
+                          prepared: Ops.PreparedQuantiles,
+                          value: Column,
                           quantiles: Seq[(String, Double)],
-                          sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.quantileDriftFromPrepared(prepared, batch, value,
-          quantiles))
-      }
-      .outputMode("update")
-      .start()
-  }
+                          sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.quantileDriftFromPrepared(prepared, _, value, quantiles))
+
+  /** The moments streams' shared absorb: each trigger's non-null
+    * (arm, value) rows absorb into `prepared` under its group column
+    * (x = y = the value), and `serve` reads the grown artifact.
+    */
+  private def momentsIngest(records: DataFrame, arm: Column, value: Column,
+                            prepared: Ops.PreparedMoments, checkpointDir: String)(
+                            serve: Ops.PreparedMoments => Unit): StreamingQuery =
+    ingest(records, prepared)(
+      (_, batch) => batch.filter(arm.isNotNull && value.isNotNull)
+        .select(arm.cast("string").as(prepared.groupCol), value.as("__v")),
+      (m, kept) => m.absorb(kept, col("__v"), col("__v"), Some(checkpointDir)),
+      (_, m) => serve(m))
 
   /** Live always-valid mSPRT monitoring (r15 — the CUMULATIVE member
     * of the governance-stream family, and the stream the mSPRT
@@ -1338,42 +1072,19 @@ object Streams {
     * restarted from a saved artifact resumes the SAME test instead
     * of restarting the evidence at zero. The sink receives
     * (readout, grown artifact) per trigger — persist the artifact
-    * as often as the restart story needs.
-    *
-    * Replay discipline via the shared [[IngestLoop]]: a retried
-    * batchId re-emits the current readout WITHOUT re-absorbing
-    * (moment sums are not replay-idempotent — the guard is
-    * load-bearing against double-counted evidence); an older
-    * batchId fails loudly. Prepare with x = y = the metric and the
-    * ARM column as the group; reliable prep REQUIRED (the absorb
-    * chain must survive executor loss).
+    * as often as the restart story needs. Prepare with x = y = the
+    * metric and the ARM column as the group.
     */
-  def msprtStream(records: DataFrame, arm: org.apache.spark.sql.Column,
-                  value: org.apache.spark.sql.Column,
+  def msprtStream(records: DataFrame, arm: Column,
+                  value: Column,
                   armA: String, armB: String, tau2: Double,
-                  prepared: graft.api.Ops.PreparedMoments,
+                  prepared: Ops.PreparedMoments,
                   checkpointDir: String,
-                  sink: (DataFrame, graft.api.Ops.PreparedMoments) => Unit,
-                  lnAlpha: Double = -2.995732273553991): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "msprtStream needs a PreparedMoments built with a reliable " +
-        "checkpointDir (prepareMoments(..., checkpointDir = Some(dir))) " +
-        "or loaded from a persisted artifact: localCheckpoint blocks do " +
-        "not survive executor loss across a long-lived stream")
-    val g = prepared.groupCol
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedMoments](
-      prepared,
-      (_, batch) => batch
-        .filter(arm.isNotNull && value.isNotNull)
-        .select(arm.cast("string").as(g), value.as("__v")),
-      (m, kept) => m.absorb(kept, org.apache.spark.sql.functions.col("__v"),
-        org.apache.spark.sql.functions.col("__v"), Some(checkpointDir)),
-      (_, m) => sink(
-        graft.api.Ops.msprtFromMoments(m, armA, armB, tau2, lnAlpha), m))
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                  sink: (DataFrame, Ops.PreparedMoments) => Unit,
+                  lnAlpha: Double = -2.995732273553991): StreamingQuery = {
+    requireReliable("msprtStream", "prepareMoments", prepared)
+    momentsIngest(records, arm, value, prepared, checkpointDir)(m =>
+      sink(Ops.msprtFromMoments(m, armA, armB, tau2, lnAlpha), m))
   }
 
   /** Live always-valid CONFIDENCE-INTERVAL monitoring (r17 — the
@@ -1385,34 +1096,18 @@ object Streams {
     * .alwaysValidCiFromMoments]] over ALL traffic so far, the grown
     * artifact) — trigger k ≡ the batch [[graft.api.Ops
     * .alwaysValidCi]] over the union (spec-pinned), restart-safe
-    * from a saved artifact. Same [[IngestLoop]] replay guards as
-    * msprtStream (moment sums are not replay-idempotent).
+    * from a saved artifact.
     */
-  def avciStream(records: DataFrame, arm: org.apache.spark.sql.Column,
-                 value: org.apache.spark.sql.Column,
+  def avciStream(records: DataFrame, arm: Column,
+                 value: Column,
                  armA: String, armB: String, tau2: Double,
-                 prepared: graft.api.Ops.PreparedMoments,
+                 prepared: Ops.PreparedMoments,
                  checkpointDir: String,
-                 sink: (DataFrame, graft.api.Ops.PreparedMoments) => Unit,
-                 lnAlpha: Double = -2.995732273553991): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "avciStream needs a PreparedMoments built with a reliable " +
-        "checkpointDir (prepareMoments(..., checkpointDir = Some(dir))) " +
-        "or loaded from a persisted artifact")
-    val g = prepared.groupCol
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedMoments](
-      prepared,
-      (_, batch) => batch
-        .filter(arm.isNotNull && value.isNotNull)
-        .select(arm.cast("string").as(g), value.as("__v")),
-      (m, kept) => m.absorb(kept, org.apache.spark.sql.functions.col("__v"),
-        org.apache.spark.sql.functions.col("__v"), Some(checkpointDir)),
-      (_, m) => sink(
-        graft.api.Ops.alwaysValidCiFromMoments(m, armA, armB, tau2, lnAlpha), m))
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                 sink: (DataFrame, Ops.PreparedMoments) => Unit,
+                 lnAlpha: Double = -2.995732273553991): StreamingQuery = {
+    requireReliable("avciStream", "prepareMoments", prepared)
+    momentsIngest(records, arm, value, prepared, checkpointDir)(m =>
+      sink(Ops.alwaysValidCiFromMoments(m, armA, armB, tau2, lnAlpha), m))
   }
 
   /** Live distributional experiment monitoring (r17 — the QTE member
@@ -1422,39 +1117,25 @@ object Streams {
     * receives [[graft.api.Ops.qteSketchFromPrepared]] decided over
     * ALL traffic so far — the per-percentile readout that catches a
     * launch moving the p90 while the mean monitors stay calm,
-    * updated live). Same [[IngestLoop]] replay guards (register
-    * sums are not replay-idempotent); reliable prep REQUIRED on
-    * both arms.
+    * updated live). Both arms must be reliable.
     */
-  def qteIngestStream(records: DataFrame, arm: org.apache.spark.sql.Column,
-                      value: org.apache.spark.sql.Column,
+  def qteIngestStream(records: DataFrame, arm: Column,
+                      value: Column,
                       armA: String, armB: String,
-                      preparedA: graft.api.Ops.PreparedQuantiles,
-                      preparedB: graft.api.Ops.PreparedQuantiles,
+                      preparedA: Ops.PreparedQuantiles,
+                      preparedB: Ops.PreparedQuantiles,
                       checkpointDir: String,
                       pcts: Seq[Int] = Seq(10, 25, 50, 75, 90))(
-                      sink: (DataFrame, graft.api.Ops.PreparedQuantiles, graft.api.Ops.PreparedQuantiles) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(preparedA.reliable && preparedB.reliable,
-      "qteIngestStream needs PreparedQuantiles built with a reliable " +
-        "checkpointDir on BOTH arms (prepareQuantiles(..., checkpointDir = Some(dir)))")
-    import org.apache.spark.sql.functions.col
-    val loop = new IngestLoop[DataFrame,
-        (graft.api.Ops.PreparedQuantiles, graft.api.Ops.PreparedQuantiles)](
-      (preparedA, preparedB),
-      (_, batch) => batch
-        .filter(arm.isNotNull && value.isNotNull)
+                      sink: (DataFrame, Ops.PreparedQuantiles, Ops.PreparedQuantiles) => Unit): StreamingQuery = {
+    requireReliable("qteIngestStream", "prepareQuantiles", preparedA)
+    requireReliable("qteIngestStream", "prepareQuantiles", preparedB)
+    ingest(records, (preparedA, preparedB))(
+      (_, batch) => batch.filter(arm.isNotNull && value.isNotNull)
         .select(arm.cast("string").as("__arm"), value.as("__v")),
       { case ((pa, pb), kept) =>
-        (pa.absorb(kept.filter(col("__arm") === armA), col("__v"),
-          Some(checkpointDir)),
-         pb.absorb(kept.filter(col("__arm") === armB), col("__v"),
-          Some(checkpointDir))) },
-      { case (_, (pa, pb)) =>
-        sink(graft.api.Ops.qteSketchFromPrepared(pa, pb, pcts), pa, pb) })
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+        (pa.absorb(kept.filter(col("__arm") === armA), col("__v"), Some(checkpointDir)),
+         pb.absorb(kept.filter(col("__arm") === armB), col("__v"), Some(checkpointDir))) },
+      { case (_, (pa, pb)) => sink(Ops.qteSketchFromPrepared(pa, pb, pcts), pa, pb) })
   }
 
   /** Live classifier-calibration monitor (r15 — the MODEL-MONITORING
@@ -1467,28 +1148,18 @@ object Streams {
     * (the cumulative reliability diagram via `serve`, the grown
     * artifact) — trigger k ≡ the batch calibrationBins over ALL rows
     * since the monitor started (spec-pinned), restart-safe from a
-    * saved artifact. The bin count reads FROM the artifact. Same
-    * [[IngestLoop]] replay guards (census sums are not
-    * replay-idempotent).
+    * saved artifact. The bin count reads FROM the artifact.
     */
   def calibrationStream(records: DataFrame,
-                        scoreMicros: org.apache.spark.sql.Column,
-                        label: org.apache.spark.sql.Column,
-                        prepared: graft.api.Ops.PreparedCalibration,
+                        scoreMicros: Column,
+                        label: Column,
+                        prepared: Ops.PreparedCalibration,
                         checkpointDir: String,
-                        sink: (DataFrame, graft.api.Ops.PreparedCalibration) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "calibrationStream needs a PreparedCalibration built with a reliable " +
-        "checkpointDir or loaded from a persisted artifact")
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedCalibration](
-      prepared,
-      (_, batch) => batch,
+                        sink: (DataFrame, Ops.PreparedCalibration) => Unit): StreamingQuery = {
+    requireReliable("calibrationStream", "prepareCalibration", prepared)
+    ingest(records, prepared)((_, batch) => batch,
       (m, kept) => m.absorb(kept, scoreMicros, label, Some(checkpointDir)),
       (_, m) => sink(m.serve, m))
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
   }
 
   /** Live k-arm experiment monitor (r15 — [[msprtStream]]'s k-arm
@@ -1502,31 +1173,16 @@ object Streams {
     * [[graft.api.Ops.pairwiseWelchFromMoments]] — "which pairs",
     * the grown artifact) — each bit-for-bit the batch operator over
     * ALL rows since the experiment started (spec-pinned), restart-
-    * safe from a saved artifact. Same [[IngestLoop]] replay guards
-    * as msprtStream (moment sums are not replay-idempotent).
+    * safe from a saved artifact.
     */
-  def kArmMonitorStream(records: DataFrame, arm: org.apache.spark.sql.Column,
-                        value: org.apache.spark.sql.Column,
-                        prepared: graft.api.Ops.PreparedMoments,
+  def kArmMonitorStream(records: DataFrame, arm: Column,
+                        value: Column,
+                        prepared: Ops.PreparedMoments,
                         checkpointDir: String,
-                        sink: (DataFrame, DataFrame, graft.api.Ops.PreparedMoments) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "kArmMonitorStream needs a PreparedMoments built with a reliable " +
-        "checkpointDir or loaded from a persisted artifact")
-    val g = prepared.groupCol
-    val loop = new IngestLoop[DataFrame, graft.api.Ops.PreparedMoments](
-      prepared,
-      (_, batch) => batch
-        .filter(arm.isNotNull && value.isNotNull)
-        .select(arm.cast("string").as(g), value.as("__v")),
-      (m, kept) => m.absorb(kept, org.apache.spark.sql.functions.col("__v"),
-        org.apache.spark.sql.functions.col("__v"), Some(checkpointDir)),
-      (_, m) => sink(graft.api.Ops.anovaFromMoments(m),
-        graft.api.Ops.pairwiseWelchFromMoments(m), m))
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) => loop.handle(batch, bid) }
-      .outputMode("update")
-      .start()
+                        sink: (DataFrame, DataFrame, Ops.PreparedMoments) => Unit): StreamingQuery = {
+    requireReliable("kArmMonitorStream", "prepareMoments", prepared)
+    momentsIngest(records, arm, value, prepared, checkpointDir)(m =>
+      sink(Ops.anovaFromMoments(m), Ops.pairwiseWelchFromMoments(m), m))
   }
 
   /** Live per-user top-N recommendations (r13 — the SERVING stream
@@ -1535,69 +1191,60 @@ object Streams {
     * user-basket rows score against the FROZEN similarity frame
     * (an [[graft.api.Ops.itemSimilarity]] /
     * `PreparedCooc.similarItems` output — materialize it to a
-    * source-backed frame, the psiDriftStream baseline rule) through
-    * [[graft.api.Ops.recommendTopN]]; the sink receives the ranked
-    * recommendations per trigger. STATELESS per trigger: each
-    * trigger must carry a user's FULL basket (the asof-enrich
-    * model) — seen-item exclusion sees only the rows in the trigger.
+    * source-backed frame) through [[graft.api.Ops.recommendTopN]];
+    * the sink receives the ranked recommendations per trigger. Each
+    * trigger must carry a user's FULL basket (the asof-enrich model)
+    * — seen-item exclusion sees only the rows in the trigger.
     * Per-trigger cost: one item join against the k-bounded graph +
     * the per-user rank.
     */
   def recommendStream(userItems: DataFrame, user: String, item: String,
                       sims: DataFrame, n: Int,
-                      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    userItems.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.recommendTopN(batch, user, item, sims, n))
-      }
-      .outputMode("update")
-      .start()
-  }
+                      sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(userItems, sink)(Ops.recommendTopN(_, user, item, sims, n))
 
   /** Live per-key changepoint location (r13 — the locating member of
     * the per-trigger monitoring family beside [[ksDriftStream]]):
     * each trigger's series locate their level shift through
-    * [[graft.api.Ops.changepointPerKey]]. STATELESS per trigger —
-    * each trigger must carry a key's FULL series (the
-    * [[recommendStream]] full-basket contract); windowed upstream
-    * aggregation is the natural feeder.
+    * [[graft.api.Ops.changepointPerKey]]. Each trigger must carry a
+    * key's FULL series (the [[recommendStream]] full-basket
+    * contract); windowed upstream aggregation is the natural feeder.
     */
   def changepointStream(records: DataFrame, key: String, time: String,
-                        tieBreak: String, value: org.apache.spark.sql.Column,
-                        sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    records.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.changepointPerKey(batch, key, time, tieBreak, value))
-      }
-      .outputMode("update")
-      .start()
-  }
+                        tieBreak: String, value: Column,
+                        sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(records, sink)(Ops.changepointPerKey(_, key, time, tieBreak, value))
 
   /** Strip a once-prepared boilerplate set
     * ([[graft.api.Ops.prepareBoilerplate]]) from a document stream —
     * q89's ingest form: the corpus-wide df census ran once; each
     * trigger pays its own paragraph explode + one hash join against
-    * the frozen common set. Per-doc reassembly means foreachBatch
-    * (the dedupAgainstCatalogStream shape). Reliable prep REQUIRED.
+    * the frozen common set.
     */
   def stripBoilerplateStream(docs: DataFrame, id: String, text: String,
-                             prepared: graft.api.Ops.PreparedBoilerplate,
-                             sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "stripBoilerplateStream needs a PreparedBoilerplate built with a reliable " +
-        "checkpointDir (prepareBoilerplate(..., checkpointDir = Some(dir))): " +
-        "localCheckpoint blocks do not survive executor loss across a long-lived stream")
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.api.Ops._
-        sink(batch.stripBoilerplateAgainst(prepared, id, text))
-      }
-      .outputMode("update")
-      .start()
+                             prepared: Ops.PreparedBoilerplate,
+                             sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("stripBoilerplateStream", "prepareBoilerplate", prepared)
+    eachTrigger(docs, sink)(_.stripBoilerplateAgainst(prepared, id, text))
   }
 
-  /** ONE copy of the durable-snapshot protocol both sketch streams
-    * ([[hllDistinctStream]], [[quantileSketchStream]]) persist their
+  /** Path-safe parameter fingerprint: the human-readable `params`
+    * tag plus a hash of the COLUMN IDENTITIES feeding the sketch —
+    * resuming a stateDir with a different value/item/group column
+    * would otherwise sum counts of unrelated quantities into
+    * structurally valid, semantically corrupt state with no error
+    * (r11 third review: the anonymous state columns make a column
+    * swap invisible to schema checks).
+    */
+  private def sketchFingerprint(params: String, cols: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(cols.mkString("\u0000").getBytes("UTF-8"))
+    params + "-" + md.take(6).map("%02x".format(_)).mkString
+  }
+
+  /** ONE copy of the durable-snapshot protocol the three sketch streams
+    * ([[hllDistinctStream]], [[quantileSketchStream]],
+    * [[heavyHittersStream]]) persist their
     * running state through — the machinery is durability-critical
     * (the r10 batchId-renumbering bug lived here), so it must not
     * exist twice (r11 review).
@@ -1622,21 +1269,7 @@ object Streams {
     * the current snapshot (plus at most one transient predecessor
     * mid-trigger).
     */
-  /** Path-safe parameter fingerprint: the human-readable `params`
-    * tag plus a hash of the COLUMN IDENTITIES feeding the sketch —
-    * resuming a stateDir with a different value/item/group column
-    * would otherwise sum counts of unrelated quantities into
-    * structurally valid, semantically corrupt state with no error
-    * (r11 third review: the anonymous state columns make a column
-    * swap invisible to schema checks).
-    */
-  private def sketchFingerprint(params: String, cols: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(cols.mkString("\u0000").getBytes("UTF-8"))
-    params + "-" + md.take(6).map("%02x".format(_)).mkString
-  }
-
-  private final class SnapshotStore(spark: org.apache.spark.sql.SparkSession,
+  private final class SnapshotStore(spark: SparkSession,
                                     stateDir: String, fingerprint: String) {
     import org.apache.hadoop.fs.Path
     require(stateDir.nonEmpty, "SnapshotStore: stateDir is required")
@@ -1681,7 +1314,7 @@ object Streams {
       atOpen.map(_._1).maxOption.getOrElse(-1L) + 1L)
 
     /** Newest complete snapshot: (frame, batchId it merged). */
-    def latestComplete(): Option[(org.apache.spark.sql.DataFrame, Long)] =
+    def latestComplete(): Option[(DataFrame, Long)] =
       list(completeOnly = true).lastOption.map { case (_, b, _, name) =>
         (spark.read.parquet(s"$stateDir/$name"), b)
       }
@@ -1710,8 +1343,8 @@ object Streams {
       *  - batchId > 0 with NO snapshot — stateDir wiped/swapped,
       *    checkpoint kept: re-seeding forgets everything absorbed.
       */
-    def resolve(cached: Option[(org.apache.spark.sql.DataFrame, Long)], batchId: Long,
-                stream: String): Either[org.apache.spark.sql.DataFrame, Option[org.apache.spark.sql.DataFrame]] = {
+    def resolve(cached: Option[(DataFrame, Long)], batchId: Long,
+                stream: String): Either[DataFrame, Option[DataFrame]] = {
       def mismatch(what: String): Nothing = throw new IllegalStateException(
         s"$stream: trigger batchId $batchId $what — the checkpointLocation and " +
           "stateDir do not match; they must move together (or start both fresh)")
@@ -1735,7 +1368,7 @@ object Streams {
       * older, and return the PERSISTED frame (re-read, so the sink
       * never holds lineage onto pruned files).
       */
-    def write(df: org.apache.spark.sql.DataFrame, batchId: Long): org.apache.spark.sql.DataFrame = {
+    def write(df: DataFrame, batchId: Long): DataFrame = {
       val id = nextId.getAndIncrement()
       val name = s"state_${id}_${batchId}_$fingerprint"
       df.write.mode("overwrite").parquet(s"$stateDir/$name")
@@ -1784,7 +1417,7 @@ object Streams {
   def hllDistinctStream(rows: DataFrame, group: Seq[String], value: String,
                         stateDir: String,
                         sink: DataFrame => Unit, p: Int = 12,
-                        checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+                        checkpointLocation: Option[String] = None): StreamingQuery = {
     require(stateDir.nonEmpty, "hllDistinctStream: stateDir is required")
     val spark = rows.sparkSession
     val store = new SnapshotStore(spark, stateDir,
@@ -1849,7 +1482,7 @@ object Streams {
                            quantiles: Seq[(String, Double)],
                            stateDir: String,
                            checkpointLocation: String,
-                           sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+                           sink: DataFrame => Unit): StreamingQuery = {
     require(stateDir.nonEmpty, "quantileSketchStream: stateDir is required")
     require(checkpointLocation.nonEmpty,
       "quantileSketchStream: checkpointLocation is required — sum-merged counts " +
@@ -1911,7 +1544,7 @@ object Streams {
                          k: Int, cap: Int,
                          stateDir: String,
                          checkpointLocation: String,
-                         sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+                         sink: DataFrame => Unit): StreamingQuery = {
     require(k >= 1 && cap >= k, s"heavyHittersStream: need 1 <= k <= cap (got k=$k, cap=$cap)")
     require(stateDir.nonEmpty, "heavyHittersStream: stateDir is required")
     require(checkpointLocation.nonEmpty,
@@ -2001,7 +1634,7 @@ object Streams {
                      carry: Seq[String],
                      direction: String = "backward",
                      toleranceUs: Option[Long] = None,
-                     sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+                     sink: DataFrame => Unit): StreamingQuery = {
     val ref = reference.cache()
     val streams = events.sparkSession.streams
     // lifecycle hardening (ADVICE r10): the listener registers BEFORE
@@ -2028,14 +1661,8 @@ object Streams {
       }
     streams.addListener(listener)
     val q = try {
-      events.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          import graft.api.Ops._
-          sink(batch.asofJoin(ref, key, leftTime, rightTime, carry,
-            direction, toleranceUs))
-        }
-        .outputMode("update")
-        .start()
+      eachTrigger(events, sink)(_.asofJoin(ref, key, leftTime, rightTime, carry,
+        direction, toleranceUs))
     } catch {
       case t: Throwable =>
         streams.removeListener(listener)
@@ -2055,90 +1682,54 @@ object Streams {
     * tokenizer ingest shape: training's corpus-wide word census ran
     * once; each trigger pays only its OWN distinct-word rewrite
     * (chained codegen'd replaces) + one vocab join + per-doc
-    * reassembly. No reliable-checkpoint requirement, deliberately:
-    * unlike the frame-backed prepared indexes, the merge list is a
-    * driver-held artifact with no executor-resident state to lose.
+    * reassembly. The merge list is driver-held, so the reliability
+    * rule does not apply.
     */
   def bpeEncodeStream(docs: DataFrame, id: String, text: String,
                       prepared: graft.operators.Bpe.PreparedBpe,
-                      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Bpe.encodeWith(batch, id, text, prepared))
-      }
-      .outputMode("update")
-      .start()
+                      sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(docs, sink)(graft.operators.Bpe.encodeWith(_, id, text, prepared))
 
   /** Weight a document stream against once-prepared DSIR profiles
     * ([[graft.api.Ops.prepareDsir]]) — the data-selection pipeline's
     * live form: as crawl batches arrive, each trigger's documents
     * get their importance log-weights and seeded-Gumbel scores
-    * against the FROZEN target/raw profiles (two broadcast
-    * bucket-table joins per trigger, nothing re-censuses), and the
-    * downstream sink keeps whatever score band the pipeline wants.
-    * Reliable prep required (the [[lmScoreStream]] reasoning).
+    * ([[graft.api.Ops.GraftDataFrameOps.dsirScoreAgainst]]) against
+    * the FROZEN target/raw profiles (two broadcast bucket-table joins
+    * per trigger, nothing re-censuses), and the downstream sink keeps
+    * whatever score band the pipeline wants.
     */
   def dsirScoreStream(docs: DataFrame, id: String, text: String,
-                      prepared: graft.api.Ops.PreparedDsir,
-                      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "dsirScoreStream needs a PreparedDsir built with a reliable checkpointDir " +
-        "(prepareDsir(..., checkpointDir = Some(dir)))")
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.dsirScore(batch, prepared, id, text)
-          .select(org.apache.spark.sql.functions.col(id),
-            org.apache.spark.sql.functions.col("n_grams"),
-            org.apache.spark.sql.functions.round(
-              org.apache.spark.sql.functions.col("__lnw").cast("double"), 6).as("lnw"),
-            org.apache.spark.sql.functions.round(
-              org.apache.spark.sql.functions.col("__g"), 6).as("gumbel"),
-            org.apache.spark.sql.functions.round(
-              org.apache.spark.sql.functions.col("__score"), 6).as("score")))
-      }
-      .outputMode("update")
-      .start()
+                      prepared: Ops.PreparedDsir,
+                      sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("dsirScoreStream", "prepareDsir", prepared)
+    eachTrigger(docs, sink)(_.dsirScoreAgainst(prepared, id, text))
   }
 
   /** Encode a document stream with a frozen WordPiece vocabulary
     * ([[graft.operators.Wordpiece.prepareWordpiece]]) —
     * [[bpeEncodeStream]]'s sibling for the greedy-longest-match
-    * family: the vocab IS the whole model (driver-held), so no
-    * reliability contract applies; per trigger the batch pays its
+    * family: the vocab IS the whole model (driver-held), so the
+    * reliability rule does not apply; per trigger the batch pays its
     * own distinct-word greedy walk + corpus-side join.
     */
   def wordpieceEncodeStream(docs: DataFrame, id: String, text: String,
                             prepared: graft.operators.Wordpiece.PreparedWordpiece,
-                            sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.operators.Wordpiece.encodeWith(batch, id, text, prepared))
-      }
-      .outputMode("update")
-      .start()
+                            sink: DataFrame => Unit): StreamingQuery =
+    eachTrigger(docs, sink)(graft.operators.Wordpiece.encodeWith(_, id, text, prepared))
 
   /** Match a live value stream against a once-prepared edit-distance
     * catalog index ([[graft.api.Ops.prepareEditIndex]]) — q94's
     * ingest form (dirty feed vs master list as records arrive): each
     * trigger pays its own deletion-variant explode + key hash join +
     * threshold-Levenshtein verify against the pinned catalog frames,
-    * never a catalog rescan. Reliable prep REQUIRED (the PreparedLm
-    * contract: localCheckpoint blocks do not survive executor loss
-    * across a long-lived stream).
+    * never a catalog rescan.
     */
   def editMatchStream(values: DataFrame, id: String, text: String,
-                      prepared: graft.api.Ops.PreparedEditIndex,
-                      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(prepared.reliable,
-      "editMatchStream needs a PreparedEditIndex built with a reliable " +
-        "checkpointDir (prepareEditIndex(..., checkpointDir = Some(dir))): " +
-        "localCheckpoint blocks do not survive executor loss across a long-lived stream")
-    values.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.editPairsAgainstPrepared(batch, id, text, prepared))
-      }
-      .outputMode("update")
-      .start()
+                      prepared: Ops.PreparedEditIndex,
+                      sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("editMatchStream", "prepareEditIndex", prepared)
+    eachTrigger(values, sink)(Ops.editPairsAgainstPrepared(_, id, text, prepared))
   }
 
   /** Perplexity-score a document stream against a once-trained LM
@@ -2146,26 +1737,12 @@ object Streams {
     * foreachBatch (the dedupAgainstCatalogStream shape): each trigger
     * pays its own bigram explode + vocab-sized hash joins against the
     * cached census frames, never a corpus rescan.
-    *
-    * The LM must be prepared with a reliable `checkpointDir`
-    * (ADVICE r7): a localCheckpoint-pinned census lives in executor-
-    * local blocks, so one executor loss mid-stream would fail every
-    * subsequent trigger with no way to recompute — the require turns
-    * that latent production outage into an immediate setup error.
     */
   def lmScoreStream(docs: DataFrame, id: String, text: String,
-                    lm: graft.api.Ops.PreparedLm,
-                    sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(lm.reliable,
-      "lmScoreStream needs a PreparedLm built with a reliable checkpointDir " +
-        "(prepareLm(..., checkpointDir = Some(dir))): localCheckpoint blocks " +
-        "do not survive executor loss across a long-lived streaming job")
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.scoreAgainstLm(batch, id, text, lm))
-      }
-      .outputMode("update")
-      .start()
+                    lm: Ops.PreparedLm,
+                    sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("lmScoreStream", "prepareLm", lm)
+    eachTrigger(docs, sink)(Ops.scoreAgainstLm(_, id, text, lm))
   }
 
   /** Score a document stream against a once-prepared Kneser–Ney LM
@@ -2173,83 +1750,51 @@ object Streams {
     * for the production smoothing: per trigger the batch pays its
     * own bigram explode plus vocab-sized hash joins against the
     * pinned census frames; OOV text degrades to the documented
-    * floors. Reliable prep required, same reasoning as
-    * [[lmScoreStream]].
+    * floors.
     */
   def knLmScoreStream(docs: DataFrame, id: String, text: String,
-                      kn: graft.api.Ops.PreparedKnLm,
-                      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(kn.reliable,
-      "knLmScoreStream needs a PreparedKnLm built with a reliable checkpointDir " +
-        "(prepareKnLm(..., checkpointDir = Some(dir)))")
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.api.Ops.scoreAgainstKnLm(batch, id, text, kn))
-      }
-      .outputMode("update")
-      .start()
+                      kn: Ops.PreparedKnLm,
+                      sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("knLmScoreStream", "prepareKnLm", kn)
+    eachTrigger(docs, sink)(Ops.scoreAgainstKnLm(_, id, text, kn))
   }
 
   /** Cap a document stream against a once-prepared vocabulary
     * ([[graft.api.Ops.prepareVocab]]) — per-trigger cost is the
     * trigger's own token explode + the kept-vocab hash join; the
-    * reference corpus is never re-censused. Reliable prep required,
-    * same reasoning as [[lmScoreStream]].
+    * reference corpus is never re-censused.
     */
   def capVocabStream(docs: DataFrame, id: String, text: String,
-                     vocab: graft.api.Ops.PreparedVocab,
-                     sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(vocab.reliable,
-      "capVocabStream needs a PreparedVocab built with a reliable checkpointDir " +
-        "(prepareVocab(..., checkpointDir = Some(dir)))")
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(new graft.api.Ops.GraftDataFrameOps(batch).capVocabAgainst(vocab, id, text))
-      }
-      .outputMode("update")
-      .start()
+                     vocab: Ops.PreparedVocab,
+                     sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("capVocabStream", "prepareVocab", vocab)
+    eachTrigger(docs, sink)(_.capVocabAgainst(vocab, id, text))
   }
 
   /** Coverage-score a document stream against a once-prepared gram
     * index ([[graft.api.Ops.prepareGramIndex]]) — per-trigger cost is
     * the trigger's gram hashing + the index join; the reference is
-    * never re-hashed. Reliable prep required.
+    * never re-hashed.
     */
   def ngramCoverageStream(docs: DataFrame, id: String, text: String,
-                          index: graft.api.Ops.PreparedGramIndex,
-                          sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(index.reliable,
-      "ngramCoverageStream needs a PreparedGramIndex built with a reliable " +
-        "checkpointDir (prepareGramIndex(..., checkpointDir = Some(dir)))")
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(new graft.api.Ops.GraftDataFrameOps(batch).ngramCoverageAgainst(index, id, text))
-      }
-      .outputMode("update")
-      .start()
+                          index: Ops.PreparedGramIndex,
+                          sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("ngramCoverageStream", "prepareGramIndex", index)
+    eachTrigger(docs, sink)(_.ngramCoverageAgainst(index, id, text))
   }
 
   /** BM25-rank a QUERY stream against a once-prepared corpus index
     * ([[graft.api.Ops.prepareBm25]]) — the live-search shape:
     * per-trigger cost is the trigger's own query-term explode
     * broadcast onto the frozen postings; the corpus is never
-    * re-indexed. Reliable prep required, same reasoning as
-    * [[lmScoreStream]].
+    * re-indexed.
     */
   def bm25TopKStream(queries: DataFrame, queryId: String, queryText: String,
-                     index: graft.api.Ops.PreparedBm25, k: Int = 10,
+                     index: Ops.PreparedBm25, k: Int = 10,
                      k1: Double = 1.2, b: Double = 0.75)(
-                     sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(index.reliable,
-      "bm25TopKStream needs a PreparedBm25 built with a reliable checkpointDir " +
-        "(prepareBm25(..., checkpointDir = Some(dir)))")
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(new graft.api.Ops.GraftDataFrameOps(batch)
-          .bm25TopKAgainst(index, queryId, queryText, k, k1, b))
-      }
-      .outputMode("update")
-      .start()
+                     sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("bm25TopKStream", "prepareBm25", index)
+    eachTrigger(queries, sink)(_.bm25TopKAgainst(index, queryId, queryText, k, k1, b))
   }
 
   /** ADC-rank a QUERY stream of embeddings against a once-prepared
@@ -2258,28 +1803,19 @@ object Streams {
     * [[bm25TopKStream]] shape: per-trigger cost is the trigger's own
     * cell routing + distance tables broadcast onto the frozen coded
     * frame (equi join on `cell` — the corpus side never reshuffles,
-    * never re-encodes). Reliable prep required, same reasoning as
-    * [[bm25TopKStream]]: the index outlives any one executor.
-    * `excludeSelf` defaults to FALSE here — the OPPOSITE of the
-    * batch form: live query ids are request/session ids OUTSIDE the
-    * corpus id space, where the batch convention's vid ≠ qid filter
-    * would silently drop a coincidentally colliding id's best match
-    * — or, type-mismatched, every result (r11 review).
+    * never re-encodes). `excludeSelf` defaults to FALSE here — the
+    * OPPOSITE of the batch form: live query ids are request/session
+    * ids OUTSIDE the corpus id space, where the batch convention's
+    * vid ≠ qid filter would silently drop a coincidentally colliding
+    * id's best match — or, type-mismatched, every result (r11 review).
     */
   def ivfPqTopKStream(queries: DataFrame, queryId: String, queryEmb: String,
-                      index: graft.operators.Similarity.PreparedIvfPq,
+                      index: PreparedIvfPq,
                       k: Int = 10, nprobe: Int = 2,
                       excludeSelf: Boolean = false)(
-                      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(index.reliable,
-      "ivfPqTopKStream needs a PreparedIvfPq built with a reliable checkpointDir " +
-        "(prepareIvfPqIndex(..., checkpointDir = Some(dir)))")
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(index.topK(batch, queryId, queryEmb, k, nprobe, excludeSelf))
-      }
-      .outputMode("update")
-      .start()
+                      sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("ivfPqTopKStream", "prepareIvfPqIndex", index)
+    eachTrigger(queries, sink)(index.topK(_, queryId, queryEmb, k, nprobe, excludeSelf))
   }
 
   /** [[ivfPqTopKStream]] with the exact re-rank stage (r17 — the
@@ -2289,25 +1825,18 @@ object Streams {
     * source of truth — [[graft.operators.Similarity.ivfPqTopKRerank]]
     * semantics, so recall@k can never sit below the raw ADC path's
     * at the same nprobe). `vectors` must be a stable source-backed
-    * frame (re-read per trigger — the psiDriftStream baseline rule);
-    * the shortlist broadcasts, the vector corpus never shuffles.
+    * frame (re-read per trigger); the shortlist broadcasts, the
+    * vector corpus never shuffles.
     */
   def ivfPqTopKRerankStream(queries: DataFrame, queryId: String, queryEmb: String,
-                            index: graft.operators.Similarity.PreparedIvfPq,
+                            index: PreparedIvfPq,
                             vectors: DataFrame, emb: String,
                             k: Int = 10, nprobe: Int = 2, rerankR: Int = 50,
                             excludeSelf: Boolean = false)(
-                            sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(index.reliable,
-      "ivfPqTopKRerankStream needs a PreparedIvfPq built with a reliable checkpointDir " +
-        "(prepareIvfPqIndex(..., checkpointDir = Some(dir)))")
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(index.topKRerank(batch, queryId, queryEmb, vectors, emb,
-          k, nprobe, rerankR, excludeSelf))
-      }
-      .outputMode("update")
-      .start()
+                            sink: DataFrame => Unit): StreamingQuery = {
+    requireReliable("ivfPqTopKRerankStream", "prepareIvfPqIndex", index)
+    eachTrigger(queries, sink)(index.topKRerank(_, queryId, queryEmb, vectors, emb,
+      k, nprobe, rerankR, excludeSelf))
   }
 
   final case class Doc(doc_id: Long, n_tokens: Long)

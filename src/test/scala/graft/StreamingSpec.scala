@@ -935,7 +935,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2loop_ckpt").toString
     val prepared = graft.api.Ops.prepareScd2(series.head, "snap_ts", "id", attrs, Some(ckpt))
     val sunk = scala.collection.mutable.ArrayBuffer[graft.api.Ops.PreparedScd2]()
-    val loop = new Streams.Scd2Loop(prepared, ckpt, dim => sunk += dim)
+    val loop = Streams.scd2Loop(prepared, ckpt, dim => sunk += dim)
     loop.handle(series(1), 0L)
     val first = sunk.last.history.collect().map(_.toString).sorted.toSeq
     // a foreachBatch RETRY re-absorbs the SAME extract from the
@@ -2769,7 +2769,7 @@ class StreamingSpec extends AnyFunSuite {
     val c1 = Seq((2L, "b", 2.0, "delete", 2L)).toDF("id", "name", "bal", "op", "seq")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_scd1loop_ckpt").toString
     val sunk = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
-    val loop = new Streams.Scd1Loop(base, "id", "op", "seq", ckpt, dim => sunk += dim)
+    val loop = Streams.scd1Loop(base, "id", "op", "seq", ckpt, dim => sunk += dim)
     loop.handle(c0, 0L)
     val first = sunk.last.collect().map(_.toString).sorted.toSeq
     // a foreachBatch RETRY re-applies from the retained pre-apply
