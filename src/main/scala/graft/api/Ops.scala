@@ -1198,7 +1198,7 @@ object Ops {
     * value census (counts already coalesced) — the row-input
     * [[ksStatisticByGroup]] and the artifact-input
     * [[governanceBatteryFromPrepared]] both end here (r17, the
-    * welchTFinishFromSides discipline).
+    * welchTFinish discipline).
     */
   /** The shared rank-census window pass (r17 optimization round): per
     * (grp, v) row of a merged census, the per-segment totals, census
@@ -1292,7 +1292,7 @@ object Ops {
     * value census (counts already coalesced) — the row-input
     * [[mannWhitneyUByGroup]] and the artifact-input
     * [[governanceBatteryFromPrepared]] both end here (r17, the
-    * welchTFinishFromSides discipline).
+    * welchTFinish discipline).
     */
   private[graft] def mannWhitneyUFinishFromCensus(m0: DataFrame,
                                                   allowWideCensus: Boolean,
@@ -1476,51 +1476,98 @@ object Ops {
         col("n_total"), col("k_groups"), col("h"), col("h_adj"))
   }
 
+  /** The exact-moments census of the q162 family ([[welchT]],
+    * [[mdeReadout]], [[msprt]], [[alwaysValidCi]], [[msprtHorizon]],
+    * [[sampleSizeCurve]], [[cohensDByGroup]], [[postStratifiedZ]],
+    * [[anovaF]], [[pairwiseWelch]], [[groupSequential]], the
+    * governance battery and their keyed forms) — the ONE place its
+    * rule lives. Rows with a null `value` or a null key drop; per key
+    * ONE map-combinable aggregate collects `n_<suf>` (the row count),
+    * `__s_<suf>` = Σx at DECIMAL(38,2) and `__ss_<suf>` = Σx² at
+    * DECIMAL(38,4), each x read through the lossless
+    * [[graft.util.Portable.dec]] view, so the sums are exact and
+    * independent of partitioning and order. Every statistic is then a
+    * FIXED double tree over the exact sums, evaluated through
+    * [[MomentReadout]] in its stated operation order and rounded at 6,
+    * so the engine and the oracle run the same IEEE operations on the
+    * same doubles. No keys is the whole-frame 1-row aggregate
+    * (`groupBy()` is `Dataset.agg`). `keys` are (output name, column).
+    */
+  private def exactMoments(df: DataFrame, value: Column,
+                           keys: Seq[(String, Column)], suf: String): DataFrame =
+    df.filter(keys.foldLeft(value.isNotNull) { case (c, (_, k)) => c && k.isNotNull })
+      .groupBy(keys.map { case (name, k) => k.as(name) }: _*)
+      .agg(count(lit(1)).as(s"n_$suf"), momentSums(value, s"__s_$suf", s"__ss_$suf"): _*)
+
+  /** The Σx and Σx² aggregates of the [[exactMoments]] rule, named `s`
+    * and `ss` (the governance census counts its own rows).
+    */
+  private def momentSums(value: Column, s: String, ss: String): Seq[Column] = {
+    import org.apache.spark.sql.types.DecimalType
+    val d = graft.util.Portable.dec(value)
+    Seq(sum(d).cast(DecimalType(38, 2)).as(s),
+      sum(d * d).cast(DecimalType(38, 4)).as(ss))
+  }
+
+  /** Two sides' [[exactMoments]] (suffixes `a` and `b`) as one frame
+    * — see [[mergeSides]].
+    */
+  private def momentSides(a: DataFrame, b: DataFrame, value: Column,
+                          keys: Seq[(String, Column)]): DataFrame =
+    mergeSides(exactMoments(a, value, keys, "a"), exactMoments(b, value, keys, "b"),
+      keys.map(_._1))
+
+  /** Merge side `a` with side `b`: with no keys the 1×1 broadcast cross
+    * of two 1-row aggregates (the q162 statement); keyed, a full-outer
+    * join on the keys, where a key seen on one side only reports the
+    * other side's count as 0 and its sums as null.
+    */
+  private def mergeSides(a: DataFrame, b: DataFrame, keys: Seq[String]): DataFrame =
+    if (keys.isEmpty) a.crossJoin(broadcast(b))
+    else a.join(b, keys, "full_outer")
+      .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
+      .withColumn("n_b", coalesce(col("n_b"), lit(0L)))
+
+  /** The double readouts of one side's [[exactMoments]] columns, in the
+    * family's fixed operation order: `mean = Σx/n`,
+    * `ssd = Σx² − Σx·Σx/n`, the sample variance `v = ssd/(n − 1)` and
+    * `vn = v/n`. `n` is the side's count as a double, or a guarded
+    * stand-in ([[MomentReadout.guarded]]) where an absent or one-row
+    * side must not reach a zero divisor (ANSI mode raises on a double
+    * division by zero).
+    */
+  private final case class MomentReadout(suf: String, n: Column) {
+    val sx: Column = col(s"__s_$suf").cast("double")
+    val sxx: Column = col(s"__ss_$suf").cast("double")
+    def mean: Column = sx / n
+    def ssd: Column = sxx - sx * sx / n
+    def v: Column = ssd / (n - lit(1.0))
+    def vn: Column = v / n
+    /** `v` with the n − 1 divisor on a stand-in of 1 below n = 2, for
+      * callers that mask those rows.
+      */
+    def vGuarded: Column = ssd / when(n >= 2, n - lit(1.0)).otherwise(lit(1.0))
+  }
+  private object MomentReadout {
+    def apply(suf: String): MomentReadout = MomentReadout(suf, col(s"n_$suf").cast("double"))
+    /** `n` below `min` divides by `min` instead; the caller masks those rows. */
+    def guarded(suf: String, min: Int): MomentReadout = MomentReadout(suf,
+      when(col(s"n_$suf") >= min, apply(suf).n).otherwise(lit(min.toDouble)))
+  }
+
   /** Welch's unequal-variance two-sample t test (r13 — the PARAMETRIC
     * sibling of [[mannWhitneyU]] and the two-sample member of the
     * q119 moment family: "did the MEAN shift", robust to unequal
     * variances — the default t test a careful analyst reaches for):
-    * per side ONE map-combinable aggregate collects the exact decimal
-    * moments (n, Σx at DECIMAL(38,2), Σx² at DECIMAL(38,4) over the
-    * lossless [[graft.util.Portable]] view — order-independent under
-    * any partitioning), then mean/variance/t/df are a FIXED double
-    * expression over the exact sums (the q119/q100 discipline),
-    * rounded at 6: `t = (m₁−m₂)/√(s₁²/n₁ + s₂²/n₂)` and the
-    * Welch–Satterthwaite df. Degenerate inputs (a side with n < 2,
-    * zero pooled standard error) yield null t/df with the counts and
-    * means reporting. Returns ONE row:
+    * per side the [[exactMoments]] census, then
+    * `t = (m₁−m₂)/√(s₁²/n₁ + s₂²/n₂)` and the Welch–Satterthwaite df
+    * as its fixed double tree, rounded at 6. Degenerate inputs (a side
+    * with n < 2, zero pooled standard error) yield null t/df with the
+    * counts and means reporting. Returns ONE row:
     * (n_a, n_b, mean_a, mean_b, t, df).
     */
-  def welchT(a: DataFrame, b: DataFrame, value: Column): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull).agg(
-        count(lit(1)).as(s"n_$suf"),
-        sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-        sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    // sample variance from the exact sums: (Σx² − (Σx)²/n)/(n−1)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    def vn(s: String) = v(s) / nD(s)
-    val se2 = vn("a") + vn("b")
-    val ok = col("n_a") >= 2 && col("n_b") >= 2
-    val df_ = se2 * se2 /
-      (vn("a") * vn("a") / (nD("a") - lit(1.0)) +
-        vn("b") * vn("b") / (nD("b") - lit(1.0)))
-    side(a, "a").crossJoin(broadcast(side(b, "b")))
-      .withColumn("mean_a", when(col("n_a") > 0, round(mean("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(mean("b"), 6)))
-      .withColumn("t", when(ok && se2 > 0.0,
-        round((mean("a") - mean("b")) / sqrt(se2), 6)))
-      .withColumn("df", when(ok && se2 > 0.0, round(df_, 6)))
-      .select(col("n_a"), col("n_b"), col("mean_a"), col("mean_b"),
-        col("t"), col("df"))
-  }
+  def welchT(a: DataFrame, b: DataFrame, value: Column): DataFrame =
+    welchTFinish(momentSides(a, b, value, Nil), Nil)
 
   /** Spearman rank correlation with ties (r13 — the rank member of
     * the q119 correlation family: monotone association robust to
@@ -2206,12 +2253,11 @@ object Ops {
     * companion to [[welchT]]/[[cupedZ]]: "with THIS traffic and THIS
     * variance, what mean shift could the test even see" — the number
     * that stops teams shipping underpowered readouts): per side the
-    * q162 exact decimal moments (n, Σx, Σx² over the
-    * [[graft.util.Portable]] view), then
+    * [[exactMoments]] census, then
     * `mde_abs = (z_{1−α/2} + z_power)·√(s_a²/n_a + s_b²/n_b)` and
-    * `mde_rel = mde_abs / mean_a` as one fixed double tree over the
-    * exact sums, round 6 ([[zAlpha025]]/[[zPower80]] by default —
-    * pass others for different α/power). Degenerate sides (n < 2,
+    * `mde_rel = mde_abs / mean_a` as its fixed double tree, round 6
+    * ([[zAlpha025]]/[[zPower80]] by default — pass others for
+    * different α/power). Degenerate sides (n < 2,
     * zero variance both sides, zero baseline mean for the relative
     * form) report null with counts/means saying why. Returns ONE
     * row: (n_a, n_b, mean_a, mean_b, sd_a, sd_b, mde_abs, mde_rel).
@@ -2222,33 +2268,29 @@ object Ops {
   def mdeReadout(a: DataFrame, b: DataFrame, value: Column,
                  zAlpha: Double = zAlpha025,
                  zPower: Double = zPower80): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(zAlpha > 0.0 && zPower >= 0.0, "mdeReadout: z constants must be positive")
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull).agg(
-        count(lit(1)).as(s"n_$suf"),
-        sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-        sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    val se2 = v("a") / nD("a") + v("b") / nD("b")
+    mdeFinish(momentSides(a, b, value, Nil), Nil, zAlpha, zPower)
+  }
+
+  /** The MDE tree of [[mdeReadout]] and [[mdeReadoutByGroup]] over
+    * merged moment sides, `keyCols` leading the output.
+    */
+  private def mdeFinish(sides: DataFrame, keyCols: Seq[String],
+                        zAlpha: Double, zPower: Double): DataFrame = {
+    val (ra, rb) = (MomentReadout("a"), MomentReadout("b"))
+    val se2 = ra.vn + rb.vn
     val ok = col("n_a") >= 2 && col("n_b") >= 2
     val mde = (lit(zAlpha) + lit(zPower)) * sqrt(se2)
-    side(a, "a").crossJoin(broadcast(side(b, "b")))
-      .withColumn("mean_a", when(col("n_a") > 0, round(mean("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(mean("b"), 6)))
-      .withColumn("sd_a", when(col("n_a") >= 2, round(sqrt(v("a")), 6)))
-      .withColumn("sd_b", when(col("n_b") >= 2, round(sqrt(v("b")), 6)))
+    sides
+      .withColumn("mean_a", when(col("n_a") > 0, round(ra.mean, 6)))
+      .withColumn("mean_b", when(col("n_b") > 0, round(rb.mean, 6)))
+      .withColumn("sd_a", when(col("n_a") >= 2, round(sqrt(ra.v), 6)))
+      .withColumn("sd_b", when(col("n_b") >= 2, round(sqrt(rb.v), 6)))
       .withColumn("mde_abs", when(ok && se2 > 0.0, round(mde, 6)))
-      .withColumn("mde_rel", when(ok && se2 > 0.0 && mean("a") =!= 0.0,
-        round(mde / mean("a"), 6)))
-      .select(col("n_a"), col("n_b"), col("mean_a"), col("mean_b"),
-        col("sd_a"), col("sd_b"), col("mde_abs"), col("mde_rel"))
+      .withColumn("mde_rel", when(ok && se2 > 0.0 && ra.mean =!= 0.0,
+        round(mde / ra.mean, 6)))
+      .select(keyCols.map(col) ++ Seq(col("n_a"), col("n_b"), col("mean_a"),
+        col("mean_b"), col("sd_a"), col("sd_b"), col("mde_abs"), col("mde_rel")): _*)
   }
 
   /** Two-proportion minimum-detectable-effect readout (r16 — VERDICT
@@ -2303,12 +2345,12 @@ object Ops {
     * variance τ², how many samples per arm until the always-valid
     * boundary would fire" — the sequential analogue of
     * [[mdeReadout]]'s fixed-n sizing): the metric's variance σ²
-    * comes from ONE map-combinable exact-decimal moment aggregate of
-    * the supplied frame (the pre-experiment traffic), and the
+    * comes from the [[exactMoments]] census of the supplied frame
+    * (the pre-experiment traffic), and the
     * deterministic expected path with equal allocation n per arm has
     * V(n) = 2σ²/n and
     * `ln Λ(n) = ½·ln(V/(V+τ²)) + δ²τ²/(2V(V+τ²))` (the
-    * [[msprtFinish]] tree with Δ pinned at δ). The horizon is the
+    * [[msprtFinishCols]] tree with Δ pinned at δ). The horizon is the
     * SMALLEST n on a fixed integer grid with ln Λ(n) > −ln α.
     *
     * The grid is pure integer arithmetic — three stepped ranges
@@ -2334,18 +2376,21 @@ object Ops {
   def msprtHorizon(df: DataFrame, value: Column, delta: Double,
                    tau2: Double,
                    lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"msprtHorizon: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0, s"msprtHorizon: lnAlpha ($lnAlpha) must be negative")
-    val d = graft.util.Portable.dec(value)
-    val m = df.filter(value.isNotNull).agg(
-      count(lit(1)).as("n_src"),
-      sum(d).cast(DecimalType(38, 2)).as("__s"),
-      sum(d * d).cast(DecimalType(38, 4)).as("__ss"))
-    val nD = col("n_src").cast("double")
-    val v = (col("__ss").cast("double") -
-      col("__s").cast("double") * col("__s").cast("double") / nD) /
-      (nD - lit(1.0))
+    msprtHorizonOn(df, value, Nil, delta, tau2, lnAlpha)
+  }
+
+  /** The body of [[msprtHorizon]] and [[msprtHorizonByGroup]]: one
+    * [[exactMoments]] census per key, the grid exploded per key, MIN
+    * crossing per key.
+    */
+  private def msprtHorizonOn(df: DataFrame, value: Column,
+                             keys: Seq[(String, Column)], delta: Double,
+                             tau2: Double, lnAlpha: Double): DataFrame = {
+    val keyCols = keys.map(k => col(k._1))
+    val m = exactMoments(df, value, keys, "src")
+    val v = MomentReadout("src").vGuarded
     val okv = col("n_src") >= 2
     val vS = when(okv && v > 0.0, v).otherwise(lit(1.0))
     val grid = concat(
@@ -2359,14 +2404,14 @@ object Ops {
     m.withColumn("__ok", okv && v > 0.0)
       .withColumn("__n_try", explode(grid))
       .withColumn("__cross", col("__ok") && lnLam > lit(-lnAlpha))
-      .groupBy()
+      .groupBy(keyCols: _*)
       .agg(first(col("n_src")).as("n_src"),
         first(when(col("__ok"), round(v, 0).cast("long"))).as("sigma2"),
         min(when(col("__cross"), col("__n_try"))).as("horizon_n"))
       .withColumn("delta", lit(delta))
       .withColumn("tau2", lit(tau2))
-      .select(col("n_src"), col("sigma2"), col("delta"), col("tau2"),
-        col("horizon_n"))
+      .select(keyCols ++ Seq(col("n_src"), col("sigma2"), col("delta"),
+        col("tau2"), col("horizon_n")): _*)
   }
 
   /** Per-segment two-proportion MDE (r16 — [[mdeProportions]] keyed
@@ -2430,7 +2475,7 @@ object Ops {
     * keyed by a segment column: "which segments' monitors would even
     * fire within the experiment's lifetime at effect δ" — the
     * sequential sizing localized the way q188 localizes the fixed-n
-    * MDE): per segment ONE exact-decimal moment census, the SAME
+    * MDE): per segment the [[exactMoments]] census, the SAME
     * pure-integer three-tier candidate grid exploded per segment
     * (segments × ~147k rows — grid cost tracks the segment domain,
     * never the corpus), the q196 ln-space boundary, MIN crossing per
@@ -2441,43 +2486,10 @@ object Ops {
   def msprtHorizonByGroup(df: DataFrame, group: String, value: Column,
                           delta: Double, tau2: Double,
                           lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"msprtHorizonByGroup: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0,
       s"msprtHorizonByGroup: lnAlpha ($lnAlpha) must be negative")
-    val d = graft.util.Portable.dec(value)
-    val m = df.filter(col(group).isNotNull && value.isNotNull)
-      .groupBy(col(group).as("grp"))
-      .agg(count(lit(1)).as("n_src"),
-        sum(d).cast(DecimalType(38, 2)).as("__s"),
-        sum(d * d).cast(DecimalType(38, 4)).as("__ss"))
-    val nD = col("n_src").cast("double")
-    // the n−1 divisor is guarded by the same stand-in discipline as
-    // the whole-frame form's okv mask (n_src = 1 segments exist)
-    val nden = when(col("n_src") >= 2, nD - lit(1.0)).otherwise(lit(1.0))
-    val v = (col("__ss").cast("double") -
-      col("__s").cast("double") * col("__s").cast("double") / nD) / nden
-    val okv = col("n_src") >= 2
-    val vS = when(okv && v > 0.0, v).otherwise(lit(1.0))
-    val grid = concat(
-      sequence(lit(1L), lit(65536L)),
-      sequence(lit(66560L), lit(67108864L), lit(1024L)),
-      sequence(lit(67174400L), lit(1073741824L), lit(65536L)))
-    val vv = lit(2.0) * vS / col("__n_try").cast("double")
-    val lnLam = lit(0.5) * round(log(vv / (vv + lit(tau2))), 12) +
-      lit(delta * delta) * lit(tau2) /
-        (lit(2.0) * vv * (vv + lit(tau2)))
-    m.withColumn("__ok", okv && v > 0.0)
-      .withColumn("__n_try", explode(grid))
-      .withColumn("__cross", col("__ok") && lnLam > lit(-lnAlpha))
-      .groupBy(col("grp"))
-      .agg(first(col("n_src")).as("n_src"),
-        first(when(col("__ok"), round(v, 0).cast("long"))).as("sigma2"),
-        min(when(col("__cross"), col("__n_try"))).as("horizon_n"))
-      .withColumn("delta", lit(delta))
-      .withColumn("tau2", lit(tau2))
-      .select(col("grp"), col("n_src"), col("sigma2"), col("delta"),
-        col("tau2"), col("horizon_n"))
+    msprtHorizonOn(df, value, Seq("grp" -> col(group)), delta, tau2, lnAlpha)
   }
 
   /** Per-segment Cliff's delta (r16 wave 3 — the EFFECT-SIZE column
@@ -2529,8 +2541,8 @@ object Ops {
   /** Per-segment Cohen's d and Hedges' g (r16 wave 3 — the
     * PARAMETRIC effect size beside the q212 battery's p-value:
     * standardized mean difference in pooled-SD units, with the
-    * small-sample bias correction): per (segment, side) the q162
-    * exact decimal moments, then
+    * small-sample bias correction): per (segment, side) the
+    * [[exactMoments]] census, then
     * `d = (mean_a − mean_b)/s_p` with
     * `s_p² = ((SS_a − S_a²/n_a) + (SS_b − S_b²/n_b))/(n_a+n_b−2)`
     * and `g = d·J(ν)`, ν = n_a+n_b−2, where the exact correction
@@ -2550,37 +2562,23 @@ object Ops {
     */
   def cohensDByGroup(a: DataFrame, b: DataFrame, group: String,
                      value: Column): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d = graft.util.Portable.dec(value)
-    def side(df: DataFrame, suf: String): DataFrame =
-      df.filter(col(group).isNotNull && value.isNotNull)
-        .groupBy(col(group).as("grp"))
-        .agg(count(lit(1)).as(s"n_$suf"),
-          sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-          sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    val m = side(a, "a").join(side(b, "b"), Seq("grp"), "full_outer")
-      .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
-      .withColumn("n_b", coalesce(col("n_b"), lit(0L)))
-    def nD(s: String) = col(s"n_$s").cast("double")
-    // two stand-in tiers: nM guards the means (valid from n = 1), nS
-    // guards the variance/dof divisors (valid from n = 2)
-    def nM(s: String) = when(col(s"n_$s") >= 1, nD(s)).otherwise(lit(1.0))
-    def nS(s: String) = when(col(s"n_$s") >= 2, nD(s)).otherwise(lit(2.0))
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
+    val m = momentSides(a, b, value, Seq("grp" -> col(group)))
+    // two stand-in tiers: the means divide by a count valid from n = 1,
+    // the variance/dof divisors by one valid from n = 2
+    def mM(s: String) = MomentReadout.guarded(s, 1)
+    def mS(s: String) = MomentReadout.guarded(s, 2)
     val ok = col("n_a") >= 2 && col("n_b") >= 2
-    val sp2 = ((sxx("a") - sx("a") * sx("a") / nS("a")) +
-      (sxx("b") - sx("b") * sx("b") / nS("b"))) /
-      (nS("a") + nS("b") - lit(2.0))
-    val nuS = when(ok, nD("a") + nD("b") - lit(2.0)).otherwise(lit(4.0))
-    val dRaw = (sx("a") / nS("a") - sx("b") / nS("b")) /
+    val sp2 = (mS("a").ssd + mS("b").ssd) / (mS("a").n + mS("b").n - lit(2.0))
+    val nuS = when(ok, MomentReadout("a").n + MomentReadout("b").n - lit(2.0))
+      .otherwise(lit(4.0))
+    val dRaw = (mS("a").mean - mS("b").mean) /
       sqrt(when(ok && sp2 > 0.0, sp2).otherwise(lit(1.0)))
     val lnJ = PValues.lnGammaCol(nuS / lit(2.0)) -
       lit(0.5) * round(log(nuS / lit(2.0)), 12) -
       PValues.lnGammaCol((nuS - lit(1.0)) / lit(2.0))
     m
-      .withColumn("mean_a", when(col("n_a") > 0, round(sx("a") / nM("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(sx("b") / nM("b"), 6)))
+      .withColumn("mean_a", when(col("n_a") > 0, round(mM("a").mean, 6)))
+      .withColumn("mean_b", when(col("n_b") > 0, round(mM("b").mean, 6)))
       .withColumn("sd_pooled", when(ok && sp2 > 0.0, round(sqrt(sp2), 6)))
       .withColumn("d", when(ok && sp2 > 0.0, round(dRaw, 6)))
       .withColumn("g", when(ok && sp2 > 0.0, round(dRaw * exp(lnJ), 6)))
@@ -2592,7 +2590,7 @@ object Ops {
     * sibling of [[msprtHorizon]], completing the sizing family: "to
     * see effect δ at α/power, how many samples per arm does a
     * classic two-sample test need" for a whole grid of δ in one
-    * statement): ONE exact-decimal moment census of the
+    * statement): the [[exactMoments]] census of the
     * pre-experiment traffic, then per declared δ
     * `n = ⌈2σ²(z_{1−α/2}+z_power)²/δ²⌉` — the z-sum squares ONCE in
     * Scala and embeds as the SAME 17-digit literal in engine and
@@ -2608,21 +2606,13 @@ object Ops {
   def sampleSizeCurve(df: DataFrame, value: Column, deltas: Seq[Double],
                       zAlpha: Double = zAlpha025,
                       zPower: Double = zPower80): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(deltas.nonEmpty && deltas.forall(_ > 0.0),
       "sampleSizeCurve: deltas must be positive")
     require(zAlpha > 0.0 && zPower >= 0.0,
       "sampleSizeCurve: z constants must be positive")
     val zq = (zAlpha + zPower) * (zAlpha + zPower)
-    val d = graft.util.Portable.dec(value)
-    val m = df.filter(value.isNotNull).agg(
-      count(lit(1)).as("n_src"),
-      sum(d).cast(DecimalType(38, 2)).as("__s"),
-      sum(d * d).cast(DecimalType(38, 4)).as("__ss"))
-    val nD = col("n_src").cast("double")
-    val nden = when(col("n_src") >= 2, nD - lit(1.0)).otherwise(lit(1.0))
-    val v = (col("__ss").cast("double") -
-      col("__s").cast("double") * col("__s").cast("double") / nD) / nden
+    val m = exactMoments(df, value, Nil, "src")
+    val v = MomentReadout("src").vGuarded
     val okv = col("n_src") >= 2 && v > 0.0
     m.withColumn("delta", explode(array(deltas.map(lit): _*)))
       .withColumn("n_per_arm", when(okv,
@@ -2652,7 +2642,7 @@ object Ops {
     * boundaries — this is that readout). Rows carry a `look` index
     * (1..`looks` — the scheduled interim analyses, e.g. week number);
     * per look the CUMULATIVE (all traffic through that look) per-arm
-    * exact decimal moments give the Welch-style
+    * [[exactMoments]] sums give the Welch-style
     * `z_k = (mean_b − mean_a)/√(s²_a/n_a + s²_b/n_b)` (round 6), and
     * the look's boundary is the published two-sided α = 0.05
     * constant: Pocock `c_K` flat across looks, O'Brien–Fleming
@@ -2722,25 +2712,15 @@ object Ops {
     require(armA != armB, "groupSequential: armA and armB must differ")
   }
 
-  /** One arm's per-look exact decimal moment census, optionally
-    * keyed by a segment column — shared by the whole-frame and keyed
-    * forms so the two can never drift.
+  /** One arm's per-look [[exactMoments]] census, optionally keyed by
+    * a segment column — shared by the whole-frame and keyed forms so
+    * the two can never drift.
     */
   private def gsSide(df: DataFrame, grp: Option[String], arm: Column,
                      value: Column, look: Column, looks: Int,
-                     a: String, suf: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d = graft.util.Portable.dec(value)
-    val base = df.filter(value.isNotNull && look.isNotNull &&
-      look.cast("long").between(1L, looks.toLong) && arm === a &&
-      grp.map(g => col(g).isNotNull).getOrElse(lit(true)))
-    val keys = grp.map(g => Seq(col(g).as("grp"))).getOrElse(Nil) :+
-      look.cast("long").as("look")
-    base.groupBy(keys: _*)
-      .agg(count(lit(1)).as(s"__in_$suf"),
-        sum(d).cast(DecimalType(38, 2)).as(s"__is_$suf"),
-        sum(d * d).cast(DecimalType(38, 4)).as(s"__iss_$suf"))
-  }
+                     a: String, suf: String): DataFrame =
+    exactMoments(df.filter(look.cast("long").between(1L, looks.toLong) && arm === a),
+      value, grp.map(g => "grp" -> col(g)).toSeq :+ ("look" -> look.cast("long")), suf)
 
   /** The shared group-sequential decision tail over the joined look
     * grid — cumulative-through-look exact decimal sums (windows over
@@ -2758,22 +2738,18 @@ object Ops {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("look"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     def cum(suf: String): Seq[Column] = Seq(
-      sum(coalesce(col(s"__in_$suf"), lit(0L))).over(w).as(s"n_$suf"),
-      sum(coalesce(col(s"__is_$suf"), lit(0).cast(DecimalType(38, 2)))).over(w)
+      sum(coalesce(col(s"n_$suf"), lit(0L))).over(w).as(s"n_$suf"),
+      sum(coalesce(col(s"__s_$suf"), lit(0).cast(DecimalType(38, 2)))).over(w)
         .cast(DecimalType(38, 2)).as(s"__s_$suf"),
-      sum(coalesce(col(s"__iss_$suf"), lit(0).cast(DecimalType(38, 4)))).over(w)
+      sum(coalesce(col(s"__ss_$suf"), lit(0).cast(DecimalType(38, 4)))).over(w)
         .cast(DecimalType(38, 4)).as(s"__ss_$suf"))
     val m = joined
       .select((keyCols.map(col) :+ col("look")) ++ cum("a") ++ cum("b"): _*)
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def nM(s: String) = when(col(s"n_$s") >= 1, nD(s)).otherwise(lit(1.0))
-    def nS(s: String) = when(col(s"n_$s") >= 2, nD(s)).otherwise(lit(2.0))
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def vn(s: String) =
-      ((sxx(s) - sx(s) * sx(s) / nS(s)) / (nS(s) - lit(1.0))) / nS(s)
+    // a look with n < 2 through it computes on stand-ins, masked by `ok`
+    def mM(s: String) = MomentReadout.guarded(s, 1)
+    def mS(s: String) = MomentReadout.guarded(s, 2)
     val ok = col("n_a") >= 2 && col("n_b") >= 2
-    val se2 = vn("a") + vn("b")
+    val se2 = mS("a").vn + mS("b").vn
     // embedded in the oracle as the same %.17g literal (q183 rule)
     val cLit = lit(cFinal)
     val boundary = spending match {
@@ -2782,10 +2758,10 @@ object Ops {
       case _ => round(cLit, 6)
     }
     val decided = m
-      .withColumn("mean_a", when(col("n_a") > 0, round(sx("a") / nM("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(sx("b") / nM("b"), 6)))
+      .withColumn("mean_a", when(col("n_a") > 0, round(mM("a").mean, 6)))
+      .withColumn("mean_b", when(col("n_b") > 0, round(mM("b").mean, 6)))
       .withColumn("z", when(ok && se2 > 0.0,
-        round((sx("b") / nS("b") - sx("a") / nS("a")) / sqrt(when(ok && se2 > 0.0, se2).otherwise(lit(1.0))), 6)))
+        round((mS("b").mean - mS("a").mean) / sqrt(when(ok && se2 > 0.0, se2).otherwise(lit(1.0))), 6)))
       .withColumn("boundary", boundary)
       .withColumn("cross", when(col("z").isNotNull, abs(col("z")) >= col("boundary")))
       .withColumn("stop_look",
@@ -2801,28 +2777,22 @@ object Ops {
         col("stop_look"), col("decision")): _*)
   }
 
-  /** The (segment?, look, arm) exact decimal moment census of a
-    * traffic frame — what [[PreparedGroupSequential]] accumulates.
-    * Same filters and decimal casts as [[gsSide]] (grouping by arm
-    * then filtering one arm ≡ filtering then grouping — decimal sums
-    * are exact and order-independent), so the artifact's decide can
-    * never drift from the row-input [[groupSequential]].
+  /** The (segment?, look, arm) [[exactMoments]] census of a traffic
+    * frame — what [[PreparedGroupSequential]] accumulates, saved as
+    * `n`/`s`/`ss`. Same filters as [[gsSide]] (grouping by arm then
+    * filtering one arm ≡ filtering then grouping — decimal sums are
+    * exact and order-independent), so the artifact's decide can never
+    * drift from the row-input [[groupSequential]].
     */
   private def gsCensus(df: DataFrame, group: Option[String], arm: Column,
                        value: Column, look: Column, looks: Int,
                        armA: String, armB: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d = graft.util.Portable.dec(value)
-    val keys = group.map(g => Seq(col(g).as("grp"))).getOrElse(Nil) ++
-      Seq(look.cast("long").as("look"), arm.as("arm"))
-    df.filter(value.isNotNull && look.isNotNull &&
-        look.cast("long").between(1L, looks.toLong) &&
-        arm.isin(armA, armB) &&
-        group.map(g => col(g).isNotNull).getOrElse(lit(true)))
-      .groupBy(keys: _*)
-      .agg(count(lit(1)).as("n"),
-        sum(d).cast(DecimalType(38, 2)).as("s"),
-        sum(d * d).cast(DecimalType(38, 4)).as("ss"))
+    val keys = group.map(g => "grp" -> col(g)).toSeq ++
+      Seq("look" -> look.cast("long"), "arm" -> arm)
+    exactMoments(df.filter(look.cast("long").between(1L, looks.toLong) &&
+        arm.isin(armA, armB)), value, keys, "c")
+      .select(keys.map(k => col(k._1)) ++ Seq(col("n_c").as("n"),
+        col("__s_c").as("s"), col("__ss_c").as("ss")): _*)
   }
 
   /** Incrementally-maintained group-sequential monitor state (r17 —
@@ -2866,8 +2836,8 @@ object Ops {
     def decide(): DataFrame = {
       def side(a: String, suf: String): DataFrame =
         census.filter(col("arm") === a).select(
-          keyNames.map(col) ++ Seq(col("look"), col("n").as(s"__in_$suf"),
-            col("s").as(s"__is_$suf"), col("ss").as(s"__iss_$suf")): _*)
+          keyNames.map(col) ++ Seq(col("look"), col("n").as(s"n_$suf"),
+            col("s").as(s"__s_$suf"), col("ss").as(s"__ss_$suf")): _*)
       val grid = group match {
         case Some(_) => census.select(col("grp")).distinct()
           .withColumn("look", explode(sequence(lit(1L), lit(looks.toLong))))
@@ -3052,7 +3022,6 @@ object Ops {
                                rankValue: Column,
                                allowWideCensus: Boolean = false,
                                maxExactCensusRows: Long = MaxExactCensusRows): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     // r17 optimization round (guide §2.4 — remove redundant passes):
     // ONE combined census per side, materialized once and fanned to
     // the three shared finisher tails, instead of six separate row
@@ -3065,13 +3034,7 @@ object Ops {
       governanceCombinedCensus(df, group, meanValue,
         rankValue.cast("long"), rankValue))
     val caC = cen(a); val cbC = cen(b)
-    def tag(m: DataFrame, suf: String) = m.select(col("grp"),
-      col("n").as(s"n_$suf"),
-      col("s").cast(DecimalType(38, 2)).as(s"__s_$suf"),
-      col("ss").cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    val welch = welchTFinishFromSides(
-      tag(governanceMomentsOf(caC), "a").join(tag(governanceMomentsOf(cbC), "b"),
-        Seq("grp"), "full_outer"))
+    val welch = governanceWelch(governanceMomentsOf(caC), governanceMomentsOf(cbC))
     val rankMerged = governanceRanksOf(caC)
       .select(col("grp"), col("v"), col("c").as("ca"))
       .join(governanceRanksOf(cbC).select(col("grp"), col("v"), col("c").as("cb")),
@@ -3155,16 +3118,14 @@ object Ops {
   private[graft] def governanceCombinedCensus(df: DataFrame, group: String,
                                               meanValue: Column, vCol: Column,
                                               rankValue: Column): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d = graft.util.Portable.dec(meanValue)
+    // not exactMoments: a row with a null meanValue still counts in c
     df.filter(col(group).isNotNull &&
         (meanValue.isNotNull || rankValue.isNotNull))
       .groupBy(col(group).as("grp"),
         when(rankValue.isNotNull, vCol).as("v"))
       .agg(count(when(rankValue.isNotNull, lit(1))).as("c"),
-        count(when(meanValue.isNotNull, lit(1))).as("n"),
-        sum(d).cast(DecimalType(38, 2)).as("s"),
-        sum(d * d).cast(DecimalType(38, 4)).as("ss"))
+        count(when(meanValue.isNotNull, lit(1))).as("n") +:
+          momentSums(meanValue, "s", "ss"): _*)
   }
 
   /** The per-segment Welch moments of a combined census — bit-equal
@@ -3188,6 +3149,18 @@ object Ops {
     */
   private[graft] def governanceRanksOf(census: DataFrame): DataFrame =
     census.filter(col("v").isNotNull).select(col("grp"), col("v"), col("c"))
+
+  /** Per-segment Welch t between two (grp, n, s, ss) moment frames,
+    * `a` as side A — the battery's Welch member.
+    */
+  private def governanceWelch(a: DataFrame, b: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    def tag(m: DataFrame, suf: String) = m.select(col("grp"),
+      col("n").as(s"n_$suf"),
+      col("s").cast(DecimalType(38, 2)).as(s"__s_$suf"),
+      col("ss").cast(DecimalType(38, 4)).as(s"__ss_$suf"))
+    welchTFinish(mergeSides(tag(a, "a"), tag(b, "b"), Seq("grp")), Seq("grp"))
+  }
 
   /** Incrementally-maintained governance census pair (r17 — VERDICT
     * r16 missing #1/top-next: [[graft.streaming.Streams
@@ -3282,7 +3255,7 @@ object Ops {
   /** The full governance battery (Welch + MWU + KS per segment,
     * portable p-values, one BH + Holm budget — identical expressions
     * to [[governanceBatteryByGroup]] by the shared
-    * [[governanceBatteryFinish]]/[[welchTFinishFromSides]]/
+    * [[governanceBatteryFinish]]/[[welchTFinish]]/
     * [[mannWhitneyUFinishFromCensus]]/[[ksStatisticFinishFromCensus]]
     * tails) decided between two PINNED census artifacts: `baseline`
     * as side A, `current` as side B. With `current` built by
@@ -3299,20 +3272,13 @@ object Ops {
                                     current: PreparedGovernance,
                                     allowWideCensus: Boolean = false,
                                     maxExactCensusRows: Long = MaxExactCensusRows): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(baseline.group == current.group,
       s"governanceBatteryFromPrepared: segment columns differ " +
         s"('${baseline.group}' vs '${current.group}')")
     require(baseline.bucketWidth == current.bucketWidth,
       s"governanceBatteryFromPrepared: bucket widths differ " +
         s"(${baseline.bucketWidth} vs ${current.bucketWidth})")
-    def tag(m: DataFrame, suf: String) = m.select(col("grp"),
-      col("n").as(s"n_$suf"),
-      col("s").cast(DecimalType(38, 2)).as(s"__s_$suf"),
-      col("ss").cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    val welch = welchTFinishFromSides(
-      tag(baseline.moments, "a").join(tag(current.moments, "b"),
-        Seq("grp"), "full_outer"))
+    val welch = governanceWelch(baseline.moments, current.moments)
     val rankMerged = baseline.ranks.select(col("grp"), col("v"), col("c").as("ca"))
       .join(current.ranks.select(col("grp"), col("v"), col("c").as("cb")),
         Seq("grp", "v"), "full_outer")
@@ -3337,9 +3303,7 @@ object Ops {
     * always-valid-inference construction of Robbins' power-one tests
     * with a normal mixing prior N(0, τ²) over the effect).
     *
-    * Per side the q162 exact decimal moments (n, Σx, Σx² over the
-    * [[graft.util.Portable]] view — order-free under any
-    * partitioning); with Δ = mean_b − mean_a and
+    * Per side the [[exactMoments]] census; with Δ = mean_b − mean_a and
     * V = s²_a/n_a + s²_b/n_b the mixture likelihood ratio is
     * `Λ = √(V/(V+τ²)) · exp(Δ²·τ² / (2·V·(V+τ²)))`, computed and
     * emitted in LOG space — `ln Λ = ½·ln(V/(V+τ²)) + Δ²·τ²/(2V(V+τ²))`
@@ -3362,27 +3326,10 @@ object Ops {
     */
   def msprt(a: DataFrame, b: DataFrame, value: Column,
             tau2: Double, lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"msprt: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0, s"msprt: lnAlpha ($lnAlpha) must be negative (ln of α < 1)")
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull).agg(
-        count(lit(1)).as(s"n_$suf"),
-        sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-        sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    msprtFinish(side(a, "a").crossJoin(broadcast(side(b, "b"))), tau2, lnAlpha)
+    msprtFinishCols(momentSides(a, b, value, Nil), tau2, lnAlpha, keyCols = Nil)
   }
-
-  /** The shared mSPRT finishing tree over one crossed 1-row moment
-    * frame (n_a, __s_a, __ss_a, n_b, __s_b, __ss_b) — both the
-    * row-input [[msprt]] and the artifact-input [[msprtFromMoments]]
-    * end here, so the two are value-identical by shared code.
-    */
-  private def msprtFinish(sides: DataFrame, tau2: Double,
-                          lnAlpha: Double): DataFrame =
-    msprtFinishCols(sides, tau2, lnAlpha, keyCols = Nil)
 
   /** The per-row mSPRT likelihood-ratio finishing expressions over a
     * frame carrying (n_a, __s_a, __ss_a, n_b, __s_b, __ss_b), with
@@ -3396,20 +3343,16 @@ object Ops {
   private def msprtFinishCols(sides: DataFrame, tau2: Double,
                               lnAlpha: Double,
                               keyCols: Seq[String]): DataFrame = {
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    val vv = v("a") / nD("a") + v("b") / nD("b")
-    val delta = mean("b") - mean("a")
+    val (ra, rb) = (MomentReadout("a"), MomentReadout("b"))
+    val vv = ra.vn + rb.vn
+    val delta = rb.mean - ra.mean
     val ok = col("n_a") >= 2 && col("n_b") >= 2
     val lnTerm = round(log(vv / (vv + lit(tau2))), 12)
     val lnLambda = lit(0.5) * lnTerm +
       delta * delta * lit(tau2) / (lit(2.0) * vv * (vv + lit(tau2)))
     sides
-      .withColumn("mean_a", when(col("n_a") > 0, round(mean("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(mean("b"), 6)))
+      .withColumn("mean_a", when(col("n_a") > 0, round(ra.mean, 6)))
+      .withColumn("mean_b", when(col("n_b") > 0, round(rb.mean, 6)))
       .withColumn("delta", when(col("n_a") > 0 && col("n_b") > 0,
         round(delta, 6)))
       .withColumn("ln_lambda", when(ok && vv > 0.0, round(lnLambda, 6)))
@@ -3446,19 +3389,15 @@ object Ops {
   private def avciFinishCols(sides: DataFrame, tau2: Double,
                              lnAlpha: Double,
                              keyCols: Seq[String]): DataFrame = {
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    val vv = v("a") / nD("a") + v("b") / nD("b")
-    val delta = mean("b") - mean("a")
+    val (ra, rb) = (MomentReadout("a"), MomentReadout("b"))
+    val vv = ra.vn + rb.vn
+    val delta = rb.mean - ra.mean
     val ok = col("n_a") >= 2 && col("n_b") >= 2
     val radius = sqrt(vv * (vv + lit(tau2)) / lit(tau2) *
       (round(log((vv + lit(tau2)) / vv), 12) - lit(2.0) * lit(lnAlpha)))
     sides
-      .withColumn("mean_a", when(col("n_a") > 0, round(mean("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(mean("b"), 6)))
+      .withColumn("mean_a", when(col("n_a") > 0, round(ra.mean, 6)))
+      .withColumn("mean_b", when(col("n_b") > 0, round(rb.mean, 6)))
       .withColumn("delta", when(col("n_a") > 0 && col("n_b") > 0,
         round(delta, 6)))
       .withColumn("radius", when(ok && vv > 0.0, round(radius, 6)))
@@ -3475,18 +3414,9 @@ object Ops {
   def alwaysValidCi(a: DataFrame, b: DataFrame, value: Column,
                     tau2: Double,
                     lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"alwaysValidCi: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0, s"alwaysValidCi: lnAlpha ($lnAlpha) must be negative")
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull).agg(
-        count(lit(1)).as(s"n_$suf"),
-        sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-        sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    avciFinishCols(side(a, "a").crossJoin(broadcast(side(b, "b"))),
-      tau2, lnAlpha, keyCols = Nil)
+    avciFinishCols(momentSides(a, b, value, Nil), tau2, lnAlpha, keyCols = Nil)
   }
 
   /** Per-segment always-valid CI — [[alwaysValidCi]] keyed the way
@@ -3496,21 +3426,9 @@ object Ops {
   def alwaysValidCiByGroup(a: DataFrame, b: DataFrame, group: String,
                            value: Column, tau2: Double,
                            lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"alwaysValidCiByGroup: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0, s"alwaysValidCiByGroup: lnAlpha ($lnAlpha) must be negative")
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull && col(group).isNotNull)
-        .groupBy(col(group).as("grp")).agg(
-          count(lit(1)).as(s"n_$suf"),
-          sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-          sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    avciFinishCols(
-      side(a, "a").join(side(b, "b"), Seq("grp"), "full_outer")
-        .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
-        .withColumn("n_b", coalesce(col("n_b"), lit(0L))),
+    avciFinishCols(momentSides(a, b, value, Seq("grp" -> col(group))),
       tau2, lnAlpha, keyCols = Seq("grp"))
   }
 
@@ -3531,16 +3449,9 @@ object Ops {
   def msprtFromMoments(m: PreparedMoments, armA: String, armB: String,
                        tau2: Double,
                        lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"msprtFromMoments: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0, s"msprtFromMoments: lnAlpha ($lnAlpha) must be negative")
-    def side(arm: String, suf: String): DataFrame =
-      m.moments.filter(col(m.groupCol).cast("string") === arm).agg(
-        coalesce(sum(col("n")), lit(0L)).as(s"n_$suf"),
-        sum(col("__sx")).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-        sum(col("__sxx")).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    msprtFinish(side(armA, "a").crossJoin(broadcast(side(armB, "b"))),
-      tau2, lnAlpha)
+    msprtFinishCols(artifactArms(m, armA, armB), tau2, lnAlpha, keyCols = Nil)
   }
 
   /** [[alwaysValidCi]] served from a [[PreparedMoments]] artifact —
@@ -3554,23 +3465,37 @@ object Ops {
   def alwaysValidCiFromMoments(m: PreparedMoments, armA: String, armB: String,
                                tau2: Double,
                                lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"alwaysValidCiFromMoments: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0, s"alwaysValidCiFromMoments: lnAlpha ($lnAlpha) must be negative")
+    avciFinishCols(artifactArms(m, armA, armB), tau2, lnAlpha, keyCols = Nil)
+  }
+
+  /** A [[PreparedMoments]] artifact's x moments per group, named the
+    * way [[exactMoments]] names them under `suf` — the one reader of
+    * the artifact's saved `n`/`__sx`/`__sxx` columns.
+    */
+  private def artifactMoments(m: PreparedMoments, suf: String): DataFrame =
+    m.moments.select(col(m.groupCol), col("n").as(s"n_$suf"),
+      col("__sx").as(s"__s_$suf"), col("__sxx").as(s"__ss_$suf"))
+
+  /** Arms `armA` and `armB` of an artifact as crossed 1-row sides `a`
+    * and `b`; an arm absent from the artifact reports n = 0.
+    */
+  private def artifactArms(m: PreparedMoments, armA: String, armB: String): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
     def side(arm: String, suf: String): DataFrame =
-      m.moments.filter(col(m.groupCol).cast("string") === arm).agg(
-        coalesce(sum(col("n")), lit(0L)).as(s"n_$suf"),
-        sum(col("__sx")).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-        sum(col("__sxx")).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    avciFinishCols(side(armA, "a").crossJoin(broadcast(side(armB, "b"))),
-      tau2, lnAlpha, keyCols = Nil)
+      artifactMoments(m, suf).filter(col(m.groupCol).cast("string") === arm).agg(
+        coalesce(sum(col(s"n_$suf")), lit(0L)).as(s"n_$suf"),
+        sum(col(s"__s_$suf")).cast(DecimalType(38, 2)).as(s"__s_$suf"),
+        sum(col(s"__ss_$suf")).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
+    mergeSides(side(armA, "a"), side(armB, "b"), Nil)
   }
 
   /** Per-segment mSPRT (r15 — [[msprt]] keyed by a segment, the
     * always-valid member of the per-segment experimentation family
     * q169/q188 established: a monitor that only watches the whole
     * experiment misses the cohort where the effect (or the harm)
-    * concentrates): per (segment, side) the exact decimal moments, a
+    * concentrates): per (segment, side) the [[exactMoments]] census, a
     * keyed FULL OUTER merge (one-sided segments report with the
     * absent side's count 0 and null statistics — the q188 shape),
     * the same ln-space likelihood-ratio tree per segment. Returns
@@ -3579,21 +3504,9 @@ object Ops {
   def msprtByGroup(a: DataFrame, b: DataFrame, group: String, value: Column,
                    tau2: Double,
                    lnAlpha: Double = -2.995732273553991): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(tau2 > 0.0, s"msprtByGroup: tau2 ($tau2) must be positive")
     require(lnAlpha < 0.0, s"msprtByGroup: lnAlpha ($lnAlpha) must be negative")
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull && col(group).isNotNull)
-        .groupBy(col(group).as("grp")).agg(
-          count(lit(1)).as(s"n_$suf"),
-          sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-          sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    msprtFinishCols(
-      side(a, "a").join(side(b, "b"), Seq("grp"), "full_outer")
-        .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
-        .withColumn("n_b", coalesce(col("n_b"), lit(0L))),
+    msprtFinishCols(momentSides(a, b, value, Seq("grp" -> col(group))),
       tau2, lnAlpha, keyCols = Seq("grp"))
   }
 
@@ -3604,8 +3517,8 @@ object Ops {
     * per-stratum means by the POOLED stratum shares removes the
     * between-stratum variance component — the standard
     * post-stratified ATE every experimentation platform ships next
-    * to CUPED). Per (arm, stratum) ONE map-combinable aggregate of
-    * the q162 exact decimal moments; strata present in BOTH arms
+    * to CUPED). Per (arm, stratum) the [[exactMoments]] census;
+    * strata present in BOTH arms
     * join keyed (one-sided strata are EXCLUDED from the estimator
     * and COUNTED — `strata_a_only`/`strata_b_only` report, the
     * observable-degradation rule), pooled weights
@@ -3626,42 +3539,40 @@ object Ops {
     * cost tracks the stratum domain, never the corpus.
     */
   def postStratifiedZ(a: DataFrame, b: DataFrame, stratum: String,
-                      value: Column): DataFrame = {
+                      value: Column): DataFrame =
+    postStratifiedZOn(a, b, stratum, value, Nil)
+
+  /** The body of [[postStratifiedZ]] and [[postStratifiedZByGroup]]:
+    * (keys…, stratum)-keyed moment sides, the pooled weights and term
+    * sums partitioned by `keys`, one row per key.
+    */
+  private def postStratifiedZOn(a: DataFrame, b: DataFrame, stratum: String,
+                                value: Column,
+                                keys: Seq[(String, Column)]): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull && col(stratum).isNotNull)
-        .groupBy(col(stratum).as("__s")).agg(
-          count(lit(1)).as(s"n_$suf"),
-          sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-          sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    val joined = side(a, "a").join(side(b, "b"), Seq("__s"), "full_outer")
-    val both = col("n_a").isNotNull && col("n_b").isNotNull
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    val wAll = Window.partitionBy()
+    val keyCols = keys.map(k => col(k._1))
+    val joined = momentSides(a, b, value, keys :+ ("__s" -> col(stratum)))
+    val both = col("n_a") > 0 && col("n_b") > 0
+    val (ra, rb) = (MomentReadout("a"), MomentReadout("b"))
     // pooled weight over COMMON strata, off the joined frame itself
-    val nCommon = sum(when(both, col("n_a") + col("n_b"))).over(wAll)
+    val nCommon = sum(when(both, col("n_a") + col("n_b")))
+      .over(Window.partitionBy(keyCols: _*))
     val w = (col("n_a") + col("n_b")).cast("double") / nCommon.cast("double")
     val d3812 = DecimalType(38, 12)
     val terms = joined
       .withColumn("__w", when(both, w))
-      .withColumn("__ma_t", when(both, round(col("__w") * mean("a"), 12)))
-      .withColumn("__mb_t", when(both, round(col("__w") * mean("b"), 12)))
+      .withColumn("__ma_t", when(both, round(col("__w") * ra.mean, 12)))
+      .withColumn("__mb_t", when(both, round(col("__w") * rb.mean, 12)))
       .withColumn("__va_t", when(both && col("n_a") >= 2,
-        round(col("__w") * col("__w") * v("a") / nD("a"), 12)))
+        round(col("__w") * col("__w") * ra.v / ra.n, 12)))
       .withColumn("__vb_t", when(both && col("n_b") >= 2,
-        round(col("__w") * col("__w") * v("b") / nD("b"), 12)))
-    val agg = terms.agg(
+        round(col("__w") * col("__w") * rb.v / rb.n, 12)))
+    val agg = terms.groupBy(keyCols: _*).agg(
       sum(when(both, col("n_a"))).as("n_a"),
       sum(when(both, col("n_b"))).as("n_b"),
       count(when(both, lit(1))).as("n_strata"),
-      count(when(col("n_b").isNull, lit(1))).as("strata_a_only"),
-      count(when(col("n_a").isNull, lit(1))).as("strata_b_only"),
+      count(when(col("n_b") === 0, lit(1))).as("strata_a_only"),
+      count(when(col("n_a") === 0, lit(1))).as("strata_b_only"),
       sum(col("__ma_t").cast(d3812)).as("__ma"),
       sum(col("__mb_t").cast(d3812)).as("__mb"),
       // a single under-2 stratum nulls the whole variance sum: a
@@ -3684,11 +3595,11 @@ object Ops {
       .withColumn("z", when(okVar && se2 > 0.0,
         round((col("__mb").cast("double") - col("__ma").cast("double")) /
           sqrt(se2), 6)))
-      .select(coalesce(col("n_a"), lit(0L)).as("n_a"),
+      .select(keyCols ++ Seq(coalesce(col("n_a"), lit(0L)).as("n_a"),
         coalesce(col("n_b"), lit(0L)).as("n_b"), col("n_strata"),
         col("strata_a_only"), col("strata_b_only"),
         col("mean_a_post"), col("mean_b_post"), col("diff"), col("se"),
-        col("z"))
+        col("z")): _*)
   }
 
   /** Per-segment post-stratified z (r16 wave 6 — [[postStratifiedZ]]
@@ -3711,70 +3622,11 @@ object Ops {
     * segment × stratum domain, never the corpus.
     */
   def postStratifiedZByGroup(a: DataFrame, b: DataFrame, group: String,
-                             stratum: String, value: Column): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(value.isNotNull && col(stratum).isNotNull &&
-          col(group).isNotNull)
-        .groupBy(col(group).as("grp"), col(stratum).as("__s")).agg(
-          count(lit(1)).as(s"n_$suf"),
-          sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-          sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    val joined = side(a, "a").join(side(b, "b"), Seq("grp", "__s"), "full_outer")
-    val both = col("n_a").isNotNull && col("n_b").isNotNull
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    val wSeg = Window.partitionBy(col("grp"))
-    val nCommon = sum(when(both, col("n_a") + col("n_b"))).over(wSeg)
-    val w = (col("n_a") + col("n_b")).cast("double") / nCommon.cast("double")
-    val d3812 = DecimalType(38, 12)
-    val terms = joined
-      .withColumn("__w", when(both, w))
-      .withColumn("__ma_t", when(both, round(col("__w") * mean("a"), 12)))
-      .withColumn("__mb_t", when(both, round(col("__w") * mean("b"), 12)))
-      .withColumn("__va_t", when(both && col("n_a") >= 2,
-        round(col("__w") * col("__w") * v("a") / nD("a"), 12)))
-      .withColumn("__vb_t", when(both && col("n_b") >= 2,
-        round(col("__w") * col("__w") * v("b") / nD("b"), 12)))
-    val agg = terms.groupBy(col("grp")).agg(
-      sum(when(both, col("n_a"))).as("n_a"),
-      sum(when(both, col("n_b"))).as("n_b"),
-      count(when(both, lit(1))).as("n_strata"),
-      count(when(col("n_b").isNull, lit(1))).as("strata_a_only"),
-      count(when(col("n_a").isNull, lit(1))).as("strata_b_only"),
-      sum(col("__ma_t").cast(d3812)).as("__ma"),
-      sum(col("__mb_t").cast(d3812)).as("__mb"),
-      max(when(both && (col("n_a") < 2 || col("n_b") < 2), lit(1))
-        .otherwise(lit(0))).as("__degenerate"),
-      sum(col("__va_t").cast(d3812)).as("__va"),
-      sum(col("__vb_t").cast(d3812)).as("__vb"))
-    val se2 = col("__va").cast("double") + col("__vb").cast("double")
-    val okVar = col("__degenerate") === 0 && col("n_strata") > 0
-    agg
-      .withColumn("mean_a_post",
-        when(col("n_strata") > 0, round(col("__ma").cast("double"), 6)))
-      .withColumn("mean_b_post",
-        when(col("n_strata") > 0, round(col("__mb").cast("double"), 6)))
-      .withColumn("diff", when(col("n_strata") > 0,
-        round(col("__mb").cast("double") - col("__ma").cast("double"), 6)))
-      .withColumn("se", when(okVar && se2 > 0.0, round(sqrt(se2), 6)))
-      .withColumn("z", when(okVar && se2 > 0.0,
-        round((col("__mb").cast("double") - col("__ma").cast("double")) /
-          sqrt(se2), 6)))
-      .select(col("grp"), coalesce(col("n_a"), lit(0L)).as("n_a"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"), col("n_strata"),
-        col("strata_a_only"), col("strata_b_only"),
-        col("mean_a_post"), col("mean_b_post"), col("diff"), col("se"),
-        col("z"))
-  }
+                             stratum: String, value: Column): DataFrame =
+    postStratifiedZOn(a, b, stratum, value, Seq("grp" -> col(group)))
 
   /** The shared one-way-ANOVA finisher over a per-(keys…, group)
-    * moment frame (n, __s DECIMAL(38,2), __ss DECIMAL(38,4)): the
+    * [[exactMoments]] frame under suffix `g`: the
     * between/within sums of squares decompose into per-group terms
     * `S_g²/n_g` and `SS_g − S_g²/n_g` — each an O(group) double,
     * rounded at 12 and summed as DECIMAL(38,12) (the q155 order-free
@@ -3786,14 +3638,14 @@ object Ops {
   private def anovaFinish(moments: DataFrame, keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val d3812 = DecimalType(38, 12)
-    def sD(c: String) = col(c).cast("double")
+    val g = MomentReadout("g")
     val terms = moments
-      .withColumn("__tb", round(sD("__s") * sD("__s") / sD("n"), 12))
-      .withColumn("__tw", round(sD("__ss") - sD("__s") * sD("__s") / sD("n"), 12))
+      .withColumn("__tb", round(g.sx * g.sx / g.n, 12))
+      .withColumn("__tw", round(g.ssd, 12))
     val agg = terms.groupBy(keys.map(col): _*).agg(
-      sum(col("n")).as("n_total"),
+      sum(col("n_g")).as("n_total"),
       count(lit(1)).as("k_groups"),
-      sum(col("__s")).cast(DecimalType(38, 2)).as("__st"),
+      sum(col("__s_g")).cast(DecimalType(38, 2)).as("__st"),
       sum(col("__tb").cast(d3812)).as("__sb"),
       sum(col("__tw").cast(d3812)).as("__sw"))
     val nD = col("n_total").cast("double")
@@ -3819,21 +3671,14 @@ object Ops {
   }
 
   private def anovaMoments(df: DataFrame, keys: Seq[String],
-                           value: Column): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d = graft.util.Portable.dec(value)
-    df.filter(value.isNotNull && keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*).agg(
-        count(lit(1)).as("n"),
-        sum(d).cast(DecimalType(38, 2)).as("__s"),
-        sum(d * d).cast(DecimalType(38, 4)).as("__ss"))
-  }
+                           value: Column): DataFrame =
+    exactMoments(df, value, keys.map(k => k -> col(k)), "g")
 
   /** One-way ANOVA F (r15 — the PARAMETRIC sibling of
     * [[kruskalWallis]] and the k-group member of the q162 moment
     * family: "do any of the k groups' MEANS differ", the first test
     * a k-arm experiment or a segmentation review runs): per group
-    * ONE map-combinable aggregate of exact decimal moments, then the
+    * the [[exactMoments]] census, then the
     * classic decomposition SSbetween = Σ S_g²/n_g − S²/N and
     * SSwithin = Σ (SS_g − S_g²/n_g) with the per-group terms
     * round-12 + DECIMAL(38,12)-summed (order-free — a raw double sum
@@ -3874,9 +3719,7 @@ object Ops {
     * decimal sums, shared finisher — spec-pinned).
     */
   def anovaFromMoments(m: PreparedMoments): DataFrame =
-    anovaFinish(
-      m.moments.select(col("n"), col("__sx").as("__s"), col("__sxx").as("__ss"))
-        .withColumn("__all", lit(1)),
+    anovaFinish(artifactMoments(m, "g").withColumn("__all", lit(1)),
       Seq("__all")).drop("__all")
 
   /** [[pairwiseWelch]] served from a [[PreparedMoments]] artifact
@@ -3884,10 +3727,7 @@ object Ops {
     * same identity contract).
     */
   def pairwiseWelchFromMoments(m: PreparedMoments): DataFrame =
-    pairwiseWelchFinish(
-      m.moments.select(col(m.groupCol), col("n"),
-        col("__sx").as("__s"), col("__sxx").as("__ss")),
-      m.groupCol)
+    pairwiseWelchFinish(artifactMoments(m, "g"), m.groupCol)
 
   /** Pairwise Welch t post-hoc (r15 — the step AFTER [[anovaF]] or
     * [[kruskalWallis]] flags "something differs": WHICH pairs —
@@ -3907,40 +3747,17 @@ object Ops {
   def pairwiseWelch(df: DataFrame, group: String, value: Column): DataFrame =
     pairwiseWelchFinish(anovaMoments(df, Seq(group), value), group)
 
-  /** The shared pairwise-Welch finisher over a per-group moment
-    * census (group, n, __s, __ss) — both the row-input
+  /** The shared pairwise-Welch finisher over a per-group
+    * [[exactMoments]] census under suffix `g` — both the row-input
     * [[pairwiseWelch]] and the artifact-input
-    * [[pairwiseWelchFromMoments]] end here (value-identical by
-    * shared code).
+    * [[pairwiseWelchFromMoments]] end here, and each pair runs the
+    * [[welchT]] tree.
     */
   private def pairwiseWelchFinish(m: DataFrame, group: String): DataFrame = {
-    val a = m.select(col(group).cast("string").as("g_a"), col("n").as("n_a"),
-      col("__s").as("__s_a"), col("__ss").as("__ss_a"))
-    val b = m.select(col(group).cast("string").as("g_b"), col("n").as("n_b"),
-      col("__s").as("__s_b"), col("__ss").as("__ss_b"))
-    val pairs = a.join(b, col("g_a") < col("g_b"))
-    val wAll = Window.partitionBy()
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    def vn(s: String) = v(s) / nD(s)
-    val se2 = vn("a") + vn("b")
-    val ok = col("n_a") >= 2 && col("n_b") >= 2
-    val df_ = se2 * se2 /
-      (vn("a") * vn("a") / (nD("a") - lit(1.0)) +
-        vn("b") * vn("b") / (nD("b") - lit(1.0)))
-    pairs
-      .withColumn("m_comparisons", count(lit(1)).over(wAll))
-      .withColumn("mean_a", when(col("n_a") > 0, round(mean("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(mean("b"), 6)))
-      .withColumn("t", when(ok && se2 > 0.0,
-        round((mean("a") - mean("b")) / sqrt(se2), 6)))
-      .withColumn("df", when(ok && se2 > 0.0, round(df_, 6)))
-      .select(col("g_a"), col("g_b"), col("n_a"), col("n_b"),
-        col("mean_a"), col("mean_b"), col("t"), col("df"),
-        col("m_comparisons"))
+    def side(s: String) = m.select(col(group).cast("string").as(s"g_$s"),
+      col("n_g").as(s"n_$s"), col("__s_g").as(s"__s_$s"), col("__ss_g").as(s"__ss_$s"))
+    welchTFinish(side("a").join(side("b"), col("g_a") < col("g_b")), Seq("g_a", "g_b"))
+      .withColumn("m_comparisons", count(lit(1)).over(Window.partitionBy()))
   }
 
   /** One-pass Pearson correlation matrix (r15 — the profiling
@@ -4656,7 +4473,7 @@ object Ops {
     * with the 1-row bounds crossed on (the q181 scalar-broadcast
     * shape; aggregating rows — not census×count — keeps every
     * product inside the q162 decimal widths) and the shared
-    * [[welchTFinishFromSides]]
+    * [[welchTFinish]]
     * tree. The clip bounds are reported as EXACT integer cents (the
     * q161 BIGINT discipline — no DECIMAL output column). Returns ONE
     * row: (n_a, n_b, lo_a_cents, hi_a_cents, lo_b_cents, hi_b_cents,
@@ -4702,12 +4519,9 @@ object Ops {
     // materialize the 1-row merged moment frame once: the shared
     // Welch finisher drops the bound columns, so both consumers read
     // this single row instead of re-censusing the corpus
-    val merged = lineageBreaker(None)(
-      side(a, "a").crossJoin(broadcast(side(b, "b")))
-        .withColumn("grp", lit("all")))
+    val merged = lineageBreaker(None)(mergeSides(side(a, "a"), side(b, "b"), Nil))
     def cents(c: Column): Column = (c * 100).cast("long")
-    welchTFinishFromSides(merged)
-      .drop("grp")
+    welchTFinish(merged, Nil)
       .crossJoin(broadcast(merged.select(
         cents(col("lo_a")).as("lo_a_cents"), cents(col("hi_a")).as("hi_a_cents"),
         cents(col("lo_b")).as("lo_b_cents"), cents(col("hi_b")).as("hi_b_cents"))))
@@ -5419,57 +5233,37 @@ object Ops {
   /** Per-group Welch t (r13 — [[welchT]] keyed by a segment column,
     * completing the per-group experiment family beside
     * [[ksStatisticByGroup]]/[[mannWhitneyUByGroup]]: the continuous-
-    * metric mean-shift readout per cohort): per side one grouped
-    * exact-decimal moment aggregate, a keyed full-outer merge (a
+    * metric mean-shift readout per cohort): per side the grouped
+    * [[exactMoments]] census, a keyed full-outer merge (a
     * group present on only one side still reports, counts saying
     * which side is empty), and the same fixed t / Welch–Satterthwaite
     * df tree per group. Returns one row per group:
     * (grp, n_a, n_b, mean_a, mean_b, t, df).
     */
   def welchTByGroup(a: DataFrame, b: DataFrame, group: String,
-                    value: Column): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(col(group).isNotNull && value.isNotNull)
-        .groupBy(col(group).as("grp"))
-        .agg(count(lit(1)).as(s"n_$suf"),
-          sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-          sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    welchTFinishFromSides(side(a, "a").join(side(b, "b"), Seq("grp"), "full_outer"))
-  }
+                    value: Column): DataFrame =
+    welchTFinish(momentSides(a, b, value, Seq("grp" -> col(group))), Seq("grp"))
 
-  /** The shared Welch-by-group finishing tree over a keyed
-    * full-outer moment merge — (grp, n_a, __s_a, __ss_a, n_b, __s_b,
-    * __ss_b), the n columns possibly null from the outer join. The
-    * ONE place the keyed t/df expressions live (r17): the row-input
-    * [[welchTByGroup]] and the artifact-input
-    * [[governanceBatteryFromPrepared]] both end here, so the two can
-    * never silently diverge (the msprtFinishCols discipline).
+  /** The Welch t / Welch–Satterthwaite df tree over merged moment
+    * sides (n_a, __s_a, __ss_a, n_b, __s_b, __ss_b), `keyCols` leading
+    * the output — the ONE place these expressions live: [[welchT]],
+    * [[welchTByGroup]], [[pairwiseWelch]], [[winsorizedWelch]] and
+    * both governance batteries end here.
     */
-  private[graft] def welchTFinishFromSides(merged: DataFrame): DataFrame = {
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    def vn(s: String) = v(s) / nD(s)
-    val se2 = vn("a") + vn("b")
+  private def welchTFinish(sides: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val (ra, rb) = (MomentReadout("a"), MomentReadout("b"))
+    val se2 = ra.vn + rb.vn
     val ok = col("n_a") >= 2 && col("n_b") >= 2
     val df_ = se2 * se2 /
-      (vn("a") * vn("a") / (nD("a") - lit(1.0)) +
-        vn("b") * vn("b") / (nD("b") - lit(1.0)))
-    merged
-      .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
-      .withColumn("n_b", coalesce(col("n_b"), lit(0L)))
-      .withColumn("mean_a", when(col("n_a") > 0, round(mean("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(mean("b"), 6)))
+      (ra.vn * ra.vn / (ra.n - lit(1.0)) + rb.vn * rb.vn / (rb.n - lit(1.0)))
+    sides
+      .withColumn("mean_a", when(col("n_a") > 0, round(ra.mean, 6)))
+      .withColumn("mean_b", when(col("n_b") > 0, round(rb.mean, 6)))
       .withColumn("t", when(ok && se2 > 0.0,
-        round((mean("a") - mean("b")) / sqrt(se2), 6)))
+        round((ra.mean - rb.mean) / sqrt(se2), 6)))
       .withColumn("df", when(ok && se2 > 0.0, round(df_, 6)))
-      .select(col("grp"), col("n_a"), col("n_b"), col("mean_a"),
-        col("mean_b"), col("t"), col("df"))
+      .select(keyCols.map(col) ++ Seq(col("n_a"), col("n_b"), col("mean_a"),
+        col("mean_b"), col("t"), col("df")): _*)
   }
 
   /** Per-segment minimum-detectable-effect readout (r14 —
@@ -5477,8 +5271,8 @@ object Ops {
     * per-segment experimentation family (KS/MWU/PSI/Welch/KW/Spearman
     * by group): real platforms SIZE per segment — a test powered on
     * the whole only is unreadable for the cohort the launch decision
-    * actually hinges on. Same exact-decimal moments per (segment,
-    * side), a keyed full-outer merge (one-sided segments report with
+    * actually hinges on. The same [[exactMoments]] census per
+    * (segment, side), a keyed full-outer merge (one-sided segments report with
     * counts saying which side is empty), the same fixed
     * `(z_{1−α/2}+z_power)·√(s²_a/n_a + s²_b/n_b)` tree per segment,
     * round 6. Returns one row per segment:
@@ -5487,34 +5281,9 @@ object Ops {
   def mdeReadoutByGroup(a: DataFrame, b: DataFrame, group: String,
                         value: Column, zAlpha: Double = zAlpha025,
                         zPower: Double = zPower80): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(zAlpha > 0.0 && zPower >= 0.0, "mdeReadoutByGroup: z constants must be positive")
-    def side(df: DataFrame, suf: String): DataFrame = {
-      val d = graft.util.Portable.dec(value)
-      df.filter(col(group).isNotNull && value.isNotNull)
-        .groupBy(col(group).as("grp"))
-        .agg(count(lit(1)).as(s"n_$suf"),
-          sum(d).cast(DecimalType(38, 2)).as(s"__s_$suf"),
-          sum(d * d).cast(DecimalType(38, 4)).as(s"__ss_$suf"))
-    }
-    def nD(s: String) = col(s"n_$s").cast("double")
-    def sx(s: String) = col(s"__s_$s").cast("double")
-    def sxx(s: String) = col(s"__ss_$s").cast("double")
-    def mean(s: String) = sx(s) / nD(s)
-    def v(s: String) = (sxx(s) - sx(s) * sx(s) / nD(s)) / (nD(s) - lit(1.0))
-    val se2 = v("a") / nD("a") + v("b") / nD("b")
-    val ok = col("n_a") >= 2 && col("n_b") >= 2
-    val mde = (lit(zAlpha) + lit(zPower)) * sqrt(se2)
-    side(a, "a").join(side(b, "b"), Seq("grp"), "full_outer")
-      .withColumn("n_a", coalesce(col("n_a"), lit(0L)))
-      .withColumn("n_b", coalesce(col("n_b"), lit(0L)))
-      .withColumn("mean_a", when(col("n_a") > 0, round(mean("a"), 6)))
-      .withColumn("mean_b", when(col("n_b") > 0, round(mean("b"), 6)))
-      .withColumn("mde_abs", when(ok && se2 > 0.0, round(mde, 6)))
-      .withColumn("mde_rel", when(ok && se2 > 0.0 && mean("a") =!= 0.0,
-        round(mde / mean("a"), 6)))
-      .select(col("grp"), col("n_a"), col("n_b"), col("mean_a"),
-        col("mean_b"), col("mde_abs"), col("mde_rel"))
+    mdeFinish(momentSides(a, b, value, Seq("grp" -> col(group))), Seq("grp"),
+      zAlpha, zPower).drop("sd_a", "sd_b")
   }
 
   /** The distinct (unit, day) census behind [[GraftDataFrameOps.rollingActives]],
